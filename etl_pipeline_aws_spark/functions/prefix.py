@@ -188,8 +188,16 @@ def disc_quantile_bounds(
     histogram.  Verified value-identical to the ``percentile_disc``
     spelling (and the DuckDB ``quantile_disc`` oracle twins) on all
     fixture SFs for its adopters.  Callers broadcast the result.
+
+    NULLs of ``value_col`` are dropped first, as ``percentile_disc``
+    ignores them: counted, they would inflate the total ``n`` and shift
+    every pick.
     """
-    hist = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("cnt"))
+    hist = (
+        df.filter(F.col(value_col).isNotNull())
+        .groupBy(value_col)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
     annotated, totals = ranked_prefix_sum(
         hist, [F.col(value_col)], ["cnt"], n_ranges
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.functions.fixpoint import fixpoint
 from etl_pipeline_aws_spark.registry import query
 
 SEQ_LEN = 512  # tokens per packed training sequence
@@ -1157,17 +1158,14 @@ def _pc1_unit(flat: "DataFrame") -> "DataFrame":
     already-checkpointed long-form matrix — the shared kernel of
     embedding_power_iteration_pc1 / embedding_pc1_explained_variance.
     Ordered folds throughout (bit-exact across engines); normalization
-    once at the end; per-round localCheckpoint keeps the plan flat."""
-    v = (
-        flat.select("dim")
-        .distinct()
-        .select(
-            "dim",
-            F.when(F.col("dim") == 0, F.lit(1.0)).otherwise(F.lit(0.0)).alias("v"),
-        )
-        .localCheckpoint()
+    once at the end; the fixpoint driver's per-round checkpoint keeps the
+    plan flat."""
+    v0 = flat.select("dim").distinct().select(
+        "dim",
+        F.when(F.col("dim") == 0, F.lit(1.0)).otherwise(F.lit(0.0)).alias("v"),
     )
-    for _ in range(_PI_ITERATIONS):
+
+    def iterate(v: "DataFrame", _: int) -> "DataFrame":
         dots = (
             flat.join(F.broadcast(v), "dim")
             .groupBy("vec_id")
@@ -1186,7 +1184,7 @@ def _pc1_unit(flat: "DataFrame") -> "DataFrame":
                 ).alias("dot")
             )
         )
-        v = (
+        return (
             flat.join(dots, "vec_id")
             .groupBy("dim")
             .agg(
@@ -1205,8 +1203,9 @@ def _pc1_unit(flat: "DataFrame") -> "DataFrame":
                     lambda acc, p: acc + p,
                 ).alias("v")
             )
-            .localCheckpoint()
         )
+
+    v = fixpoint(v0, iterate, _PI_ITERATIONS)
     norm = F.broadcast(
         v.agg(
             F.sqrt(
@@ -1253,7 +1252,8 @@ def embedding_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame
     dims-sized vector (broadcast).  The gathers are bounded by dims
     (dot) and corpus/dim (update) — the update fold is the exact-tier
     cost, replaced by compensated streaming sums at 100 TB with the
-    same plan shape.  Rounds localCheckpoint so the final plan is flat."""
+    same plan shape.  Rounds are checkpointed (functions/fixpoint.py) so
+    the final plan is flat."""
     emb = load_table(spark, sf_dir, "embeddings")
     return _pc1_unit(_pc1_flat(emb))
 
@@ -1600,9 +1600,8 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cluster, pos) reduction over a single exploded twin.
     At 100 TB with large k: centroids stay a broadcast until k·dim
     outgrows memory, then the E-step becomes the IVF-style blocked join;
-    the per-round persist/materialize keeps branched lineage from
-    re-running prior rounds (the BFS/label-propagation round
-    discipline)."""
+    the fixpoint driver checkpoints each round's assignment, so the
+    branched lineage (M-step, next E-step) never re-runs prior rounds."""
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
         "vec_id", F.transform("embedding", lambda v: v.cast("double")).alias("v")
@@ -1636,12 +1635,8 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda acc, t: acc + t,
     )
-    c = vecs.filter(F.col("vec_id") < KM_K).select(
-        F.col("vec_id").alias("cl"), F.col("v").alias("cv")
-    )
-    caches: list[DataFrame] = []
-    asg = None
-    for i in range(1, KM_ROUNDS + 1):
+    def assign(c: DataFrame) -> DataFrame:
+        """E-step: each vector's nearest centroid (cl) and its distance."""
         a = vecs.crossJoin(F.broadcast(c)).select(
             "vec_id", "cl", dist_expr.alias("dist")
         )
@@ -1651,33 +1646,33 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the broadcast cross join keeps each vec's k rows in one input
         # partition, so the partial aggregate emits ONE row per vector
         # and the exchange moves n rows, not n×k through a sort window.
-        asg = (
+        return (
             a.groupBy("vec_id")
             .agg(F.min(F.struct("dist", "cl")).alias("m"))
             .select("vec_id", F.col("m.cl").alias("cl"), F.col("m.dist").alias("dist"))
         )
-        asg = asg.persist()
-        asg.count()
-        for old in caches:
-            old.unpersist()
-        caches = [asg]
-        if i < KM_ROUNDS:
-            c = (
-                x.join(asg.select("vec_id", "cl"), "vec_id")
-                .groupBy("cl", "pos")
-                .agg(
-                    (ordered_fold("vec_id", F.col("val")) / F.count(F.lit(1))).alias(
-                        "cv1"
-                    )
-                )
-                .groupBy("cl")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "cv1"))),
-                        lambda st: st["cv1"],
-                    ).alias("cv")
-                )
+
+    def lloyd_round(asg: DataFrame, _: int) -> DataFrame:
+        """M-step from the previous assignment, then the next E-step."""
+        c = (
+            x.join(asg.select("vec_id", "cl"), "vec_id")
+            .groupBy("cl", "pos")
+            .agg((ordered_fold("vec_id", F.col("val")) / F.count(F.lit(1))).alias("cv1"))
+            .groupBy("cl")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "cv1"))),
+                    lambda st: st["cv1"],
+                ).alias("cv")
             )
+        )
+        return assign(c)
+
+    # round 1 assigns to the KM_K lowest vec_ids' vectors
+    c0 = vecs.filter(F.col("vec_id") < KM_K).select(
+        F.col("vec_id").alias("cl"), F.col("v").alias("cv")
+    )
+    asg = fixpoint(assign(c0), lloyd_round, KM_ROUNDS - 1)
     return asg.groupBy(F.col("cl").cast("long").alias("cluster")).agg(
         F.count(F.lit(1)).cast("long").alias("n_members"),
         ordered_fold("vec_id", F.col("dist")).alias("inertia"),

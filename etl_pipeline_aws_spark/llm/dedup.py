@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_aws_spark.catalog import cpu_parallel, load_table, register_views
+from etl_pipeline_aws_spark.functions.fixpoint import CHANGED, fixpoint
 from etl_pipeline_aws_spark.registry import query, rows_only_query
 
 N_MINHASH = 16
@@ -694,9 +695,9 @@ def min_label_components(pairs: DataFrame) -> DataFrame:
     dedup_cluster_keepers and pipeline_dedup_e2e.
 
     Log-bounded DataFrame joins, not driver-side graph state: each round
-    every node takes the min label among itself and its neighbors; each
-    round is EAGERLY localCheckpoint()ed, and the only driver action is
-    the 1-row convergence probe.  Rounds = graph diameter (duplicate
+    every node takes the min label among itself and its neighbors; the
+    fixpoint driver materializes each round and probes convergence with
+    one 1-row job.  Rounds = graph diameter (duplicate
     clusters are shallow — 2-3 in practice)."""
     # r11 (guide §2.3): symmetrize via one explode, not a two-branch
     # union — the union form evaluated the UPSTREAM PAIR PIPELINE once
@@ -716,28 +717,18 @@ def min_label_components(pairs: DataFrame) -> DataFrame:
         .select("e.src", "e.dst")
         .persist()
     )
-    # r12 (guide §2.4/§5, the two fixes the CC loop already measured):
-    # 1. SEED with the closed-form round-1 fold — label0 = least(node,
-    #    min neighbor) is a plain aggregation over the cached edges (no
-    #    join); pair/triple clusters then converge in ONE loop round
-    #    (the probe round) instead of two.  Fixpoint unchanged: the
-    #    monotone min-update converges to component minima under any
-    #    schedule.
-    # 2. Each round localCheckpoint(eager=True)s instead of persist():
-    #    the lazy persist was only ever materialized BY the limit(1)
-    #    convergence probe, which short-circuits — unread partitions
-    #    stayed unmaterialized and recomputed through lineage in the
-    #    NEXT round, cascading all the way back to the pair pipeline
-    #    once the previous round's cache was unpersisted (the CC loop
-    #    measured this exact trap at 7.5-9.6 s vs 6.5-7.3 s eager;
-    #    here: dedup_cluster_keepers 3.4 -> ~2.5 s at sf0.1).
+    # r12: SEED with the closed-form round-1 fold — label0 = least(node,
+    # min neighbor) is a plain aggregation over the cached edges (no
+    # join); pair/triple clusters then converge in ONE loop round (the
+    # probe round) instead of two.  Fixpoint unchanged: the monotone
+    # min-update converges to component minima under any schedule.
     labels = (
         edges.groupBy(F.col("src").alias("doc_id"))
         .agg(F.min("dst").alias("mn"))
         .select("doc_id", F.least(F.col("doc_id"), F.col("mn")).alias("label"))
-        .localCheckpoint()
     )
-    for _ in range(20):  # diameter bound; real clusters converge in 1-2
+
+    def propagate(labels: DataFrame, _: int) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy(F.col("src").alias("doc_id"))
@@ -746,19 +737,14 @@ def min_label_components(pairs: DataFrame) -> DataFrame:
         # the change flag is computed IN the label join (r9 trim: the old
         # spelling re-joined new labels against old ones purely to detect
         # convergence — one whole extra join+shuffle per round)
-        flagged = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-                (F.coalesce("nmin", "label") < F.col("label")).alias("_chg"),
-            )
-            .localCheckpoint()
+        return labels.join(neighbor_min, "doc_id", "left").select(
+            "doc_id",
+            F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
+            (F.coalesce("nmin", "label") < F.col("label")).alias(CHANGED),
         )
-        changed = flagged.filter(F.col("_chg")).limit(1).count()
-        labels = flagged.drop("_chg")
-        if changed == 0:
-            break
+
+    # diameter bound; real clusters converge in 1-2 rounds
+    labels = fixpoint(labels, propagate, 20)
     edges.unpersist()
     return labels
 

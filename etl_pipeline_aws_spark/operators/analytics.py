@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_aws_spark.catalog import load_table, register_views
 from etl_pipeline_aws_spark.functions.prefix import (
+    disc_quantile_bounds,
     ranked_ntile,
     ranked_prefix_sum,
 )
@@ -3433,8 +3434,6 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one histogram + prefix-sum boundary pass + one grouped
     count — all partial-aggregated/parallel, 10-row output."""
-    from etl_pipeline_aws_spark.functions.prefix import disc_quantile_bounds
-
     o = load_table(spark, sf_dir, "orders")
     pts = o.select(
         F.col("o_totalprice").alias("score"),
@@ -4341,9 +4340,8 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pr_curve_sql(thresholds_cte: str) -> str:
     """Shared PR-curve text; the thresholds CTE is per-dialect (DuckDB's
-    quantile_disc takes a parameterized fraction; Spark's
-    percentile_disc requires a foldable literal, so its side unrolls
-    nine aggregates and stacks them)."""
+    quantile_disc takes a parameterized fraction; the Spark side stacks
+    the nine disc_quantile_bounds picks)."""
     return f"""
 WITH pts AS (
     SELECT o_totalprice AS score,
@@ -4377,11 +4375,11 @@ _PR_CURVE_ORACLE = _pr_curve_sql("""
 """).format(idiv="//")
 # Spark thresholds ride the shared two-phase disc_quantile_bounds helper
 # (r12 — the nine percentile_disc aggregates each buffered their own
-# single-reducer value→count map; see ml_calibration_bins), registered by
-# the builder as the private 1-row view below.
+# single-reducer value→count map; see ml_calibration_bins), bound by the
+# builder as the 1-row frame argument {bounds}.
 _PR_CURVE_SPARK = _pr_curve_sql("""
     SELECT stack(9, 1, b0, 2, b1, 3, b2, 4, b3, 5, b4, 6, b5, 7, b6, 8, b7, 9, b8) AS (k, t)
-    FROM _pr_thresholds_one
+    FROM {{bounds}}
 """).format(idiv="DIV")
 
 
@@ -4409,7 +4407,13 @@ def ml_pr_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-fan shape) after a same-pass grouped quantile; output is
     9 rows at any scale."""
     register_views(spark, sf_dir)
-    return spark.sql(_PR_CURVE_SPARK)
+    scores = load_table(spark, sf_dir, "orders").select(
+        F.col("o_totalprice").alias("score")
+    )
+    return spark.sql(
+        _PR_CURVE_SPARK,
+        bounds=disc_quantile_bounds(scores, "score", _CALIB_FRACS),
+    )
 
 
 def _anomaly_ensemble_sql(idiv: str) -> str:

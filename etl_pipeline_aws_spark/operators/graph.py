@@ -10,30 +10,29 @@ Determinism discipline: ranks are kept in scaled INTEGER arithmetic
 computes bit-identical values — float PageRank sums doubles in
 engine-specific orders and can never hash-match an oracle.
 
-Fault tolerance of the per-round localCheckpoint (applies to the whole
-iterative family: PageRank / label propagation / k-core / BFS here, and
-the Lloyd rounds in llm/corpus.py): localCheckpoint() truncates lineage
-by pinning round N's blocks in EXECUTOR storage — if an executor dies
-(spot reclaim, dynamic-allocation scale-down, OOM kill), those blocks
-are gone and the truncated lineage CANNOT recompute them; the job
-restarts from round zero.  That trade is right on local[32] (zero I/O,
-one JVM, nothing to lose) and acceptable for short loops on stable
-clusters, but a 100 TB run on preemptible capacity must swap in
-reliable checkpoints: ``sparkContext.setCheckpointDir`` on durable
-storage + ``df.checkpoint()`` per round (same call shape, blocks on the
-cluster FS survive executor loss), or equivalently materialize each
-round to a bucketed table keyed on the node column — which ALSO makes
-the next round's join exchange-free, paying for its write.  The loop
-code is agnostic: only the checkpoint call changes.  See
-ARCHITECTURE.md "Iterative operators: checkpointing in cluster mode".
+Iterative loops (PageRank, label propagation, entity resolution, k-core,
+BFS, connected components and their bucketed twins) hold only their
+round logic; how a round is materialized, how convergence is probed,
+what an exhausted round budget does and when state is released are
+decided in one place, ``functions/fixpoint.py`` — which also states the
+fault-tolerance trade of its per-round ``localCheckpoint`` and the
+bucketed-table alternative.  See ARCHITECTURE.md "Iterative operators:
+checkpointing in cluster mode".
 """
 
 from __future__ import annotations
+
+import itertools
+import os
+import shutil
+from collections.abc import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_aws_spark.catalog import load_table
+from etl_pipeline_aws_spark.functions.fixpoint import CHANGED, fixpoint
 from etl_pipeline_aws_spark.registry import query, rows_only_query
 
 PR_ITERATIONS = 5
@@ -101,6 +100,39 @@ def _edge_budget(li: DataFrame) -> int:
     return EDGE_FANOUT_BOUND * li.count()
 
 
+def _round_tables(
+    spark: SparkSession, prefix: str, nb: int
+) -> Callable[[DataFrame], DataFrame]:
+    """fixpoint materializer of the bucketed-rounds operators: each
+    round's state is written as a table bucketed and sorted on ``node``
+    (``nb`` buckets, the edge tables' count, so the next round's
+    node-keyed join is exchange-free) and read back.  Rounds alternate
+    between ``{prefix}_0`` and ``{prefix}_1``: a round reads one while
+    writing the other, and a table is overwritten two rounds later."""
+    tables = itertools.cycle([f"{prefix}_0", f"{prefix}_1"])
+
+    def write(df: DataFrame) -> DataFrame:
+        table = next(tables)
+        # per-round STATE tables are rewritten every run (unlike the edge
+        # layout): drop-then-write keeps the run idempotent.  The DROP
+        # only clears the CURRENT session's catalog — the warehouse
+        # directory outlives the session (same pitfall _write_bucketed
+        # documents), so clear the stale location explicitly too.
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+        shutil.rmtree(os.path.join(warehouse, table), ignore_errors=True)
+        (
+            df.repartition(nb, "node")
+            .write.bucketBy(nb, "node")
+            .sortBy("node")
+            .mode("overwrite")
+            .saveAsTable(table)
+        )
+        return spark.table(table)
+
+    return write
+
+
 def _pagerank_oracle() -> str:
     """Unrolled 5-iteration integer PageRank as chained CTEs."""
     sql = """
@@ -161,8 +193,8 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     millions-row cached edge side every round (five sorts for five
     rounds — the measured dominant per-round cost), while hash-building
     edge partitions against the nodes-sized ranks stream is linear; and
-    each round's ranks are localCheckpoint()ed so the final plan is one
-    scan of the last round's blocks, not a 5-round join tower
+    the fixpoint driver checkpoints each round's ranks so the final plan
+    is one scan of the last round's blocks, not a 5-round join tower
     (checkpoint EVERY round: depth-2 lineage measured slightly faster
     warm but ~2 s slower cold — deeper plans compile more codegen, and
     single-shot cost is what a scheduled job pays).  At 100 TB both
@@ -210,9 +242,9 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_edges.select(F.col("eu").alias("node"))
         .distinct()
         .withColumn("rank_val", F.lit(PR_START).cast("long"))
-        .localCheckpoint()
     )
-    for _ in range(PR_ITERATIONS):
+
+    def iterate(ranks: DataFrame, _: int) -> DataFrame:
         # shuffle-hash hint: SMJ would re-sort the cached edge list EVERY
         # round (five sorts for five rounds — the r6 measured dominant
         # cost).  The hint sits on RANKS so the hash table is built over
@@ -230,12 +262,11 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").alias("node"),
             F.expr("(rank_val * 17) div (20 * d)").alias("c"),
         )
-        ranks = (
-            contrib.groupBy("node")
-            .agg((F.lit(PR_TELEPORT) + F.sum("c")).cast("long").alias("rank_val"))
-            .localCheckpoint()
+        return contrib.groupBy("node").agg(
+            (F.lit(PR_TELEPORT) + F.sum("c")).cast("long").alias("rank_val")
         )
-    return ranks
+
+    return fixpoint(ranks, iterate, PR_ITERATIONS)
 
 
 TRIANGLE_MIN_SUPPORT = 2  # edge = parts co-ordered at least twice
@@ -406,15 +437,13 @@ def _lp_label_frame(li: DataFrame) -> tuple[DataFrame, DataFrame]:
         edges.groupBy(F.col("u").alias("node"))
         .agg(F.min("v").alias("mn"))
         .select("node", F.least(F.col("node"), F.col("mn")).alias("lbl"))
-        .localCheckpoint()
     )
-    for _ in range(LP_ROUNDS - 1):
+
+    def propagate(labels: DataFrame, _: int) -> DataFrame:
         # Remaining rounds: attach labels to the neighbor END of each
         # edge first (2 narrow columns into the groupBy instead of the
         # old prev⋈edges⋈nb chain's 5), min per node, then one
-        # nodes-sized join to fold with the node's own label.  Each
-        # round is localCheckpoint'ed — same lineage-truncation role as
-        # the old persist+count, one action instead of two.
+        # nodes-sized join to fold with the node's own label.
         nb = labels.select(F.col("node").alias("nb_node"), F.col("lbl").alias("nb_lbl"))
         nmin = (
             edges.join(nb, F.col("v") == F.col("nb_node"))
@@ -424,12 +453,11 @@ def _lp_label_frame(li: DataFrame) -> tuple[DataFrame, DataFrame]:
         # inner join: every node has >= 1 edge (nodes are edge endpoints
         # by construction) and every neighbor carries a label, so nmin
         # covers every node — matches the old inner-join semantics.
-        labels = (
-            labels.join(nmin, "node")
-            .select("node", F.least(F.col("lbl"), F.col("mn")).alias("lbl"))
-            .localCheckpoint()
+        return labels.join(nmin, "node").select(
+            "node", F.least(F.col("lbl"), F.col("mn")).alias("lbl")
         )
-    return edges, labels
+
+    return edges, fixpoint(labels, propagate, LP_ROUNDS - 1)
 
 
 _ER_ORACLE = """
@@ -624,12 +652,6 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.union(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
-    # localCheckpoint (not persist) per round: it TRUNCATES lineage, so the
-    # final plan is one scan of the last round's blocks no matter how many
-    # rounds convergence took — with persist, every round's joins stay in
-    # the plan tree and the plan SHAPE varies with the data's diameter
-    # (observed in the 10x probe as a 510-vs-850-join diff).  At 100 TB
-    # this is the reliable-checkpoint pattern every iterative job needs.
     # r11 (guide §2.3): propagate labels over EDGE ENDPOINTS only —
     # a name-node with no fuzzy edge can never change its label, so the
     # former all-names label frame paid every round's three joins for
@@ -640,33 +662,24 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
-    for _ in range(20):  # diameter bound; spelling clusters converge in 2-3
+
+    def propagate(labels: DataFrame, _: int) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy(F.col("src").alias("node"))
             .agg(F.min("label").alias("nmin"))
         )
-        # eager=False: the convergence probe below is the round's ONLY
-        # action — it materializes the lazy checkpoint as a side effect,
-        # halving the jobs per round vs eager-checkpoint-then-count
-        # (measured 4.0 s -> ~2.5 s at sf0.1 over ~4 rounds).  The
-        # convergence flag is FUSED into the round projection (the CC
+        # The convergence flag is FUSED into the round projection (the CC
         # fix): the old spelling re-joined new vs old labels each round.
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-                (F.coalesce("nmin", "label") < F.col("label")).alias("chg"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(neighbor_min, "node", "left").select(
+            "node",
+            F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
+            (F.coalesce("nmin", "label") < F.col("label")).alias(CHANGED),
         )
-        changed = new_labels.filter("chg").limit(1).count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
+
+    # diameter bound; spelling clusters converge in 2-3 rounds
+    labels = fixpoint(labels, propagate, 20)
     edges.unpersist()
     # map the name-node component labels back onto every raw part row:
     # entity_id = component min partkey (== the CC min label, see above);
@@ -751,7 +764,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     Peeling mechanics follow the PageRank round discipline: the
     symmetric support-pruned edge list persists once; each round is two
     semi-joins (edges alive on both ends) + one degree count + the
-    >= k filter, localCheckpoint-ed so lineage stays one round deep
+    >= k filter, checkpointed so lineage stays one round deep
     (each round references the prior frame twice, so cache-only rounds
     double the logical plan and planning goes exponential).
     Convergence is the alive-count fixpoint — one scalar job per round,
@@ -773,34 +786,28 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
         .persist()
     )
-    # Round survivors are localCheckpoint-ed, not merely persisted: the
+    # Round survivors are checkpointed, not merely persisted: the
     # round-r plan references the round r-1 frame TWICE (once per
     # semi-join side), so a cache-only loop doubles the LOGICAL plan
     # every round and Catalyst re-analysis alone goes exponential
-    # (measured: round 6 spent 42 s planning at sf0.01).  The eager
-    # checkpoint truncates lineage so every round re-plans a constant-
-    # size tree — the same fix PageRank's rounds use.
-    kept = None
-    alive = edges.select(F.col("u").alias("node")).distinct()
-    n_alive = -1
-    for _ in range(KCORE_MAX_ROUNDS):
+    # (measured: round 6 spent 42 s planning at sf0.01).
+    def peel(kept: DataFrame, _: int) -> DataFrame:
+        alive = kept.select(F.col("u").alias("node"))
         live_edges = edges.join(alive, edges["u"] == alive["node"], "left_semi").join(
             alive.select(F.col("node").alias("vn")), F.col("v") == F.col("vn"), "left_semi"
         )
-        kept = (
+        return (
             live_edges.groupBy("u")
             .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
             .filter(F.col("core_degree") >= KCORE_K)
-            .localCheckpoint()
         )
-        m = kept.count()
-        alive = kept.select("u").withColumnRenamed("u", "node")
-        # Peeling is monotone (kept_r is a subset of alive_r), so an
-        # unchanged count means an unchanged set: degrees in `kept` were
-        # computed against exactly the surviving node set — converged.
-        if m == n_alive:
-            break
-        n_alive = m
+
+    # Peeling is monotone (kept_r is a subset of alive_r), so an unchanged
+    # count means an unchanged set: degrees in `kept` were computed
+    # against exactly the surviving node set — converged.
+    kept = fixpoint(
+        edges.select("u").distinct(), peel, KCORE_MAX_ROUNDS, shrinks=True
+    )
     result = kept.select(F.col("u").alias("p_partkey"), "core_degree")
     edges.unpersist()
     return result
@@ -1270,17 +1277,14 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-hop needs no tie-break); the report is exact counts and key
     extrema per hop.
 
-    Plan shape: each round is ONE equi join of the (persisted,
-    materialized) frontier against the symmetrized edge list, a
-    distinct, and an anti join against the visited set — the visited
-    set is persisted and row-counted per round so the branched lineage
+    Plan shape: each round is ONE equi join of the materialized
+    frontier against the persisted symmetrized edge list, a distinct,
+    and an anti join against the visited set — the fixpoint driver
+    checkpoints the visited set once per round, so the branched lineage
     (anti join + union both reference it) never re-executes the prior
-    chain (the label-propagation round discipline, graph.py:310-335).
-    At 100 TB edges pre-bucket on u, making the frontier join
+    chain.  At 100 TB edges pre-bucket on u, making the frontier join
     exchange-free; the anti join shuffles only frontier-sized rows.
-    Caches are released by the sweep's clear_caches; the final visited
-    frame is materialized so intermediate rounds never pin memory past
-    the loop."""
+    Caches are released by the sweep's clear_caches."""
     li = load_table(spark, sf_dir, "lineitem")
     pairs = co_occurrence_pairs(li, LP_MIN_SUPPORT, distinct_items=False).select(
         "pa", "pb"
@@ -1305,13 +1309,10 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .filter(F.col("node") % BFS_SEED_MOD == 0)
     )
-    visited = seeds.withColumn("hop", F.lit(0).cast("int"))
-    for i in range(1, BFS_MAX_HOPS + 1):
-        # r12: eager localCheckpoint (1 job/round) replaces the
-        # persist()+count() pair (2 jobs/round) — the r11 LP-round fix;
-        # the branched lineage (frontier filter, anti join, union) then
-        # reads materialized blocks, never re-executing the prior chain.
-        cur = visited.localCheckpoint()
+
+    def expand(cur: DataFrame, i: int) -> DataFrame:
+        # the branched lineage (frontier filter, anti join, union) reads
+        # the materialized previous round, never re-executing its chain
         frontier = cur.filter(F.col("hop") == i - 1).select("node")
         nxt = (
             frontier.join(edges, frontier["node"] == edges["u"])
@@ -1319,10 +1320,9 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         new_nodes = nxt.join(cur.select("node"), "node", "left_anti")
-        visited = cur.unionByName(
-            new_nodes.withColumn("hop", F.lit(i).cast("int"))
-        )
-    final = visited.localCheckpoint()
+        return cur.unionByName(new_nodes.withColumn("hop", F.lit(i).cast("int")))
+
+    final = fixpoint(seeds.withColumn("hop", F.lit(0).cast("int")), expand, BFS_MAX_HOPS)
     edges.unpersist()
     return final.groupBy("hop").agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -1674,47 +1674,25 @@ def graph_pagerank_bucketed_rounds(spark: SparkSession, sf_dir: str) -> DataFram
         n_buckets=nb,
     )
 
-    def write_ranks(df: DataFrame, table: str) -> None:
-        # per-round STATE tables are rewritten every run (unlike the edge
-        # layout): drop-then-write keeps the run idempotent.  The DROP
-        # only clears the CURRENT session's catalog — the warehouse
-        # directory outlives the session (same pitfall _write_bucketed
-        # documents), so clear the stale location explicitly too.
-        import os
-        import shutil
-        from urllib.parse import urlparse
-
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(os.path.join(warehouse, table), ignore_errors=True)
-        (
-            df.repartition(nb, "node")
-            .write.bucketBy(nb, "node")
-            .sortBy("node")
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
-
     deg_t = spark.table(t_deg)
-    write_ranks(
-        deg_t.select("node", F.lit(PR_START).cast("long").alias("rank_val")),
-        f"b_pr_ranks_{tag}_0",
-    )
-    for i in range(PR_ITERATIONS):
-        ranks = spark.table(f"b_pr_ranks_{tag}_{i % 2}")
+
+    def iterate(ranks: DataFrame, _: int) -> DataFrame:
         e = spark.table(t_edges).hint("merge")
         rd = ranks.join(deg_t.hint("merge"), "node")
         contrib = rd.join(e, F.col("node") == F.col("eu")).select(
             F.col("v").alias("node"),
             F.expr("(rank_val * 17) div (20 * d)").alias("c"),
         )
-        nxt = contrib.groupBy("node").agg(
+        return contrib.groupBy("node").agg(
             (F.lit(PR_TELEPORT) + F.sum("c")).cast("long").alias("rank_val")
         )
-        write_ranks(nxt, f"b_pr_ranks_{tag}_{(i + 1) % 2}")
-    return spark.table(f"b_pr_ranks_{tag}_{PR_ITERATIONS % 2}").select(
-        "node", "rank_val"
-    )
+
+    return fixpoint(
+        deg_t.select("node", F.lit(PR_START).cast("long").alias("rank_val")),
+        iterate,
+        PR_ITERATIONS,
+        materialize=_round_tables(spark, f"b_pr_ranks_{tag}", nb),
+    ).select("node", "rank_val")
 
 
 # --------------------------------------------------------------------------
@@ -1946,7 +1924,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel (this graph is small-world but NOT shallow; the plain kernel
     measured 15+ rounds here and its persist()-only rounds grow an
     exponentially-nested logical plan — each round is therefore
-    localCheckpoint()ed, the module-header iterative posture).  The
+    checkpointed by the fixpoint driver).  The
     oracle certifies the loop against DuckDB's recursive-CTE transitive
     closure computed from scratch.  The 25-round budget is a hard gate:
     exhausting it RAISES rather than returning possibly-unconverged
@@ -1989,12 +1967,9 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.groupBy(F.col("dst").alias("node"))
         .agg(F.min("src").alias("mn"))
         .select("node", F.least(F.col("node"), F.col("mn")).alias("label"))
-        .localCheckpoint()
     )
-    for _ in range(25):  # log2(diameter) + slack; each round checkpointed
-        # shuffle_hash hints (guide §3.1): SMJ would re-sort the cached
-        # edge partitions every round; hash-building the nodes-sized
-        # labels/nmin sides streams the edges instead.
+
+    def propagate(labels: DataFrame, _: int) -> DataFrame:
         nmin = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy(F.col("src").alias("node"))
@@ -2011,40 +1986,15 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (guide §2.4 — the old spelling re-joined jumped against labels
         # just to compare new vs old, one extra shuffle per round).
         new_label = F.least("label", F.coalesce("jlabel", "label"))
-        jumped = (
-            cand.join(
-                labels.select(
-                    F.col("node").alias("jnode"), F.col("label").alias("jlabel")
-                ),
-                cand.label == F.col("jnode"),
-                "left",
-            )
-            .select(
-                "node",
-                new_label.alias("label"),
-                (new_label < F.col("old")).alias("chg"),
-            )
-            # eager checkpoint (measured): with eager=False the limit(1)
-            # convergence probe short-circuits materialization, so unread
-            # partitions recompute through lineage in the NEXT round —
-            # 7.5-9.6 s vs 6.5-7.3 s eager at sf0.1.
-            .localCheckpoint()
-        )
-        changed = jumped.filter("chg").limit(1).count()
-        labels = jumped.select("node", "label")
-        if changed == 0:
-            break
-    else:
-        # r9 ADVICE: never silently return unconverged labels — the
-        # histogram would disagree with the oracle with no diagnostic.
-        # 25 pointer-jumped rounds cover diameter ~2^25; hitting this
-        # means the graph (or a regression) broke the O(log d) bound.
-        edges.unpersist()
-        raise RuntimeError(
-            "graph_connected_components: label propagation exhausted its "
-            "25-round budget without converging (changed > 0 on the last "
-            "round); refusing to return possibly-wrong component labels"
-        )
+        return cand.join(
+            labels.select(F.col("node").alias("jnode"), F.col("label").alias("jlabel")),
+            cand.label == F.col("jnode"),
+            "left",
+        ).select("node", new_label.alias("label"), (new_label < F.col("old")).alias(CHANGED))
+
+    # 25 pointer-jumped rounds cover diameter ~2^25; exhausting them means
+    # the graph (or a regression) broke the O(log d) bound
+    labels = fixpoint(labels, propagate, 25)
     edges.unpersist()
     return _cc_size_histogram(spark, sf_dir, labels)
 
@@ -2097,7 +2047,7 @@ def graph_connected_components_bucketed(
     per-round state survives ANY executor loss, the preemptible-fleet
     posture ARCHITECTURE.md prescribes where localCheckpoint state is
     executor-pinned.  Same min-label + pointer-jumping arithmetic as
-    graph_connected_components (graph.py:1646), so both variants share
+    graph_connected_components, so both variants share
     _CC_SQL and the cross-variant parity is itself a test; the same
     hard 25-round convergence gate applies.  Cost model: +1 bucketed
     table write per round (durability) against -1 exchange on the
@@ -2132,30 +2082,9 @@ def graph_connected_components_bucketed(
         spark, edges.repartition(nb, "dst"), t_edges, "dst", n_buckets=nb
     )
 
-    def write_labels(df: DataFrame, table: str) -> None:
-        import os
-        import shutil
-        from urllib.parse import urlparse
-
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(os.path.join(warehouse, table), ignore_errors=True)
-        (
-            df.repartition(nb, "node")
-            .write.bucketBy(nb, "node")
-            .sortBy("node")
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
-
     e_tbl = spark.table(t_edges)
-    write_labels(
-        e_tbl.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node")),
-        f"b_cc_labels_{tag}_0",
-    )
-    for i in range(25):
-        labels = spark.table(f"b_cc_labels_{tag}_{i % 2}")
+
+    def propagate(labels: DataFrame, _: int) -> DataFrame:
         e = spark.table(t_edges).hint("merge")
         nmin = (
             e.join(labels, e.dst == labels.node)
@@ -2163,9 +2092,12 @@ def graph_connected_components_bucketed(
             .agg(F.min("label").alias("nmin"))
         )
         cand = labels.join(nmin, "node", "left").select(
-            "node", F.least("label", F.coalesce("nmin", "label")).alias("label")
+            "node",
+            F.col("label").alias("old"),
+            F.least("label", F.coalesce("nmin", "label")).alias("label"),
         )
-        jumped = (
+        new_label = F.least("label", F.coalesce("jlabel", "label"))
+        return (
             cand.join(
                 labels.select(
                     F.col("node").alias("jnode"), F.col("label").alias("jlabel")
@@ -2174,28 +2106,17 @@ def graph_connected_components_bucketed(
                 "left",
             )
             .select(
-                "node",
-                F.least("label", F.coalesce("jlabel", "label")).alias("label"),
+                "node", new_label.alias("label"), (new_label < F.col("old")).alias(CHANGED)
             )
         )
-        nxt_name = f"b_cc_labels_{tag}_{(i + 1) % 2}"
-        write_labels(jumped, nxt_name)
-        nxt = spark.table(nxt_name)
-        changed = (
-            nxt.join(labels.withColumnRenamed("label", "old"), "node")
-            .filter(F.col("label") < F.col("old"))
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
-            final = nxt
-            break
-    else:
-        raise RuntimeError(
-            "graph_connected_components_bucketed: label propagation exhausted "
-            "its 25-round budget without converging; refusing to return "
-            "possibly-wrong component labels"
-        )
+
+    final = fixpoint(
+        e_tbl.select(F.col("src").alias("node")).distinct()
+        .withColumn("label", F.col("node")),
+        propagate,
+        25,
+        materialize=_round_tables(spark, f"b_cc_labels_{tag}", nb),
+    )
     return _cc_size_histogram(spark, sf_dir, final)
 
 

@@ -766,12 +766,15 @@ def date_business_days_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("end_year", "2001")
         .load()
     )
+    # persisted: both lookups below read the one cached index, so the
+    # 84-partition Python calendar scan and its window run once, not once
+    # per broadcast (the query-boundary clear_caches reclaims it)
     idx = cal.select(
         "d",
         F.sum(F.when(F.col("dow") < 6, 1).otherwise(0))
         .over(Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0))
         .alias("bd_idx"),
-    )
+    ).persist()
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 3000)
     o = load_table(spark, sf_dir, "orders")
     oidx = idx.select(F.col("d").alias("od"), F.col("bd_idx").alias("o_bd"))
