@@ -2003,34 +2003,34 @@ def _cc_size_histogram(spark: SparkSession, sf_dir: str, labels: DataFrame) -> D
     """Component-size histogram + isolated-part accounting shared by the
     localCheckpoint and bucketed-rounds CC variants (size-1 components =
     parts never touching a supported edge, counted by broadcast
-    anti-join against the part dim)."""
-    hist = (
+    anti-join against the part dim).
+
+    The isolated count stays in the plan: a one-row aggregate, dropped
+    when zero, enters the histogram's own aggregation as weight on
+    ``csize = 1``.  Counting it on the driver would launch a job at build
+    time and inline the count as a literal, a new generated class per
+    scale factor."""
+    part = load_table(spark, sf_dir, "part")
+    sizes = (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).alias("csize"))
-        .groupBy("csize")
-        .agg(F.count(F.lit(1)).alias("n_components"))
+        .select("csize", F.lit(1).cast("long").alias("w"))
     )
-    part = load_table(spark, sf_dir, "part")
-    n_iso = (
+    isolated = (
         part.join(
             labels.select(F.col("node").alias("p_partkey")).distinct(),
             "p_partkey",
             "left_anti",
-        ).count()
-    )
-    out = hist.select(
-        F.col("csize").cast("long").alias("component_size"),
-        (
-            F.col("n_components")
-            + F.when(F.col("csize") == 1, F.lit(n_iso)).otherwise(F.lit(0))
-        ).cast("long").alias("n_components"),
-    )
-    if n_iso > 0 and hist.filter(F.col("csize") == 1).limit(1).count() == 0:
-        one = spark.createDataFrame(
-            [(1, n_iso)], "component_size: bigint, n_components: bigint"
         )
-        out = out.unionByName(one)
-    return out
+        .agg(F.count(F.lit(1)).alias("w"))
+        .where(F.col("w") > 0)
+        .select(F.lit(1).cast("long").alias("csize"), "w")
+    )
+    return (
+        sizes.unionByName(isolated)
+        .groupBy(F.col("csize").alias("component_size"))
+        .agg(F.sum("w").alias("n_components"))
+    )
 
 
 @query("graph_connected_components_bucketed", oracle=_CC_SQL)
