@@ -13,7 +13,7 @@ loops over collected data.
 """
 
 from etl_pipeline_aws_spark.session import clear_caches, get_spark, session_builder
-from etl_pipeline_aws_spark.catalog import TABLES, load_table, register_views
+from etl_pipeline_aws_spark.catalog import TABLES, load_table
 from etl_pipeline_aws_spark.registry import (
     all_queries,
     demo_queries,
@@ -30,7 +30,6 @@ __all__ = [
     "session_builder",
     "TABLES",
     "load_table",
-    "register_views",
     "queries",
     "demo_queries",
     "all_queries",

@@ -24,8 +24,12 @@ the four things every loop used to restate:
    pays for the write on long loops.
 2. **Convergence.**  A step that emits the boolean column ``CHANGED``
    runs until the first round in which no row is flagged; the probe is
-   one ``limit(1)`` job over the materialized state, and the column is
-   dropped before the state reaches the next step or the caller.  A
+   one single-row ``max(CAST(flag AS INT))`` aggregate over the
+   materialized state, and the column is dropped before the state
+   reaches the next step or the caller.  The probe is an aggregate, not a
+   ``limit(1)``: Spark names a limit's counter from a JVM-wide sequence,
+   so every limit probe is new generated source that the codegen cache
+   can never reuse, while the aggregate compiles once per state shape.  A
    ``shrinks=True`` loop (monotone peeling, where a state only loses
    rows) stops at the first round whose row count repeats, probed with
    one ``count()``.  Any other loop runs exactly ``max_rounds`` rounds.
@@ -71,7 +75,7 @@ def fixpoint(
         state = materialize(step(state, i))
         if CHANGED in state.columns:
             converging = True
-            changed = state.filter(F.col(CHANGED)).limit(1).count() > 0
+            changed = state.agg(F.max(F.col(CHANGED).cast("int"))).collect()[0][0] == 1
             state = state.drop(CHANGED)
         elif shrinks:
             n = state.count()

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import load_table
 from etl_pipeline_aws_spark.functions.fixpoint import fixpoint
 from etl_pipeline_aws_spark.registry import query
 
@@ -2450,13 +2450,12 @@ def embedding_cka_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds run on d² = {64 * 64} cells.  For d in the thousands, swap
     the exact fold for decimal-rounded partial sums (the chi-square
     discipline)."""
-    register_views(spark, sf_dir)
     return spark.sql(
         f"""
         WITH flat AS (
             SELECT vec_id, posexplode(CAST(embedding AS ARRAY<DOUBLE>))
                        AS (dim, x)
-            FROM embeddings
+            FROM {{embeddings}}
         ), q AS (
             SELECT vec_id, dim, x,
                    ROUND(x * {CKA_QUANT_SCALE}) / {CKA_QUANT_SCALE}.0D AS y
@@ -2512,7 +2511,8 @@ def embedding_cka_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
                f.sxy / (SQRT(f.sxx) * SQRT(f.syy)) AS cka,
                e.sq_err / e.n_elems AS quant_mse
         FROM frob f JOIN err e JOIN nv
-        """
+        """,
+        embeddings=load_table(spark, sf_dir, "embeddings"),
     )
 
 
@@ -2707,7 +2707,7 @@ _DOMAIN_REWEIGHT_ORACLE = _domain_reweight_sql(
 # same as the oracle's; only the plumbing changed.
 _DOMAIN_REWEIGHT_JOINED_SPARK = """
 WITH toks AS (
-    SELECT source, explode(split(text, ' ')) AS w FROM documents
+    SELECT source, explode(split(text, ' ')) AS w FROM {documents}
 ), cells AS (
     SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
     FROM toks WHERE w <> '' GROUP BY source, w
@@ -2757,8 +2757,10 @@ def corpus_domain_reweight_entropy(spark: SparkSession, sf_dir: str) -> DataFram
     re-derived the corpus pipeline once per distinct subquery (~4 corpus
     passes — ReuseSubquery only dedups identical subqueries); the
     checkpointed core makes it exactly one pass at any scale."""
-    register_views(spark, sf_dir)
-    joined = spark.sql(_DOMAIN_REWEIGHT_JOINED_SPARK).localCheckpoint()
+    joined = spark.sql(
+        _DOMAIN_REWEIGHT_JOINED_SPARK,
+        documents=load_table(spark, sf_dir, "documents"),
+    ).localCheckpoint()
     fences = joined.agg(
         F.min("h_e9").cast("long").alias("hmin"),
         F.max("h_e9").cast("long").alias("hmax"),

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from etl_pipeline_aws_spark.catalog import cpu_parallel, load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, cpu_parallel, load_table
 from etl_pipeline_aws_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -963,7 +963,7 @@ WITH f AS (
            CASE WHEN doc_id = MIN(doc_id) OVER (PARTITION BY {hashfn})
                  AND {tok_gen} BETWEEN 20 AND 1000
                 THEN 1 ELSE 0 END AS kept
-    FROM documents
+    FROM {{documents}}
 ), pv AS (
     SELECT n_chars, CAST(COUNT(*) AS BIGINT) AS cnt
     FROM f GROUP BY n_chars
@@ -997,7 +997,7 @@ _BIAS_SPARK = _bias_audit_sql(
 )
 
 
-@query("corpus_filter_bias_audit", oracle=_BIAS_ORACLE)
+@query("corpus_filter_bias_audit", oracle=bare_tables(_BIAS_ORACLE))
 def corpus_filter_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER-BIAS audit of the curation gate — the fairness/coverage
     check a training-data pipeline owes its corpus: per (source,
@@ -1020,8 +1020,7 @@ def corpus_filter_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct n_chars| reduction with one ordered window over it, one
     value-keyed hash join back, one bounded-cell rollup.  The lift
     window runs over |sources|×5 rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BIAS_SPARK)
+    return spark.sql(_BIAS_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------
@@ -1044,13 +1043,13 @@ WITH gate AS (
         SELECT source, {tok_len} AS n_tokens,
                CASE WHEN doc_id = MIN(doc_id) OVER (PARTITION BY {hashfn})
                     THEN 1 ELSE 0 END AS is_keeper
-        FROM documents
+        FROM {{documents}}
     ) g GROUP BY source
 ), stats AS (
     SELECT source,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars,
            CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
-    FROM documents GROUP BY source
+    FROM {{documents}} GROUP BY source
 ), cells AS (
     SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
     FROM ({tok_gen}) toks GROUP BY source, w
@@ -1084,13 +1083,13 @@ _SCORECARD_ORACLE = _scorecard_sql(
 )
 _SCORECARD_SPARK = _scorecard_sql(
     "size(split(text, ' '))",
-    "SELECT source, explode(split(text, ' ')) AS w FROM documents",
+    "SELECT source, explode(split(text, ' ')) AS w FROM {documents}",
     "sha2(text, 256)",
     "DIV",
 )
 
 
-@query("pipeline_source_scorecard_e2e", oracle=_SCORECARD_ORACLE)
+@query("pipeline_source_scorecard_e2e", oracle=bare_tables(_SCORECARD_ORACLE))
 def pipeline_source_scorecard_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-source CURATION SCORECARD as one job — the table a data
     lead reads before every mix decision, with one row per source
@@ -1111,8 +1110,7 @@ def pipeline_source_scorecard_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregations (the entropy leg's cell table is the posting-list
     reduction); joins and output are |sources|-bounded.  One job, no
     fact-sized join anywhere."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SCORECARD_SPARK)
+    return spark.sql(_SCORECARD_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------
@@ -1140,7 +1138,7 @@ FROM (
     SELECT source, n_chars,
            CASE WHEN n_chars < {lo} THEN 1 ELSE 0 END AS is_low,
            CASE WHEN n_chars > {hi} THEN 1 ELSE 0 END AS is_high
-    FROM documents
+    FROM {{documents}}
 ) flagged
 GROUP BY source
 """
@@ -1162,11 +1160,11 @@ WITH pv AS (
 
 _LENGTH_PV_SPARK = """
 SELECT n_chars AS v, CAST(COUNT(*) AS BIGINT) AS c
-FROM documents GROUP BY n_chars
+FROM {documents} GROUP BY n_chars
 """
 
 
-@query("corpus_length_percentile_trim", oracle=_LENGTH_TRIM_ORACLE)
+@query("corpus_length_percentile_trim", oracle=bare_tables(_LENGTH_TRIM_ORACLE))
 def corpus_length_percentile_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-outlier TRIM report at exact global P1/P99 character-count
     fences — the curation screen that drops truncation stubs (sub-P1)
@@ -1188,14 +1186,14 @@ def corpus_length_percentile_trim(spark: SparkSession, sf_dir: str) -> DataFrame
     narrow documents scan."""
     from etl_pipeline_aws_spark.functions.prefix import ranked_prefix_sum
 
-    register_views(spark, sf_dir)
-    pv = spark.sql(_LENGTH_PV_SPARK)
+    pv = spark.sql(_LENGTH_PV_SPARK, documents=load_table(spark, sf_dir, "documents"))
     ranked, totals = ranked_prefix_sum(pv, [F.asc("v")], ["c"])
     n = totals["c"]
-    ranked.withColumn("n_total", F.lit(n).cast("long")).createOrReplaceTempView(
-        "r8_length_trim_cum"
+    return spark.sql(
+        _length_trim_report_sql("{cum}"),
+        cum=ranked.withColumn("n_total", F.lit(n).cast("long")),
+        documents=load_table(spark, sf_dir, "documents"),
     )
-    return spark.sql(_length_trim_report_sql("r8_length_trim_cum"))
 
 
 # --------------------------------------------------------------------------
@@ -1215,6 +1213,9 @@ def _code_screen_sql(tok_filter: str, idiv: str) -> str:
         f"(LENGTH(text) - LENGTH(REPLACE(text, '{c}', '')))"
         for c in CODE_SYMBOLS
     )
+    # the '{' and '}' literals are doubled: the text is str.format-ed
+    # (spark.sql's input binding, bare_tables for the oracle)
+    sym_count = sym_count.replace("{", "{{").replace("}", "}}")
     return f"""
 WITH feats AS (
     SELECT source,
@@ -1228,7 +1229,7 @@ WITH feats AS (
         SELECT source, text,
                CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1
                     AS BIGINT) AS n_tokens
-        FROM documents
+        FROM {{documents}}
     ) base
 ), flagged AS (
     SELECT source, sym_ppm, ident_ppm,
@@ -1259,7 +1260,7 @@ _CODE_SCREEN_SPARK = _code_screen_sql(
 )
 
 
-@query("text_code_detection_screen", oracle=_CODE_SCREEN_ORACLE)
+@query("text_code_detection_screen", oracle=bare_tables(_CODE_SCREEN_ORACLE))
 def text_code_detection_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Code-vs-prose SCREEN — the routing gate every mixed crawl needs
     before a text-only training mix (code wants its own tokenizer
@@ -1279,8 +1280,10 @@ def text_code_detection_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one documents scan, all features row-local string
     expressions, one map-side-combinable per-source groupBy.  No join,
     no window."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CODE_SCREEN_SPARK)
+    return spark.sql(
+        _CODE_SCREEN_SPARK,
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1294,7 +1297,7 @@ WITH base AS (
     SELECT source, lang, n_chars,
            CAST({toklen} AS BIGINT) AS n_toks,
            MD5(text) AS h
-    FROM documents
+    FROM {{documents}}
 ), per_source AS (
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1329,7 +1332,7 @@ FROM per_source p JOIN top_lang t ON t.source = p.source
 
 @query(
     "corpus_dataset_card",
-    oracle=_dataset_card_sql("//", "len(string_split(text, ' '))"),
+    oracle=bare_tables(_dataset_card_sql("//", "len(string_split(text, ' '))")),
 )
 def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dataset card ("Datasheets for Datasets", Gebru et al. 2021)
@@ -1351,8 +1354,10 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     within source); the per-source window runs over the |sources×langs|
     bounded table.  No text leaves the scan stage — only hashes and
     counts shuffle."""
-    register_views(spark, sf_dir)
-    return spark.sql(_dataset_card_sql("DIV", "size(split(text, ' '))"))
+    return spark.sql(
+        _dataset_card_sql("DIV", "size(split(text, ' '))"),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1390,7 +1395,7 @@ WITH qa AS (
                    || 'Q: ' || SUBSTR(text, 121, 40) || chr(10)
                    || 'A: ' || SUBSTR(text, 161)
            ELSE text END AS doc
-    FROM documents
+    FROM {{documents}}
 ), base AS (
     SELECT source, chr(10) || doc AS body FROM qa
 ), scored AS (
@@ -1412,7 +1417,10 @@ FROM scored GROUP BY source
 """
 
 
-@query("text_instruction_format_screen", oracle=_instruction_screen_sql("//"))
+@query(
+    "text_instruction_format_screen",
+    oracle=bare_tables(_instruction_screen_sql("//")),
+)
 def text_instruction_format_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Instruction/chat-format routing screen: count newline-anchored role
     markers (Q:/A:/Question:/Answer:/User:/Assistant:) per document and
@@ -1436,8 +1444,10 @@ def text_instruction_format_screen(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale: one documents scan, row-local string arithmetic, one
     map-side-combinable per-source groupBy.  No join, no window."""
-    register_views(spark, sf_dir)
-    return spark.sql(_instruction_screen_sql("DIV"))
+    return spark.sql(
+        _instruction_screen_sql("DIV"),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # --------------------------------------------------------------------------

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import cpu_parallel, load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, cpu_parallel, load_table
 from etl_pipeline_aws_spark.functions.fixpoint import CHANGED, fixpoint
 from etl_pipeline_aws_spark.registry import query, rows_only_query
 
@@ -1670,7 +1670,7 @@ WITH raw AS (
            || CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END
            || CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed' ELSE '' END
            || CASE WHEN doc_id % 7 = 0 THEN '#sec' ELSE '' END AS url
-    FROM documents
+    FROM {{documents}}
 ), canon AS (
     SELECT doc_id, url,
            REGEXP_REPLACE(
@@ -1697,7 +1697,7 @@ GROUP BY canonical_url
 """
 
 
-@query("dedup_url_canonical", oracle=_url_canonical_sql("//"))
+@query("dedup_url_canonical", oracle=bare_tables(_url_canonical_sql("//")))
 def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-canonicalization dedup — the ZERO-FETCH dedup tier of a web
     crawl pipeline, upstream of every content-based tier in this
@@ -1724,8 +1724,10 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy on the canonical key — the cheapest shuffle in the dedup
     ladder; output is |canonical| rows with variant counts and the
     deterministic min-id keeper."""
-    register_views(spark, sf_dir)
-    return spark.sql(_url_canonical_sql("DIV"))
+    return spark.sql(
+        _url_canonical_sql("DIV"),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # --------------------------------------------------------------------------

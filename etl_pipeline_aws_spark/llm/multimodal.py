@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.registry import query
 
 FRAME_BYTES = 32  # fake "video" frame size for frame sampling
@@ -1698,7 +1698,7 @@ def _ahash_sql(gen_px: str, gen_band: str, idiv: str, shl, popxor) -> str:
 WITH px AS (
     SELECT doc_id, CAST(g AS BIGINT) AS k,
            CAST({luma} AS BIGINT) AS luma
-    FROM documents, ({gen_px}) gk
+    FROM {{documents}}, ({gen_px}) gk
 ), means AS (
     SELECT doc_id, CAST(SUM(luma) {idiv} {AHASH_PIXELS} AS BIGINT) AS mu
     FROM px GROUP BY doc_id
@@ -1748,7 +1748,7 @@ _AHASH_SPARK = _ahash_sql(
 )
 
 
-@query("multimodal_image_ahash_dedup", oracle=_AHASH_ORACLE)
+@query("multimodal_image_ahash_dedup", oracle=bare_tables(_AHASH_ORACLE))
 def multimodal_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual IMAGE near-dup via average-hash: the first 8×8-ish
     luma block ({AHASH_PIXELS} Rec.601 pixels off the payload framing)
@@ -1773,8 +1773,7 @@ def multimodal_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor).  The band split is spelled with integer div/mod
     because DuckDB and Spark disagree on shift-operator syntax — the
     CASE powers are exact 2^16k constants."""
-    register_views(spark, sf_dir)
-    return spark.sql(_AHASH_SPARK)
+    return spark.sql(_AHASH_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
 
 _CREST_ORACLE = """
@@ -1813,7 +1812,6 @@ def multimodal_audio_crest_factor(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: one narrow per-doc reduction — the energy op's plan without
     the window key."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT doc_id,
@@ -1827,11 +1825,12 @@ def multimodal_audio_crest_factor(spark: SparkSession, sf_dir: str) -> DataFrame
                    CAST((ascii(c) - 128) * 256 AS BIGINT) AS s
             FROM (
                 SELECT doc_id, explode(split(text, '')) AS c
-                FROM documents
+                FROM {documents}
             ) ch
         ) samples
         GROUP BY doc_id
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -1850,7 +1849,7 @@ def _contrast_sql(idiv: str, gen: str) -> str:
     return f"""
 WITH framed AS (
     SELECT doc_id, text, (LENGTH(text) {idiv} 3) AS n_px
-    FROM documents WHERE LENGTH(text) >= 3
+    FROM {{documents}} WHERE LENGTH(text) >= 3
 ), px AS (
     SELECT doc_id, CAST({luma} AS BIGINT) AS y
     FROM framed{gen}
@@ -1876,9 +1875,9 @@ FROM sums
 
 @query(
     "multimodal_image_contrast",
-    oracle=_contrast_sql(
+    oracle=bare_tables(_contrast_sql(
         "//", ", LATERAL (SELECT unnest(range(0, n_px)) AS k) g"
-    ),
+    )),
 )
 def multimodal_image_contrast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image contrast QC: population standard deviation of the Rec.601
@@ -1898,11 +1897,11 @@ def multimodal_image_contrast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pixel expansion is a narrow per-doc generator feeding a
     map-side-combined doc reduction — one scan, no shuffle beyond the
     doc key."""
-    register_views(spark, sf_dir)
     return spark.sql(
         _contrast_sql(
             "DIV", " LATERAL VIEW explode(sequence(0, n_px - 1)) g AS k"
-        )
+        ),
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2033,7 +2032,6 @@ def multimodal_audio_dc_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one narrow per-doc reduction, map-side combinable — the
     cheapest plan in the audio family."""
-    register_views(spark, sf_dir)
     return spark.sql(
         f"""
         SELECT doc_id,
@@ -2048,11 +2046,12 @@ def multimodal_audio_dc_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST((ascii(c) - 128) * 256 AS BIGINT) AS s
             FROM (
                 SELECT doc_id, explode(split(text, '')) AS c
-                FROM documents
+                FROM {{documents}}
             ) ch
         ) samples
         GROUP BY doc_id
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2119,12 +2118,11 @@ def multimodal_audio_clipping_rate(spark: SparkSession, sf_dir: str) -> DataFram
     window (document-sized partitions — the audio family's standard
     partitioner), then two map-side-combinable folds and a doc-keyed
     join.  No corpus-sized window anywhere."""
-    register_views(spark, sf_dir)
     return spark.sql(
         f"""
         WITH chars AS (
             SELECT doc_id, pos + 1 AS pos, c
-            FROM documents
+            FROM {{documents}}
             LATERAL VIEW posexplode(split(text, '')) AS pos, c
         ), samples AS (
             SELECT doc_id, pos,
@@ -2154,7 +2152,8 @@ def multimodal_audio_clipping_rate(spark: SparkSession, sf_dir: str) -> DataFram
                          THEN 1 ELSE 0 END AS INT) AS clipped_flag
         FROM per_doc p LEFT JOIN runlen r ON p.doc_id = r.doc_id
         GROUP BY p.doc_id, p.n_samples, p.n_clipped
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2195,7 +2194,7 @@ WITH reps AS (
     -- payload.  This kills the banded join's quadratic blowup on
     -- identical items before it can happen.
     SELECT CAST(MIN(doc_id) AS BIGINT) AS doc_id, text
-    FROM documents GROUP BY text
+    FROM {{documents}} GROUP BY text
 ), px AS (
     SELECT doc_id, CAST(g AS BIGINT) AS k,
            CAST({luma} AS BIGINT) AS luma
@@ -2285,7 +2284,7 @@ _PSNR_SPARK = _psnr_sql(
 )
 
 
-@query("multimodal_image_psnr_pairs", oracle=_PSNR_ORACLE)
+@query("multimodal_image_psnr_pairs", oracle=bare_tables(_PSNR_ORACLE))
 def multimodal_image_psnr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-pixel VERIFICATION of the aHash near-dup candidates: every
     pair the banded average-hash pass surfaces (hamming ≤
@@ -2318,8 +2317,7 @@ def multimodal_image_psnr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates the budget cut — so the drop is visible in the result,
     not silent.  At 100 TB the byte fetch is the only wide cost and
     touches kept representatives only."""
-    register_views(spark, sf_dir)
-    return spark.sql(_PSNR_SPARK)
+    return spark.sql(_PSNR_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------

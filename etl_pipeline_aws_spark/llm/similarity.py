@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import cpu_parallel, load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, cpu_parallel, load_table
 from etl_pipeline_aws_spark.registry import query, rows_only_query
 
 N_QUERIES = 10  # vec_id < 10 are the query set
@@ -1685,7 +1685,7 @@ def _quant_err_sql(unnest_expr: str, idiv: str) -> str:
     array explode and integer division."""
     return f"""
 WITH x AS (
-    SELECT vec_id, {unnest_expr} AS v FROM embeddings
+    SELECT vec_id, {unnest_expr} AS v FROM {{embeddings}}
 ), m AS (
     SELECT vec_id, MAX(ABS(v)) AS mx FROM x GROUP BY vec_id
 ), e AS (
@@ -1709,7 +1709,7 @@ _QERR_SPARK = _quant_err_sql(
 )
 
 
-@query("embedding_quantization_error_histogram", oracle=_QERR_ORACLE)
+@query("embedding_quantization_error_histogram", oracle=bare_tables(_QERR_ORACLE))
 def embedding_quantization_error_histogram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1731,8 +1731,7 @@ def embedding_quantization_error_histogram(
     Scale: one explode + vec-keyed max fold + value join back (all
     partial-aggregated, shuffle on vec_id only), 11-row output; the
     share window runs over those 11 rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_QERR_SPARK)
+    return spark.sql(_QERR_SPARK, embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 _QREC_ORACLE = f"""

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import cpu_parallel, load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, cpu_parallel, load_table
 from etl_pipeline_aws_spark.registry import query, rows_only_query
 
 # Shared tokenization: whitespace split (the documents table is
@@ -1721,7 +1721,7 @@ WITH counts AS (
            GREATEST(len(string_split(text, ' ')), 1) AS n_words,
            {count_re.format(col="lower(text)", pat="'[aeiouy]+'")}
                AS n_syllables
-    FROM documents
+    FROM {{documents}}
 )
 SELECT doc_id,
        CAST(n_sentences AS BIGINT) AS n_sentences,
@@ -1742,7 +1742,7 @@ _READ_SPARK = _readability_sql("regexp_count({col}, {pat})").replace(
 )
 
 
-@query("text_readability_fk", oracle=_READ_ORACLE)
+@query("text_readability_fk", oracle=bare_tables(_READ_ORACLE))
 def text_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch-Kincaid grade level + Flesch reading-ease per document —
     the readability axis of corpus curation (the C4/Gopher gates in
@@ -1762,8 +1762,7 @@ def text_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: embarrassingly parallel scan, no shuffle at all — the
     readability columns land next to the quality gate in one pass."""
-    register_views(spark, sf_dir)
-    return spark.sql(_READ_SPARK)
+    return spark.sql(_READ_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
 
 VOCAB_COVERAGE_FENCES = (5, 10, 20)  # vocab sizes evaluated (fixture-scaled)
@@ -1832,13 +1831,13 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combined)."""
     from etl_pipeline_aws_spark.functions.prefix import ranked_prefix_sum
 
-    register_views(spark, sf_dir)
     counts = spark.sql(
         """
         SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (SELECT explode(split(text, ' ')) AS tok FROM documents)
+        FROM (SELECT explode(split(text, ' ')) AS tok FROM {documents})
         WHERE tok <> '' GROUP BY tok
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     ).withColumn("_one", F.lit(1).cast("long"))
     ranked, totals = ranked_prefix_sum(
         counts, [F.desc("cnt"), F.asc("tok")], ["cnt", "_one"]
@@ -2295,21 +2294,19 @@ _TRI_BODY_ORACLE = """SELECT DISTINCT doc_id, lang, substring(text, i, 3) AS g
 _TRI_BODY_SPARK = """SELECT doc_id, lang,
            explode(array_distinct(transform(sequence(1, length(text) - 2),
                                             i -> substring(text, i, 3)))) AS g
-    FROM _docs_tri_spread WHERE length(text) >= 3"""
+    FROM {docs_tri} WHERE length(text) >= 3"""
 
 
-def _register_tri_docs(spark: SparkSession, sf_dir: str) -> None:
-    """Private spread view for the char-trigram consumers (r12): the
-    trigram array build + row-local distinct is CPU-dense per-row work
-    whose parallelism was capped by the scan's split count — on a
-    single-row-group table the whole kernel ran in ONE task (10x probe:
-    24 s; spread: 4.8 s, identical rows).  cpu_parallel's guard makes
-    this a no-op once scans out-split cores; the `_`-prefixed view name
-    keeps the canonical `documents` registration untouched (the
-    register_views bookkeeping contract)."""
-    cpu_parallel(
+def _tri_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spread documents input (``{docs_tri}``) of the char-trigram
+    consumers (r12): the trigram array build + row-local distinct is
+    CPU-dense per-row work whose parallelism was capped by the scan's
+    split count — on a single-row-group table the whole kernel ran in
+    ONE task (10x probe: 24 s; spread: 4.8 s, identical rows).
+    cpu_parallel's guard makes this a no-op once scans out-split cores."""
+    return cpu_parallel(
         load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    ).createOrReplaceTempView("_docs_tri_spread")
+    )
 
 _CHAR_LANG_ORACLE = _char_lang_sql(_TRI_BODY_ORACLE)
 _CHAR_LANG_SPARK = _char_lang_sql(_TRI_BODY_SPARK)
@@ -2338,9 +2335,7 @@ def text_lang_id_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     a vocabulary-sized profile rank, and a posting-list join against
     the 3×{CHAR_LANG_PROFILE_K}-row profile broadcast — classification
     cost scales with corpus trigram volume, never vocabulary²."""
-    register_views(spark, sf_dir)
-    _register_tri_docs(spark, sf_dir)
-    return spark.sql(_CHAR_LANG_SPARK)
+    return spark.sql(_CHAR_LANG_SPARK, docs_tri=_tri_docs(spark, sf_dir))
 
 
 def _source_tv_sql(tok_gen: str) -> str:
@@ -2381,7 +2376,7 @@ _SOURCE_TV_ORACLE = _source_tv_sql(
     "SELECT source, unnest(string_split(text, ' ')) AS w FROM documents"
 )
 _SOURCE_TV_SPARK = _source_tv_sql(
-    "SELECT source, explode(split(text, ' ')) AS w FROM documents"
+    "SELECT source, explode(split(text, ' ')) AS w FROM {documents}"
 )
 
 
@@ -2407,8 +2402,7 @@ def text_source_vocab_tv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (source, token) reduction, one token-key self-join whose
     output is |shared vocab|×|source pairs| — vocabulary-bounded, never
     corpus-bounded; totals are a |sources|-row broadcast."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SOURCE_TV_SPARK)
+    return spark.sql(_SOURCE_TV_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
 
 BURSTINESS_TOP = 25  # terms reported, by collection frequency
@@ -2453,11 +2447,11 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one token reduction per term (cf map-side combined; df
     expands to (term, doc) partials first — both vocabulary-bounded
     outputs), then a vocabulary-sized TakeOrdered."""
-    register_views(spark, sf_dir)
     return spark.sql(
         _term_burstiness_sql(
-            "SELECT doc_id, explode(split(text, ' ')) AS w FROM documents"
-        )
+            "SELECT doc_id, explode(split(text, ' ')) AS w FROM {documents}"
+        ),
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2530,12 +2524,12 @@ def text_vocab_growth_checkpoints(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: one token reduction per type + one per doc (both map-side
     combined), then a 5-row fan over the doc-count table — prefix
     re-scans never happen."""
-    register_views(spark, sf_dir)
     return spark.sql(
         _vocab_growth_sql(
-            "SELECT doc_id, explode(split(text, ' ')) AS w FROM documents",
+            "SELECT doc_id, explode(split(text, ' ')) AS w FROM {documents}",
             "DIV",
-        )
+        ),
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2589,7 +2583,7 @@ WITH tri AS (
              THEN 'es'
              ELSE 'de'
            END AS marker_lang
-    FROM documents
+    FROM {{documents}}
 ), joined AS (
     SELECT c.doc_id,
            CASE WHEN m.marker_lang = c.labeled_lang THEN 1 ELSE 0 END AS m_ok,
@@ -2613,10 +2607,10 @@ FROM joined
 
 @query(
     "stat_mcnemar_classifiers",
-    oracle=_mcnemar_sql(
+    oracle=bare_tables(_mcnemar_sql(
         _TRI_BODY_ORACLE,
         _mcnemar_hits("len", "list_filter", "string_split"),
-    ),
+    )),
 )
 def stat_mcnemar_classifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McNemar's test between the engine's two language classifiers —
@@ -2638,13 +2632,13 @@ def stat_mcnemar_classifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the char side's posting-list join dominates (documented
     there); the marker side is a narrow map; the pairing is one doc_id
     join and a single fold."""
-    register_views(spark, sf_dir)
-    _register_tri_docs(spark, sf_dir)
     return spark.sql(
         _mcnemar_sql(
             _TRI_BODY_SPARK,
             _mcnemar_hits("size", "filter", "split"),
-        )
+        ),
+        documents=load_table(spark, sf_dir, "documents"),
+        docs_tri=_tri_docs(spark, sf_dir),
     )
 
 
@@ -2983,12 +2977,12 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the parents' two token reductions are the only fact-sized
     stages; the fit itself folds a handful of checkpoint rows to one."""
-    register_views(spark, sf_dir)
     return spark.sql(
         _heaps_fit_sql(
-            "SELECT doc_id, explode(split(text, ' ')) AS w FROM documents",
+            "SELECT doc_id, explode(split(text, ' ')) AS w FROM {documents}",
             "DIV",
-        )
+        ),
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -3033,7 +3027,7 @@ _SRC_ENTROPY_ORACLE = _source_entropy_sql(
     "SELECT source, unnest(string_split(text, ' ')) AS w FROM documents", "//"
 )
 _SRC_ENTROPY_SPARK = _source_entropy_sql(
-    "SELECT source, explode(split(text, ' ')) AS w FROM documents", "DIV"
+    "SELECT source, explode(split(text, ' ')) AS w FROM {documents}", "DIV"
 )
 
 
@@ -3058,8 +3052,10 @@ def text_source_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one token reduction to |sources|×|V| cells (map-side
     combined — the posting-list discipline), a source-partitioned
     window over those cells, and a |sources|-row rollup.  No join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SRC_ENTROPY_SPARK)
+    return spark.sql(
+        _SRC_ENTROPY_SPARK,
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -3310,7 +3306,7 @@ def _nb_sql(unnest_toks: str) -> str:
     return f"""
 WITH toks AS (
     SELECT doc_id, lang, tok FROM (
-        SELECT doc_id, lang, {unnest_toks} AS tok FROM documents
+        SELECT doc_id, lang, {unnest_toks} AS tok FROM {{documents}}
     ) t WHERE tok <> ''
 ), train_toks AS (
     SELECT * FROM toks WHERE doc_id % 2 = 0
@@ -3378,7 +3374,7 @@ FROM pred GROUP BY true_lang, pred_lang
 
 @query(
     "text_lang_id_naive_bayes",
-    oracle=_nb_sql("unnest(string_split(text, ' '))"),
+    oracle=bare_tables(_nb_sql("unnest(string_split(text, ' '))")),
 )
 def text_lang_id_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINED language identification — multinomial Naive Bayes with
@@ -3405,8 +3401,10 @@ def text_lang_id_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a plain hash join); the skeleton cross join is test-docs x
     |languages| (bounded catalog side, allowlisted q11 pattern); the
     argmax window is partitioned per doc."""
-    register_views(spark, sf_dir)
-    return spark.sql(_nb_sql("explode(split(text, ' '))"))
+    return spark.sql(
+        _nb_sql("explode(split(text, ' '))"),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # --------------------------------------------------------------------------

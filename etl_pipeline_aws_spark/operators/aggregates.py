@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.functions.numeric import davg, dec, dsum
 from etl_pipeline_aws_spark.registry import query, rows_only_query
 
@@ -186,19 +186,15 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets via spark.sql — DataFrame API has no direct
     grouping-sets builder; the SQL route produces the identical plan.
-
-    Views are registered via register_views (not a direct
-    createOrReplaceTempView): the catalog tracks which sf_dir the canonical
-    views point at, and a direct registration here would bypass that
-    bookkeeping — a later register_views(other_sf) call would then skip
-    re-registration and silently read this sf_dir's lineitem."""
-    register_views(spark, sf_dir)
+    The lineitem input is bound for this call only, so a query built at
+    another sf_dir can never leave it reading stale data."""
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1325,9 +1321,9 @@ WITH rev AS (
     SELECT n.n_name, c.c_custkey,
            CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
                AS rev_cents
-    FROM orders o
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN nation n ON n.n_nationkey = c.c_nationkey
+    FROM {{orders}} o
+    JOIN {{customer}} c ON c.c_custkey = o.o_custkey
+    JOIN {{nation}} n ON n.n_nationkey = c.c_nationkey
     GROUP BY n.n_name, c.c_custkey
 ), ranked AS (
     SELECT n_name, c_custkey, rev_cents,
@@ -1350,7 +1346,7 @@ GROUP BY n_name
 """
 
 
-@query("agg_topk_plus_others", oracle=_TOPK_OTHERS_SQL)
+@query("agg_topk_plus_others", oracle=bare_tables(_TOPK_OTHERS_SQL))
 def agg_topk_plus_others(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reporting rollup every dashboard ships: per nation, the top
     {TOPK_OTHERS_K} customers by revenue AS ROWS plus one aggregated
@@ -1369,5 +1365,9 @@ def agg_topk_plus_others(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregates map-side — the head/tail split reads the ranked
     table twice but both reads are |customers|-sized, never
     fact-sized."""
-    register_views(spark, sf_dir)
-    return spark.sql(_TOPK_OTHERS_SQL)
+    return spark.sql(
+        _TOPK_OTHERS_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.functions.prefix import (
     disc_quantile_bounds,
     ranked_ntile,
@@ -3536,7 +3536,7 @@ def _sticky_sql(unnest_expr: str, idiv: str) -> str:
     dialect."""
     return f"""
 WITH du AS (
-    SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events
+    SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM {{events}}
 ), offs AS (
     SELECT day, user_id, {unnest_expr} AS off FROM du
 ), contrib AS (
@@ -3559,7 +3559,7 @@ _STICKY_ORACLE = _sticky_sql(f"unnest(range(0, {STICKY_MAU_DAYS}))", "//")
 _STICKY_SPARK = _sticky_sql(f"explode(sequence(0, {STICKY_MAU_DAYS - 1}))", "DIV")
 
 
-@query("events_dau_mau_stickiness", oracle=_STICKY_ORACLE)
+@query("events_dau_mau_stickiness", oracle=bare_tables(_STICKY_ORACLE))
 def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU / MAU / stickiness — the engagement headline every growth
     dashboard leads with: daily actives, trailing-{STICKY_MAU_DAYS}-day
@@ -3581,10 +3581,7 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw events, and lands in a partial-aggregated distinct; at a year
     of data the 28x replication is the documented cost of exactness —
     the HLL tier is the knob when ±2% is acceptable."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_STICKY_SPARK)
+    return spark.sql(_STICKY_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 def _lorenz_sql(idiv: str) -> str:
@@ -3637,16 +3634,14 @@ def customer_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     decile cumulative = MAX of the per-customer cumulative inside each
     decile, since deciles are contiguous index ranges) — no window, no
     self-join, and the grand total comes exact from the offset fold."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
     rev = spark.sql(
         """
         SELECT o_custkey,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
                    AS cents
-        FROM orders GROUP BY o_custkey
-        """
+        FROM {orders} GROUP BY o_custkey
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     ).withColumn("_one", F.lit(1).cast("long"))
     rk, totals = ranked_prefix_sum(
         rev, [F.asc("cents"), F.asc("o_custkey")], ["_one", "cents"]
@@ -3688,7 +3683,7 @@ def _cuped_sql(day_idx: str, idiv: str) -> str:
 WITH e AS (
     SELECT user_id, {day_idx} AS d,
            CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-    FROM events
+    FROM {{events}}
 ), b AS (
     SELECT user_id, d, cents,
            (MIN(d) OVER () + MAX(d) OVER ()) {idiv} 2 AS mid
@@ -3746,7 +3741,7 @@ _CUPED_ORACLE = _cuped_sql(
 _CUPED_SPARK = _cuped_sql("UNIX_DATE(CAST(ts AS DATE))", "DIV")
 
 
-@query("events_cuped_adjustment", oracle=_CUPED_ORACLE)
+@query("events_cuped_adjustment", oracle=bare_tables(_CUPED_ORACLE))
 def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction for the user-parity A/B split — the
     technique every modern experimentation platform runs before the
@@ -3768,10 +3763,7 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-user reduction (the only fact-sized shuffle), one
     |users|-row window pass for the pooled moments, a 2-row arm fold."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_CUPED_SPARK)
+    return spark.sql(_CUPED_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # OLS normal equations, 2 features + intercept, solved in closed form by
@@ -3782,7 +3774,7 @@ WITH feats AS (
            CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y,
            CAST(COUNT(*) AS BIGINT) AS x1,
            CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS x2
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    FROM {orders} o JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderkey, o.o_totalprice
 ), sums AS (
     SELECT CAST(COUNT(*) AS DOUBLE) AS n,
@@ -3828,7 +3820,7 @@ FROM det
 """
 
 
-@query("ml_ols_normal_equations", oracle=_OLS_SQL)
+@query("ml_ols_normal_equations", oracle=bare_tables(_OLS_SQL))
 def ml_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OLS training IN the warehouse: order total regressed on line
     count and total quantity, solved in closed form from the normal
@@ -3848,10 +3840,11 @@ def ml_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-line join (which reuses the orderkey shuffle); closed-form
     solve is O(1).  This is the d<=3 sweet spot — higher-dimension
     fits need the iterated normal-equation or gradient path."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_OLS_SQL)
+    return spark.sql(
+        _OLS_SQL,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 def _growth_sql(day_idx: str, idiv: str) -> str:
@@ -3861,7 +3854,7 @@ def _growth_sql(day_idx: str, idiv: str) -> str:
     documented weekday-numbering trap)."""
     return f"""
 WITH uw AS (
-    SELECT DISTINCT user_id, {day_idx} {idiv} 7 AS wk FROM events
+    SELECT DISTINCT user_id, {day_idx} {idiv} 7 AS wk FROM {{events}}
 ), fw AS (
     SELECT user_id, wk,
            MIN(wk) OVER (PARTITION BY user_id) AS first_wk,
@@ -3905,7 +3898,7 @@ _GROWTH_ORACLE = _growth_sql(
 _GROWTH_SPARK = _growth_sql("UNIX_DATE(CAST(ts AS DATE))", "DIV")
 
 
-@query("events_growth_accounting", oracle=_GROWTH_ORACLE)
+@query("events_growth_accounting", oracle=bare_tables(_GROWTH_ORACLE))
 def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly growth accounting — the new/retained/resurrected/churned
     decomposition (and quick ratio = (new+resurrected)/churned) that
@@ -3926,10 +3919,7 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one distinct (user, week) reduction, one user-keyed window,
     bounded weekly folds — the DAU/WAU/MAU family's shuffle shape."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_GROWTH_SPARK)
+    return spark.sql(_GROWTH_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 def _experiment_e2e_sql(epoch_us: str, day_idx: str, idiv: str) -> str:
@@ -3945,7 +3935,7 @@ WITH gaps AS (
     SELECT user_id,
            CAST({epoch_us}(ts) - LAG({epoch_us}(ts)) OVER (
                PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS gap_us
-    FROM events
+    FROM {{events}}
 ), gap_counts AS (
     SELECT user_id, gap_us, CAST(COUNT(*) AS BIGINT) AS cnt
     FROM gaps WHERE gap_us IS NOT NULL GROUP BY user_id, gap_us
@@ -3960,7 +3950,7 @@ WITH gaps AS (
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS active_days,
            CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types
-    FROM events GROUP BY user_id
+    FROM {{events}} GROUP BY user_id
 ), bots AS (
     SELECT u.user_id
     FROM feats u LEFT JOIN modal m ON m.user_id = u.user_id AND m.rn = 1
@@ -3972,7 +3962,7 @@ WITH gaps AS (
            CAST(CAST(e.value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
            CASE WHEN e.event_type = 'purchase'
                  AND CAST(e.value AS DECIMAL(18,2)) > 90 THEN 1 ELSE 0 END AS hv
-    FROM events e LEFT JOIN bots b ON b.user_id = e.user_id
+    FROM {{events}} e LEFT JOIN bots b ON b.user_id = e.user_id
     WHERE b.user_id IS NULL
 ), bounded AS (
     SELECT user_id, d, cents, hv,
@@ -4035,7 +4025,7 @@ _EXP_E2E_SPARK = _experiment_e2e_sql(
 )
 
 
-@query("pipeline_experiment_e2e", oracle=_EXP_E2E_ORACLE)
+@query("pipeline_experiment_e2e", oracle=bare_tables(_EXP_E2E_ORACLE))
 def pipeline_experiment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experimentation readout END TO END — the composition an
     experimentation platform actually ships, in one pass: (1) exclude
@@ -4058,10 +4048,7 @@ def pipeline_experiment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: three user-keyed reductions (gate features, modal gap,
     pre/post sums) + one |users|-row window pass — nothing fact-sized
     past the first shuffles."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_EXP_E2E_SPARK)
+    return spark.sql(_EXP_E2E_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 _WOW_ATTRIBUTION_ORACLE = """
@@ -4295,7 +4282,7 @@ WITH spend AS (
                 THEN 1 ELSE 2 END AS period,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(30,2))
                AS total_spend
-    FROM orders
+    FROM {{orders}}
     GROUP BY o_custkey,
              CASE WHEN CAST(o_orderdate AS DATE) < DATE '{MIGRATION_SPLIT_DATE}'
                   THEN 1 ELSE 2 END
@@ -4315,7 +4302,7 @@ GROUP BY COALESCE(p1.seg, 'absent'), COALESCE(p2.seg, 'absent')
 """
 
 
-@query("customer_segment_migration", oracle=_SEGMENT_MIGRATION_SQL)
+@query("customer_segment_migration", oracle=bare_tables(_SEGMENT_MIGRATION_SQL))
 def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer segment MIGRATION matrix: value tertile (high/mid/low
     spend, NTILE over exact decimals with key tie-break) computed
@@ -4334,8 +4321,7 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers-sized NTILE window (swap for broadcast tertile fences at
     extreme cardinality — the ml_calibration_bins pattern), and a
     customer-key full outer join; output is ≤ 4×4 cells."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SEGMENT_MIGRATION_SQL)
+    return spark.sql(_SEGMENT_MIGRATION_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _pr_curve_sql(thresholds_cte: str) -> str:
@@ -4346,7 +4332,7 @@ def _pr_curve_sql(thresholds_cte: str) -> str:
 WITH pts AS (
     SELECT o_totalprice AS score,
            CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS label
-    FROM orders
+    FROM {{{{orders}}}}
 ), thresholds AS ({thresholds_cte}), cells AS (
     SELECT th.k, th.t,
            CAST(SUM(CASE WHEN p.score > th.t AND p.label = 1
@@ -4383,7 +4369,7 @@ _PR_CURVE_SPARK = _pr_curve_sql("""
 """).format(idiv="DIV")
 
 
-@query("ml_pr_curve_points", oracle=_PR_CURVE_ORACLE)
+@query("ml_pr_curve_points", oracle=bare_tables(_PR_CURVE_ORACLE))
 def ml_pr_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision-recall curve at the nine decile thresholds — the
     operating-curve view that completes the shared eval family:
@@ -4406,13 +4392,13 @@ def ml_pr_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated pass over the facts (the permutation-test
     map-side-fan shape) after a same-pass grouped quantile; output is
     9 rows at any scale."""
-    register_views(spark, sf_dir)
     scores = load_table(spark, sf_dir, "orders").select(
         F.col("o_totalprice").alias("score")
     )
     return spark.sql(
         _PR_CURVE_SPARK,
         bounds=disc_quantile_bounds(scores, "score", _CALIB_FRACS),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -4422,7 +4408,7 @@ def _anomaly_ensemble_sql(idiv: str) -> str:
     return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), idx AS (
     SELECT day, x,
            ROW_NUMBER() OVER (ORDER BY x, day) AS rn,
@@ -4463,7 +4449,7 @@ FROM flagged
 """
 
 
-@query("events_anomaly_ensemble", oracle=_anomaly_ensemble_sql("//"))
+@query("events_anomaly_ensemble", oracle=bare_tables(_anomaly_ensemble_sql("//")))
 def events_anomaly_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consensus anomaly detection: the three classical detectors the
     engine implements separately — z-score (parametric), MAD (robust
@@ -4484,8 +4470,10 @@ def events_anomaly_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized daily reduction; the global windows, rank
     picks, and the two 1×|days| scalar broadcasts (q11 pattern) are
     calendar-bounded."""
-    register_views(spark, sf_dir)
-    return spark.sql(_anomaly_ensemble_sql("DIV"))
+    return spark.sql(
+        _anomaly_ensemble_sql("DIV"),
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 _MONTH_INDEX_SQL = """
@@ -4494,7 +4482,7 @@ WITH monthly AS (
            CAST(EXTRACT(month FROM CAST(o_orderdate AS DATE)) AS INT) AS mo,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(30,2))
                AS rev
-    FROM orders
+    FROM {orders}
     GROUP BY EXTRACT(year FROM CAST(o_orderdate AS DATE)),
              EXTRACT(month FROM CAST(o_orderdate AS DATE))
 ), per_month AS (
@@ -4517,7 +4505,7 @@ FROM base
 """
 
 
-@query("orders_month_seasonal_index", oracle=_MONTH_INDEX_SQL)
+@query("orders_month_seasonal_index", oracle=bare_tables(_MONTH_INDEX_SQL))
 def orders_month_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-of-year seasonal index over ~7 years of order revenue:
     average revenue for each calendar month divided by the overall
@@ -4537,8 +4525,7 @@ def orders_month_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact-sized (year, month) reduction, then ≤12-row window
     arithmetic."""
-    register_views(spark, sf_dir)
-    return spark.sql(_MONTH_INDEX_SQL)
+    return spark.sql(_MONTH_INDEX_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _return_rate_sql(idiv: str) -> str:
@@ -4555,12 +4542,12 @@ SELECT p.p_brand,
                           * (1 - CAST(l.l_discount AS DECIMAL(18,2)))
                      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
            AS returned_revenue
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+FROM {{lineitem}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
 GROUP BY p.p_brand
 """
 
 
-@query("parts_return_rate_by_brand", oracle=_return_rate_sql("//"))
+@query("parts_return_rate_by_brand", oracle=bare_tables(_return_rate_sql("//")))
 def parts_return_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quality scorecard: per part BRAND, the returned-line rate
     (integer basis points) and the discounted revenue those returns
@@ -4578,8 +4565,11 @@ def parts_return_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast dimension join (part is the small side —
     Catalyst broadcasts it under default thresholds) into a
     map-side-combined brand rollup; output is |brands| rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_return_rate_sql("DIV"))
+    return spark.sql(
+        _return_rate_sql("DIV"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+    )
 
 
 _DISCOUNT_SLOPE_SQL = """
@@ -4587,7 +4577,7 @@ WITH pts AS (
     SELECT p.p_brand,
            CAST(CAST(l.l_discount AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
            CAST(l.l_quantity AS BIGINT) AS y
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
 ), sums AS (
     SELECT p_brand,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -4609,7 +4599,7 @@ FROM sums
 """
 
 
-@query("parts_discount_quantity_slope", oracle=_DISCOUNT_SLOPE_SQL)
+@query("parts_discount_quantity_slope", oracle=bare_tables(_DISCOUNT_SLOPE_SQL))
 def parts_discount_quantity_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand discount sensitivity: the OLS slope of line quantity on
     discount points (and the correlation qualifying it) — the pricing
@@ -4626,8 +4616,11 @@ def parts_discount_quantity_slope(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: one broadcast part-dim join into a map-side-combined brand
     rollup; output is |brands| rows of arithmetic."""
-    register_views(spark, sf_dir)
-    return spark.sql(_DISCOUNT_SLOPE_SQL)
+    return spark.sql(
+        _DISCOUNT_SLOPE_SQL,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+    )
 
 
 FISCAL_ANCHOR = "1995-01-02"  # fiscal week 1 day 1 (a Monday); 52-week years
@@ -4640,7 +4633,7 @@ def _fiscal_445_sql(idiv: str, day_diff: str) -> str:
 WITH based AS (
     SELECT CAST({day_diff} AS BIGINT) AS d,
            CAST(o_totalprice AS DECIMAL(18,2)) AS price
-    FROM orders
+    FROM {{orders}}
     WHERE CAST(o_orderdate AS DATE) >= DATE '{FISCAL_ANCHOR}'
 ), weeks AS (
     SELECT (d {idiv} 7) AS wk_abs, price FROM based
@@ -4665,9 +4658,9 @@ GROUP BY fy_index, fq, wk_in_q < 4, wk_in_q < 8
 
 @query(
     "orders_fiscal_445_rollup",
-    oracle=_fiscal_445_sql(
+    oracle=bare_tables(_fiscal_445_sql(
         "//", f"CAST(o_orderdate AS DATE) - DATE '{FISCAL_ANCHOR}'"
-    ),
+    )),
 )
 def orders_fiscal_445_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by 4-4-5 FISCAL period — the retail/enterprise calendar
@@ -4691,11 +4684,11 @@ def orders_fiscal_445_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan with the arithmetic inline (codegen'd), one
     map-side-combined rollup to ≤ years×12 rows."""
-    register_views(spark, sf_dir)
     return spark.sql(
         _fiscal_445_sql(
             "DIV", f"datediff(CAST(o_orderdate AS DATE), DATE '{FISCAL_ANCHOR}')"
-        )
+        ),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -4705,7 +4698,7 @@ WITH weekly AS (
            CAST(date_trunc('week', ts) AS DATE) AS week_start,
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS tot
-    FROM events GROUP BY 1, 2
+    FROM {events} GROUP BY 1, 2
 ), ranked AS (
     SELECT event_type, n, tot,
            DENSE_RANK() OVER (ORDER BY week_start DESC) AS rk
@@ -4730,7 +4723,7 @@ FROM pivoted
 """
 
 
-@query("events_wow_price_volume_bridge", oracle=_PV_BRIDGE_SQL)
+@query("events_wow_price_volume_bridge", oracle=bare_tables(_PV_BRIDGE_SQL))
 def events_wow_price_volume_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Price-volume BRIDGE for the week-over-week move: each series'
     total delta decomposed into a VOLUME effect ((n₂−n₁)·old average)
@@ -4751,8 +4744,7 @@ def events_wow_price_volume_bridge(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale: one map-side-combined weekly reduction; everything after is
     |series|-row arithmetic."""
-    register_views(spark, sf_dir)
-    return spark.sql(_PV_BRIDGE_SQL)
+    return spark.sql(_PV_BRIDGE_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 NTH_EVENT_N = 5  # habit threshold: time from first to fifth event
@@ -4765,7 +4757,7 @@ WITH ordered AS (
     SELECT user_id, ts,
            ROW_NUMBER() OVER (PARTITION BY user_id
                               ORDER BY ts, event_id) AS rn
-    FROM events
+    FROM {{events}}
 ), firsts AS (
     SELECT user_id,
            MAX(CASE WHEN rn = 1 THEN ts END) AS t1,
@@ -4790,7 +4782,7 @@ FROM ranked
 """
 
 
-@query("events_time_to_nth_event", oracle=_nth_event_sql("//"))
+@query("events_time_to_nth_event", oracle=bare_tables(_nth_event_sql("//")))
 def events_time_to_nth_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Habit-formation gate: how many users ever reach their
     {NTH_EVENT_N}th event, and the median calendar point at which the
@@ -4807,8 +4799,7 @@ def events_time_to_nth_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-key window (rows filtered to ranks 1 and N before
     the per-user fold), then scalar arithmetic; the only global sort is
     the |reachers|-row median rank."""
-    register_views(spark, sf_dir)
-    return spark.sql(_nth_event_sql("DIV"))
+    return spark.sql(_nth_event_sql("DIV"), events=load_table(spark, sf_dir, "events"))
 
 
 _NRR_SQL = """
@@ -4816,13 +4807,13 @@ WITH firsts AS (
     SELECT o_custkey,
            CAST(MIN(EXTRACT(year FROM CAST(o_orderdate AS DATE))) AS INT)
                AS cohort_year
-    FROM orders GROUP BY o_custkey
+    FROM {orders} GROUP BY o_custkey
 ), yearly AS (
     SELECT o_custkey,
            CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS INT) AS yr,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(30,2))
                AS rev
-    FROM orders
+    FROM {orders}
     GROUP BY o_custkey, EXTRACT(year FROM CAST(o_orderdate AS DATE))
 ), joined AS (
     SELECT f.cohort_year, y.yr, y.rev, y.o_custkey
@@ -4848,7 +4839,7 @@ GROUP BY cohort_year
 """
 
 
-@query("customer_cohort_nrr", oracle=_NRR_SQL)
+@query("customer_cohort_nrr", oracle=bare_tables(_NRR_SQL))
 def customer_cohort_nrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Net revenue retention by acquisition cohort: each cohort's
     second-year revenue (expansion minus contraction minus churn, all
@@ -4868,8 +4859,7 @@ def customer_cohort_nrr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one customer-key reduction, one broadcastable firsts join,
     one cohort rollup — all map-side combined."""
-    register_views(spark, sf_dir)
-    return spark.sql(_NRR_SQL)
+    return spark.sql(_NRR_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # Exact discrete ship-delay quantiles per supplier nation: rank ties break
@@ -5373,7 +5363,7 @@ WITH cells AS (
                 THEN 0 ELSE 1 END AS post,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-    FROM events
+    FROM {{events}}
     GROUP BY CAST(user_id % 2 AS INT),
              CASE WHEN ts < TIMESTAMP '{DID_CUTOVER} 00:00:00'
                   THEN 0 ELSE 1 END
@@ -5403,7 +5393,7 @@ FROM wide
 """
 
 
-@query("events_did_estimator", oracle=_DID_SQL)
+@query("events_did_estimator", oracle=bare_tables(_DID_SQL))
 def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences: the quasi-experimental estimator for a
     feature launched at {DID_CUTOVER} WITHOUT holdout randomization —
@@ -5422,8 +5412,7 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combinable groupBy over the fact (4 cells out);
     everything after is constant-size.  The cleanest possible
     experiment plan — no window, no per-user state."""
-    register_views(spark, sf_dir)
-    return spark.sql(_DID_SQL)
+    return spark.sql(_DID_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -5438,7 +5427,7 @@ WITH gaps AS (
            CAST(ts AS TIMESTAMP) AS ts,
            LAG(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
                                             ORDER BY ts, event_id) AS prev_ts
-    FROM events
+    FROM {{events}}
 ), g AS (
     SELECT user_id,
            CAST(EXTRACT(EPOCH FROM ts) - EXTRACT(EPOCH FROM prev_ts)
@@ -5459,7 +5448,7 @@ WITH gaps AS (
 """
 
 
-@query("events_session_gap_sensitivity", oracle=_GAP_SENS_SQL)
+@query("events_session_gap_sensitivity", oracle=bare_tables(_GAP_SENS_SQL))
 def events_session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionizer KNOB CURVE: total session count (and sessions/user in
     basis points) at five inactivity-gap thresholds in one pass — the
@@ -5477,12 +5466,12 @@ def events_session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: one user-partitioned lag window (the sessionizer's own
     shuffle) then a map-side-combinable fold to ONE row, unpivoted to
     |τ| rows.  Adding a τ costs one more conditional sum, not a pass."""
-    register_views(spark, sf_dir)
     return spark.sql(
         _GAP_SENS_SQL.replace(
             "EXTRACT(EPOCH FROM ts) - EXTRACT(EPOCH FROM prev_ts)",
             "unix_micros(ts) / 1e6 - unix_micros(prev_ts) / 1e6",
-        ).replace("* 10000 // n_users", "* 10000 div n_users")
+        ).replace("* 10000 // n_users", "* 10000 div n_users"),
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -5495,7 +5484,7 @@ WITH feats AS (
            CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y,
            CAST(COUNT(*) AS BIGINT) AS x1,
            CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS x2
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    FROM {orders} o JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderkey, o.o_totalprice
 ), partial AS (
     SELECT fold,
@@ -5566,7 +5555,7 @@ FROM resid GROUP BY fold
 """
 
 
-@query("ml_kfold_cv_ols", oracle=_KFOLD_OLS_SQL)
+@query("ml_kfold_cv_ols", oracle=bare_tables(_KFOLD_OLS_SQL))
 def ml_kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-fold cross-validated OLS in ONE distributed pass: per-fold
     training sums come from EXACT decimal subtraction (corpus totals −
@@ -5589,8 +5578,11 @@ def ml_kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     k is the same single aggregation); the scoring join broadcasts 5
     coefficient rows back onto the fact.  The 5×1 partial×total join
     is the q11 scalar pattern."""
-    register_views(spark, sf_dir)
-    return spark.sql(_KFOLD_OLS_SQL)
+    return spark.sql(
+        _KFOLD_OLS_SQL,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -5639,12 +5631,12 @@ WITH fp AS (
         SELECT user_id, ts, event_id,
                ROW_NUMBER() OVER (PARTITION BY user_id
                                   ORDER BY ts, event_id) AS rn
-        FROM events WHERE event_type = 'purchase'
+        FROM {{events}} WHERE event_type = 'purchase'
     ) p WHERE rn = 1
 ), j AS (
     SELECT e.user_id, e.event_type AS state,
            CASE WHEN f.user_id IS NULL THEN 0 ELSE 1 END AS converted
-    FROM events e LEFT JOIN fp f ON e.user_id = f.user_id
+    FROM {{events}} e LEFT JOIN fp f ON e.user_id = f.user_id
     WHERE e.event_type <> 'purchase'
       AND (f.user_id IS NULL
            OR e.ts < f.p_ts
@@ -5664,7 +5656,7 @@ WITH fp AS (
 """
 
 
-@query("events_attribution_shapley", oracle=_shapley_sql())
+@query("events_attribution_shapley", oracle=bare_tables(_shapley_sql()))
 def events_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Shapley-value attribution over channel COALITIONS — the
     game-theoretic capstone of the attribution ladder (positional
@@ -5688,8 +5680,7 @@ def events_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-row coalition fold → 1-row pivot; the 2^|N| pivot is catalog-
     bounded, never data-bounded.  No join after the journey build, no
     driver collect, no window wider than the user partition."""
-    register_views(spark, sf_dir)
-    return spark.sql(_shapley_sql())
+    return spark.sql(_shapley_sql(), events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -5706,7 +5697,7 @@ WITH trans AS (
         SELECT event_type,
                LAG(event_type) OVER (PARTITION BY user_id
                                      ORDER BY ts, event_id) AS prev_t
-        FROM events
+        FROM {{events}}
     ) x WHERE prev_t IS NOT NULL
 ), cells AS (
     SELECT s, t, CAST(COUNT(*) AS BIGINT) AS c FROM trans GROUP BY s, t
@@ -5739,7 +5730,7 @@ _ENTROPY_ORACLE = _entropy_rate_sql("//")
 _ENTROPY_SPARK = _entropy_rate_sql("DIV")
 
 
-@query("events_entropy_rate", oracle=_ENTROPY_ORACLE)
+@query("events_entropy_rate", oracle=bare_tables(_ENTROPY_ORACLE))
 def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entropy RATE of the user-journey Markov chain — the
     one-number predictability of navigation that
@@ -5761,8 +5752,7 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user sequences); cells collapse to |types|² ≤ 25 rows and every
     later window runs on that catalog-bounded frame.  No join
     anywhere."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ENTROPY_SPARK)
+    return spark.sql(_ENTROPY_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -5827,7 +5817,7 @@ SELECT l_partkey AS pk,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                 * CAST(1 - l_discount AS DECIMAL(18,4))) * 10000 AS BIGINT)
            AS rev_tm
-FROM lineitem
+FROM {lineitem}
 GROUP BY l_partkey, CAST(DATE_TRUNC('month', CAST(l_shipdate AS DATE)) AS DATE)
 """
 
@@ -5836,7 +5826,7 @@ SELECT pk,
        CAST(SUM(rev_tm) AS BIGINT) AS rev,
        CAST(SUM(qc) AS BIGINT) AS s,
        CAST(SUM(qc * qc) AS BIGINT) AS q
-FROM abc_xyz_pm GROUP BY pk
+FROM {pm} GROUP BY pk
 """
 
 
@@ -5846,7 +5836,7 @@ def _abc_final_spark(total_rev: int) -> str:
     horizon rides a scalar subquery (guard-clean)."""
     return f"""
 WITH horizon AS (
-    SELECT CAST(COUNT(DISTINCT m) AS BIGINT) AS n_months FROM abc_xyz_pm
+    SELECT CAST(COUNT(DISTINCT m) AS BIGINT) AS n_months FROM {{pm}}
 ), classed AS (
     SELECT CASE WHEN cum_rev * 100 <= CAST({total_rev} AS BIGINT) * 80 THEN 'A'
                 WHEN cum_rev * 100 <= CAST({total_rev} AS BIGINT) * 95 THEN 'B'
@@ -5857,7 +5847,7 @@ WITH horizon AS (
                      <= s * s THEN 'Y'
                 ELSE 'Z' END AS xyz_class,
            rev
-    FROM abc_xyz_ranked
+    FROM {{ranked}}
 )
 SELECT abc_class, xyz_class,
        CAST(COUNT(*) AS BIGINT) AS n_parts,
@@ -5896,7 +5886,7 @@ FROM r GROUP BY CAST((rk - 1) * 10 // n + 1 AS BIGINT)
 _PARETO_SPEND_SPARK = """
 SELECT o_custkey AS ck,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-FROM orders GROUP BY o_custkey
+FROM {orders} GROUP BY o_custkey
 """
 
 
@@ -5923,8 +5913,10 @@ def customer_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset fold as literals, and the decile rollup is a 10-row groupBy.
     The oracle spells the same semantics as the classic single-task
     global window, proving value-identity."""
-    register_views(spark, sf_dir)
-    spend = spark.sql(_PARETO_SPEND_SPARK).withColumn(
+    spend = spark.sql(
+        _PARETO_SPEND_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+    ).withColumn(
         "one", F.lit(1).cast("long")
     )
     ranked, totals = ranked_prefix_sum(
@@ -5990,18 +5982,24 @@ def orders_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame
     parallel, driver traffic bounded at n_ranges rows.  One fact-sized
     (part, month) reduction, one part-level fold, and the 1-row horizon
     scalar subquery; output is the bounded 3×3 grid."""
-    register_views(spark, sf_dir)
     # Persist the (part, month) reduction: it feeds BOTH the prefix-sum
     # path and the horizon scalar subquery — without the cache the
     # lineitem-scale aggregation would run twice (measured 2x cold cost).
-    pm = spark.sql(_ABC_PM_SPARK).persist()
-    pm.createOrReplaceTempView("abc_xyz_pm")
-    per_part = spark.sql(_ABC_PER_PART_SPARK)
+    pm = spark.sql(
+        _ABC_PM_SPARK,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+    ).persist()
+    # Bound through a no-op filter, not as the cached frame itself:
+    # spark.sql drops its per-call views on return, and dropping a view
+    # uncaches every cache entry whose plan matches the view's up to
+    # projections and aliases.  The optimizer removes the filter, so the
+    # plan reads the cache exactly as before.
+    pm_in = pm.filter(F.lit(True))
+    per_part = spark.sql(_ABC_PER_PART_SPARK, pm=pm_in)
     ranked, totals = ranked_prefix_sum(
         per_part, [F.desc("rev"), F.asc("pk")], ["rev"]
     )
-    ranked.createOrReplaceTempView("abc_xyz_ranked")
-    return spark.sql(_abc_final_spark(totals["rev"]))
+    return spark.sql(_abc_final_spark(totals["rev"]), pm=pm_in, ranked=ranked)
 
 
 # --------------------------------------------------------------------------
@@ -6013,7 +6011,7 @@ def _aging_sql(day_idx_o: str) -> str:
     """Shared aging-report text; epoch-day spelling per dialect."""
     return f"""
 WITH anchor AS (
-    SELECT MAX({day_idx_o}) AS snap FROM orders
+    SELECT MAX({day_idx_o}) AS snap FROM {{orders}}
 ), aged AS (
     -- scalar subquery, not CROSS JOIN anchor (see stat_runs_test_daily)
     SELECT CASE WHEN (SELECT snap FROM anchor) - {day_idx_o} <= 30
@@ -6024,7 +6022,7 @@ WITH anchor AS (
                      THEN '061-090'
                 ELSE '091+' END AS age_bucket,
            o_totalprice
-    FROM orders
+    FROM {{orders}}
     WHERE o_orderstatus = 'O'
 )
 SELECT age_bucket,
@@ -6041,7 +6039,7 @@ _AGING_ORACLE = _aging_sql(
 _AGING_SPARK = _aging_sql("UNIX_DATE(CAST(o_orderdate AS DATE))")
 
 
-@query("orders_receivable_aging", oracle=_AGING_ORACLE)
+@query("orders_receivable_aging", oracle=bare_tables(_AGING_ORACLE))
 def orders_receivable_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Receivable/backlog AGING report: open ('O'-status) orders
     bucketed by days outstanding at the snapshot edge (the max order
@@ -6059,8 +6057,7 @@ def orders_receivable_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE fact pass — the anchor rides a scalar subquery
     (guard-clean), then a map-side-combinable groupBy to 4 rows.  No
     window over the fact, no join at all."""
-    register_views(spark, sf_dir)
-    return spark.sql(_AGING_SPARK)
+    return spark.sql(_AGING_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 # --------------------------------------------------------------------------
@@ -6074,14 +6071,14 @@ SELECT o_totalprice AS v,
        CAST(COUNT(*) AS BIGINT) AS cnt,
        CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END)
             AS BIGINT) AS pos
-FROM orders GROUP BY o_totalprice
+FROM {orders} GROUP BY o_totalprice
 """
 
 
 def _brier_closing(src: str) -> str:
     """Murphy-decomposition terms + fold over a binned relation
     (bin, n_k, pos_k, fn_k, n, p) — one shared text for the oracle CTE
-    and the Spark temp view over the two-phase fold (CTE-continuation
+    and the Spark-side two-phase fold (CTE-continuation
     form — prepend WITH or a preceding CTE list)."""
     return f"""terms AS (
     SELECT n, p,
@@ -6150,7 +6147,7 @@ WITH per_value AS ({_brier_per_value_sql()}
 _BRIER_ORACLE = _brier_oracle()
 
 
-@query("ml_brier_decomposition", oracle=_BRIER_ORACLE)
+@query("ml_brier_decomposition", oracle=bare_tables(_BRIER_ORACLE))
 def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Murphy decomposition of the Brier score — Brier = reliability −
     resolution + uncertainty — for the shared "order total predicts
@@ -6178,8 +6175,10 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the offset fold (so the former SUM() OVER () stages are gone
     entirely); the decile fold and the shared closing text
     (_brier_closing) run on ten rows.  No join."""
-    register_views(spark, sf_dir)
-    per_value = spark.sql(_brier_per_value_sql())
+    per_value = spark.sql(
+        _brier_per_value_sql(),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["cnt", "pos"])
     n, p = int(totals["cnt"]), int(totals["pos"])
     fnum = (2 * F.col("cum_cnt") - F.col("cnt")).cast("long")
@@ -6196,8 +6195,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n", F.lit(n).cast("long"))
         .withColumn("p", F.lit(p).cast("long"))
     )
-    binned.createOrReplaceTempView("_brier_binned")
-    return spark.sql("WITH " + _brier_closing("_brier_binned"))
+    return spark.sql("WITH " + _brier_closing("{binned}"), binned=binned)
 
 
 # --------------------------------------------------------------------------
@@ -6219,7 +6217,7 @@ WITH monthly AS (
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
                AS rev_cents,
            CAST(COUNT(*) AS BIGINT) AS n_orders
-    FROM orders
+    FROM {{orders}}
     GROUP BY EXTRACT(YEAR FROM o_orderdate) * 12
              + EXTRACT(MONTH FROM o_orderdate) - 1
 )
@@ -6235,7 +6233,7 @@ LEFT JOIN monthly prior ON prior.ym = cur.ym - 12
 """
 
 
-@query("orders_yoy_growth", oracle=_yoy_sql("//"))
+@query("orders_yoy_growth", oracle=bare_tables(_yoy_sql("//")))
 def orders_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year monthly revenue growth — the seasonality-immune
     growth headline that the WoW family (events_wow_change,
@@ -6256,8 +6254,7 @@ def orders_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized monthly reduction, then a |months|×|months|
     self-equi-join on a calendar-bounded table — hash join, trivially
     broadcastable; no window at all."""
-    register_views(spark, sf_dir)
-    return spark.sql(_yoy_sql("DIV"))
+    return spark.sql(_yoy_sql("DIV"), orders=load_table(spark, sf_dir, "orders"))
 
 
 # --------------------------------------------------------------------------
@@ -6273,10 +6270,10 @@ WITH per_part AS (
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                     * CAST(1 - l_discount AS DECIMAL(18,4))) * 10000 AS BIGINT)
                AS rev_tc
-    FROM lineitem GROUP BY l_partkey
+    FROM {{lineitem}} GROUP BY l_partkey
 ), branded AS (
     SELECT p.p_brand, pp.n_suppliers, pp.rev_tc
-    FROM per_part pp JOIN part p ON p.p_partkey = pp.pk
+    FROM per_part pp JOIN {{part}} p ON p.p_partkey = pp.pk
 )
 SELECT p_brand,
        CAST(COUNT(*) AS BIGINT) AS n_parts,
@@ -6293,7 +6290,7 @@ GROUP BY p_brand
 """
 
 
-@query("parts_single_source_risk", oracle=_single_source_sql("//"))
+@query("parts_single_source_risk", oracle=bare_tables(_single_source_sql("//")))
 def parts_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-sourcing EXPOSURE by brand — the actionable companion to
     parts_supplier_hhi: HHI scores concentration on a continuous index,
@@ -6313,8 +6310,11 @@ def parts_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the exact bitmap fold of agg_bitmap_exact_distinct if supplier
     cardinality per part is large — here it is ≤ single digits), one
     broadcast-sized dim join on part, and a |brands|-row rollup."""
-    register_views(spark, sf_dir)
-    return spark.sql(_single_source_sql("DIV"))
+    return spark.sql(
+        _single_source_sql("DIV"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -6323,7 +6323,7 @@ def parts_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SRM_SQL = """
 WITH assign AS (
-    SELECT DISTINCT user_id, CAST(user_id % 2 AS BIGINT) AS arm FROM events
+    SELECT DISTINCT user_id, CAST(user_id % 2 AS BIGINT) AS arm FROM {events}
 ), counts AS (
     SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_control,
@@ -6342,7 +6342,7 @@ FROM counts
 """
 
 
-@query("events_srm_check", oracle=_SRM_SQL)
+@query("events_srm_check", oracle=bare_tables(_SRM_SQL))
 def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-Ratio Mismatch guardrail — the FIRST check any experiment
     readout must pass: with a 50/50 deterministic split (user_id parity,
@@ -6358,15 +6358,14 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one DISTINCT user reduction (map-side combinable) and a
     2-cell fold.  No window, no join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SRM_SQL)
+    return spark.sql(_SRM_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 _MDE_SQL = """
 WITH pts AS (
     SELECT event_type, CAST(user_id % 2 AS BIGINT) AS arm,
            CAST(value AS DECIMAL(18,4)) AS v
-    FROM events
+    FROM {events}
 ), per_arm AS (
     SELECT event_type, arm, CAST(COUNT(*) AS BIGINT) AS n,
            SUM(v) AS s, SUM(v * v) AS q
@@ -6400,7 +6399,7 @@ FROM vars
 """
 
 
-@query("events_power_analysis_mde", oracle=_MDE_SQL)
+@query("events_power_analysis_mde", oracle=bare_tables(_MDE_SQL))
 def events_power_analysis_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimum Detectable Effect at the CURRENT sample — the "is this
     experiment even worth reading yet?" number: with the observed
@@ -6418,8 +6417,7 @@ def events_power_analysis_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one (event_type, arm) map-side-combinable aggregation; the
     control⋈treat pairing is a |types|-row self-join.  No window."""
-    register_views(spark, sf_dir)
-    return spark.sql(_MDE_SQL)
+    return spark.sql(_MDE_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -6468,8 +6466,10 @@ def customer_spend_ntile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one two-phase pass over |customers| (rank + running cents +
     grand totals together); the band rollup is a 5-row groupBy.  No
     unpartitioned window anywhere in the Spark plan."""
-    register_views(spark, sf_dir)
-    spend = spark.sql(_PARETO_SPEND_SPARK).withColumn("one", F.lit(1).cast("long"))
+    spend = spark.sql(
+        _PARETO_SPEND_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+    ).withColumn("one", F.lit(1).cast("long"))
     ranked, totals = ranked_prefix_sum(
         spend, [F.desc("cents"), F.asc("ck")], ["cents", "one"]
     )
@@ -6516,10 +6516,10 @@ def customer_spend_ntile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 KRALJIC_RISK_MAX_SUPPLIERS = 2  # <= this many observed suppliers = high risk
 
 
-def _kraljic_report_sql(cum_src: str) -> str:
+def _kraljic_report_sql(cum_src: str, parts_src: str) -> str:
     """Shared quadrant report over a cumulative revenue-distribution
     relation ``{cum_src}`` (v, cum_c, n_total) and the per-part facts
-    view ``kraljic_parts``; the median fence rides a scalar subquery."""
+    relation ``{parts_src}``; the median fence rides a scalar subquery."""
     med = f"(SELECT MIN(v) FROM {cum_src} WHERE cum_c * 2 >= n_total)"
     # fence subquery in a pre-aggregation projection: Spark rejects
     # scalar subqueries inside GROUP BY expressions (and inside
@@ -6528,7 +6528,7 @@ def _kraljic_report_sql(cum_src: str) -> str:
 SELECT quadrant,
        CAST(COUNT(*) AS BIGINT) AS n_parts,
        CAST(SUM(rev) AS DOUBLE) * 1000000e0
-           / (SELECT CAST(SUM(rev) AS DOUBLE) FROM kraljic_parts)
+           / (SELECT CAST(SUM(rev) AS DOUBLE) FROM {parts_src})
            AS rev_share_ppm
 FROM (
     SELECT rev,
@@ -6539,7 +6539,7 @@ FROM (
                 WHEN n_suppliers <= {KRALJIC_RISK_MAX_SUPPLIERS}
                      THEN 'bottleneck'
                 ELSE 'non_critical' END AS quadrant
-    FROM kraljic_parts
+    FROM {parts_src}
 ) classified
 GROUP BY quadrant
 """
@@ -6551,7 +6551,7 @@ SELECT l_partkey AS pk,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                 * CAST(1 - l_discount AS DECIMAL(18,4))) * 10000 AS BIGINT)
            AS rev
-FROM lineitem GROUP BY l_partkey
+FROM {lineitem} GROUP BY l_partkey
 """
 
 _KRALJIC_ORACLE = f"""
@@ -6567,11 +6567,11 @@ WITH kraljic_parts AS (
            CAST(SUM(c) OVER () AS BIGINT) AS n_total
     FROM pv
 )
-{_kraljic_report_sql("cumv")}
+{_kraljic_report_sql("cumv", "kraljic_parts")}
 """
 
 
-@query("parts_kraljic_matrix", oracle=_KRALJIC_ORACLE)
+@query("parts_kraljic_matrix", oracle=bare_tables(_KRALJIC_ORACLE))
 def parts_kraljic_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kraljic procurement portfolio matrix — every part classified by
     PROFIT IMPACT (discounted revenue vs the exact median part) ×
@@ -6592,18 +6592,22 @@ def parts_kraljic_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the two-phase ranked_prefix_sum over the revenue-distinct
     table (no unpartitioned window); the quadrant rollup is a 4-row
     groupBy with scalar-subquery fences (guard-clean)."""
-    register_views(spark, sf_dir)
-    parts = spark.sql(_KRALJIC_PARTS_SQL).persist()
-    parts.createOrReplaceTempView("kraljic_parts")
+    parts = spark.sql(
+        _KRALJIC_PARTS_SQL,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+    ).persist()
+    # bound through a no-op filter, as in orders_abc_xyz_classification
+    parts_in = parts.filter(F.lit(True))
     pv = spark.sql(
-        "SELECT rev AS v, CAST(COUNT(*) AS BIGINT) AS c "
-        "FROM kraljic_parts GROUP BY rev"
+        "SELECT rev AS v, CAST(COUNT(*) AS BIGINT) AS c FROM {parts} GROUP BY rev",
+        parts=parts_in,
     )
     ranked, totals = ranked_prefix_sum(pv, [F.asc("v")], ["c"])
-    ranked.withColumn(
-        "n_total", F.lit(totals["c"]).cast("long")
-    ).createOrReplaceTempView("r8_kraljic_cum")
-    return spark.sql(_kraljic_report_sql("r8_kraljic_cum"))
+    return spark.sql(
+        _kraljic_report_sql("{cum}", "{parts}"),
+        cum=ranked.withColumn("n_total", F.lit(totals["c"]).cast("long")),
+        parts=parts_in,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -6618,7 +6622,7 @@ WITH demand AS (
     SELECT l_partkey,
            CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS BIGINT)
                AS demand_e2
-    FROM lineitem GROUP BY l_partkey
+    FROM {{lineitem}} GROUP BY l_partkey
 )
 SELECT p.p_partkey,
        d.demand_e2,
@@ -6628,11 +6632,11 @@ SELECT p.p_partkey,
            / SQRT(2e0 * (CAST(d.demand_e2 AS DOUBLE) / 100e0)
                    * {EOQ_ORDER_COST}
                    / ({EOQ_HOLD_RATE} * p.p_retailprice)) AS orders_per_horizon
-FROM demand d JOIN part p ON p.p_partkey = d.l_partkey
+FROM demand d JOIN {{part}} p ON p.p_partkey = d.l_partkey
 """
 
 
-@query("parts_eoq_policy", oracle=_EOQ_SQL)
+@query("parts_eoq_policy", oracle=bare_tables(_EOQ_SQL))
 def parts_eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Economic order quantity (Harris 1913 / Wilson) per part:
     EOQ = sqrt(2DS/H) with observed-horizon demand D from lineitem,
@@ -6652,8 +6656,11 @@ def parts_eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combinable lineitem groupBy to |parts| rows,
     then a broadcast-sized dim join.  No window, no skew surface."""
-    register_views(spark, sf_dir)
-    return spark.sql(_EOQ_SQL)
+    return spark.sql(
+        _EOQ_SQL,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -6664,7 +6671,7 @@ def parts_eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bgnbd_sql(dd: str) -> str:
     return f"""
 WITH horizon AS (
-    SELECT MAX(CAST(o_orderdate AS DATE)) AS h FROM orders
+    SELECT MAX(CAST(o_orderdate AS DATE)) AS h FROM {{orders}}
 ), per_cust AS (
     SELECT o_custkey,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -6672,7 +6679,7 @@ WITH horizon AS (
            MAX(CAST(o_orderdate AS DATE)) AS last_d,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
                AS monetary_cents
-    FROM orders GROUP BY o_custkey
+    FROM {{orders}} GROUP BY o_custkey
 )
 SELECT o_custkey AS c_custkey,
        n_orders - 1 AS frequency,
@@ -6692,7 +6699,7 @@ _BGNBD_SPARK = (
 )
 
 
-@query("customer_bgnbd_inputs", oracle=_BGNBD_ORACLE)
+@query("customer_bgnbd_inputs", oracle=bare_tables(_BGNBD_ORACLE))
 def customer_bgnbd_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BG/NBD / Pareto-NBD input contract — the canonical
     per-customer summary every probabilistic-CLV fit consumes
@@ -6711,8 +6718,7 @@ def customer_bgnbd_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combinable orders groupBy to |customers| rows;
     the horizon is a 1-row fold consumed as a scalar subquery.  No
     window, no join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BGNBD_SPARK)
+    return spark.sql(_BGNBD_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 # Split-conformal prediction interval for the daily-revenue trend model —
@@ -6730,7 +6736,7 @@ def _conformal_sql(day_idx: str, idiv: str) -> str:
 WITH daily AS (
     SELECT CAST({day_idx} AS BIGINT) AS x,
            CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS y
-    FROM events WHERE value IS NOT NULL
+    FROM {{events}} WHERE value IS NOT NULL
     GROUP BY CAST({day_idx} AS BIGINT)
 ), cal AS (
     SELECT x, y FROM daily WHERE x % 2 = 0
@@ -6788,7 +6794,7 @@ _CONF_SPARK = _conformal_sql(
 )
 
 
-@query("ml_conformal_daily_interval", oracle=_CONF_ORACLE)
+@query("ml_conformal_daily_interval", oracle=bare_tables(_CONF_ORACLE))
 def ml_conformal_daily_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPLIT-CONFORMAL prediction interval for the daily-revenue trend
     model — the distribution-free uncertainty wrapper the ML family
@@ -6811,8 +6817,7 @@ def ml_conformal_daily_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     window orders |days| rows — calendar-bounded (the day-spine
     allowlist family); everything else is scalar subqueries over
     1-row folds."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CONF_SPARK)
+    return spark.sql(_CONF_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -6833,7 +6838,7 @@ def _safety_stock_sql(day_expr: str) -> str:
 WITH daily AS (
     SELECT p.p_brand AS brand, {day_expr} AS d,
            CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS q
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {{lineitem}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
     GROUP BY p.p_brand, {day_expr}
 ), folds AS (
     SELECT brand,
@@ -6868,7 +6873,7 @@ _SS_ORACLE = _safety_stock_sql("CAST(date_trunc('day', l.l_shipdate) AS DATE)")
 _SS_SPARK = _safety_stock_sql("CAST(DATE_TRUNC('DAY', l.l_shipdate) AS DATE)")
 
 
-@query("parts_safety_stock_reorder", oracle=_SS_ORACLE)
+@query("parts_safety_stock_reorder", oracle=bare_tables(_SS_ORACLE))
 def parts_safety_stock_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Safety stock and reorder point per brand — the inventory-policy
     closer for the procurement suite: Kraljic says WHAT matters, ABC
@@ -6886,8 +6891,11 @@ def parts_safety_stock_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one (brand, day) map-side-combinable rollup with a
     broadcast part join, then a |brands|-row fold.  No window."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SS_SPARK)
+    return spark.sql(
+        _SS_SPARK,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+    )
 
 
 NEWSVENDOR_CR_PCT = 80  # critical ratio cu/(cu+co) as a percent
@@ -6903,7 +6911,7 @@ def _newsvendor_sql(day_expr: str) -> str:
 WITH daily AS (
     SELECT p.p_brand AS brand, {day_expr} AS d,
            CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS q
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {{lineitem}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
     GROUP BY p.p_brand, {day_expr}
 ), per_q AS (
     SELECT brand, q, CAST(COUNT(*) AS BIGINT) AS c
@@ -6929,7 +6937,7 @@ _NV_ORACLE = _newsvendor_sql("CAST(date_trunc('day', l.l_shipdate) AS DATE)")
 _NV_SPARK = _newsvendor_sql("CAST(DATE_TRUNC('DAY', l.l_shipdate) AS DATE)")
 
 
-@query("parts_newsvendor_quantity", oracle=_NV_ORACLE)
+@query("parts_newsvendor_quantity", oracle=bare_tables(_NV_ORACLE))
 def parts_newsvendor_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newsvendor optimal stocking quantity per brand — the
     single-period inventory decision beside the continuous-review pair
@@ -6947,5 +6955,8 @@ def parts_newsvendor_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: (brand, day) rollup, then a brand-PARTITIONED window over
     each brand's |distinct demand| frame (per-group, never global) —
     the weighted-median posture.  No unpartitioned window."""
-    register_views(spark, sf_dir)
-    return spark.sql(_NV_SPARK)
+    return spark.sql(
+        _NV_SPARK,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
+    )

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.operators.graph import co_occurrence_pairs
 from etl_pipeline_aws_spark.registry import query
 
@@ -201,12 +201,12 @@ WITH ordered AS (
     SELECT o_custkey, o_orderkey,
            ROW_NUMBER() OVER (PARTITION BY o_custkey
                               ORDER BY o_orderdate, o_orderkey) AS rn
-    FROM orders
+    FROM {orders}
 ), items AS (
     SELECT DISTINCT o.o_custkey, o.rn, p.p_brand
     FROM ordered o
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN part p ON p.p_partkey = l.l_partkey
+    JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
+    JOIN {part} p ON p.p_partkey = l.l_partkey
 ), trans AS (
     SELECT DISTINCT a.o_custkey, a.p_brand AS brand_from,
            b.p_brand AS brand_to, a.rn
@@ -226,7 +226,10 @@ FROM margins
 """
 
 
-@query("basket_brand_transitions", oracle=_BRAND_TRANS_SQL.replace("{idiv}", "//"))
+@query(
+    "basket_brand_transitions",
+    oracle=bare_tables(_BRAND_TRANS_SQL.replace("{idiv}", "//")),
+)
 def basket_brand_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Next-basket brand migration: for every customer's CONSECUTIVE
     order pair (ranked by date), which brands follow which — the
@@ -247,5 +250,9 @@ def basket_brand_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     transition cost is |basket|² at the BRAND grain (bounded by the
     25-brand catalog, not by basket size); the matrix is |brands)|²
     rows and its margin window runs on that bounded table."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BRAND_TRANS_SQL.replace("{idiv}", "DIV"))
+    return spark.sql(
+        _BRAND_TRANS_SQL.replace("{idiv}", "DIV"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        orders=load_table(spark, sf_dir, "orders"),
+        part=load_table(spark, sf_dir, "part"),
+    )

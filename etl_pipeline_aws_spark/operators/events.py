@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.functions.numeric import dsum
 from etl_pipeline_aws_spark.registry import query
 
@@ -574,7 +574,7 @@ WITH spans AS (
     SELECT user_id, CAST(ts AS DATE) AS day,
            CAST(MIN({epoch_us}(ts)) AS BIGINT) AS s,
            CAST(MAX({epoch_us}(ts)) AS BIGINT) AS e
-    FROM events
+    FROM {{events}}
     GROUP BY user_id, CAST(ts AS DATE)
     HAVING COUNT(*) >= 2
 ), pairs AS (
@@ -602,7 +602,7 @@ _ALLEN_ORACLE = _allen_sql("epoch_us")
 _ALLEN_SPARK = _allen_sql("unix_micros")
 
 
-@query("interval_allen_relations", oracle=_ALLEN_ORACLE)
+@query("interval_allen_relations", oracle=bare_tables(_ALLEN_ORACLE))
 def interval_allen_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Allen's interval algebra over same-day user activity spans — the
     COMPLETE classification of how two intervals can relate (before /
@@ -626,10 +626,7 @@ def interval_allen_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     family's shape); per-day pair counts are the documented quadratic
     tier — cap or bucket users-per-day at fact scale (the
     events_copresence_topk treatment)."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_ALLEN_SPARK)
+    return spark.sql(_ALLEN_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 COVERAGE_TTL_MIN = 30  # each event opens a 30-minute activity interval
@@ -643,7 +640,7 @@ WITH iv AS (
     SELECT user_id,
            {micros_fn} AS s,
            {micros_fn} + {ttl_us} AS e
-    FROM events
+    FROM {{events}}
 ), marked AS (
     SELECT user_id, s, e,
            MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
@@ -673,7 +670,7 @@ FROM merged GROUP BY user_id
 
 @query(
     "events_active_coverage_union",
-    oracle=_coverage_sql("epoch_us(ts)"),
+    oracle=bare_tables(_coverage_sql("epoch_us(ts)")),
 )
 def events_active_coverage_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total ACTIVE time per user as an interval UNION: every event opens
@@ -697,5 +694,7 @@ def events_active_coverage_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two windows and one reduction, all partitioned on user_id —
     one user-key shuffle total; no per-pair work, so a user with 10⁶
     events costs 10⁶ log-sorted rows, never 10¹² pairs."""
-    register_views(spark, sf_dir)
-    return spark.sql(_coverage_sql("unix_micros(ts)"))
+    return spark.sql(
+        _coverage_sql("unix_micros(ts)"),
+        events=load_table(spark, sf_dir, "events"),
+    )

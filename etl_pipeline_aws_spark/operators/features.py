@@ -19,14 +19,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pipeline_aws_spark.catalog import register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.registry import query
 
 _TARGET_ENC_SQL = """
 WITH joined AS (
     SELECT c.c_mktsegment AS segment,
            CAST(o.o_totalprice AS DECIMAL(18,2)) AS y
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
 ), seg AS (
     SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_g, SUM(y) AS s_g
     FROM joined GROUP BY segment
@@ -44,7 +44,7 @@ FROM with_prior
 """
 
 
-@query("feature_target_encoding", oracle=_TARGET_ENC_SQL)
+@query("feature_target_encoding", oracle=bare_tables(_TARGET_ENC_SQL))
 def feature_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Smoothed target (mean) encoding of customer market segment against
     order value — the leakage-prone-but-ubiquitous categorical encoder,
@@ -60,14 +60,17 @@ def feature_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the fact reduces to |segments| rows before any window; the
     join to customer is the standard broadcast-dim pattern."""
-    register_views(spark, sf_dir)
-    return spark.sql(_TARGET_ENC_SQL)
+    return spark.sql(
+        _TARGET_ENC_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 _WINSOR_SQL = """
 WITH g AS (
     SELECT o_orderpriority AS grp, CAST(o_totalprice AS DECIMAL(18,2)) AS x
-    FROM orders
+    FROM {orders}
 ), ranked AS (
     SELECT grp, x,
            ROW_NUMBER() OVER (PARTITION BY grp ORDER BY x) AS rn,
@@ -100,7 +103,7 @@ GROUP BY grp
 """
 
 
-@query("feature_winsorize", oracle=_WINSOR_SQL)
+@query("feature_winsorize", oracle=bare_tables(_WINSOR_SQL))
 def feature_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group winsorization at [p1, p99]: order totals clipped to the
     group's 1st/99th percentile — the outlier treatment that keeps every
@@ -114,21 +117,20 @@ def feature_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: rank window partitions on the group key; bounds are
     |groups| rows broadcast back onto the fact."""
-    register_views(spark, sf_dir)
-    return spark.sql(_WINSOR_SQL)
+    return spark.sql(_WINSOR_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 _CATCAP_SQL = """
 WITH counts AS (
     SELECT event_type, CAST(COUNT(*) AS BIGINT) AS c
-    FROM events GROUP BY event_type
+    FROM {events} GROUP BY event_type
 ), topn AS (
     SELECT event_type FROM counts
     ORDER BY c DESC, event_type LIMIT 3
 ), mapped AS (
     SELECT e.user_id,
            COALESCE(t.event_type, 'other') AS feature_key
-    FROM events e LEFT JOIN topn t ON e.event_type = t.event_type
+    FROM {events} e LEFT JOIN topn t ON e.event_type = t.event_type
 )
 SELECT user_id, feature_key, CAST(COUNT(*) AS BIGINT) AS n
 FROM mapped
@@ -136,7 +138,7 @@ GROUP BY user_id, feature_key
 """
 
 
-@query("feature_category_capping", oracle=_CATCAP_SQL)
+@query("feature_category_capping", oracle=bare_tables(_CATCAP_SQL))
 def feature_category_capping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N category capping (the 'other' bucket): per-user counts over
     a vocabulary capped to the 3 most frequent event types, every other
@@ -150,8 +152,7 @@ def feature_category_capping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: vocabulary selection reduces to |types| rows; the cap join is
     a 3-row broadcast; output is |users|×≤4."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CATCAP_SQL)
+    return spark.sql(_CATCAP_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 def _robust_scaler_sql(idiv: str) -> str:
@@ -163,7 +164,7 @@ def _robust_scaler_sql(idiv: str) -> str:
 WITH g AS (
     SELECT c_custkey, c_mktsegment AS seg,
            CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-    FROM customer
+    FROM {{customer}}
 ), ranked AS (
     SELECT seg, c_custkey, cents,
            ROW_NUMBER() OVER (PARTITION BY seg ORDER BY cents, c_custkey) AS rn,
@@ -193,7 +194,7 @@ _ROBUST_SCALER_ORACLE = _robust_scaler_sql("//")
 _ROBUST_SCALER_SPARK = _robust_scaler_sql("DIV")
 
 
-@query("feature_robust_scaler", oracle=_ROBUST_SCALER_ORACLE)
+@query("feature_robust_scaler", oracle=bare_tables(_ROBUST_SCALER_ORACLE))
 def feature_robust_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment robust scaling of account balances: (x - median)/IQR
     — the scaler of choice when the column has outliers (z-score's mean
@@ -211,8 +212,10 @@ def feature_robust_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one window partitioned by segment (bounded partitions), one
     |segments|-row broadcast join back to the fact."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ROBUST_SCALER_SPARK)
+    return spark.sql(
+        _ROBUST_SCALER_SPARK,
+        customer=load_table(spark, sf_dir, "customer"),
+    )
 
 
 # Leave-one-out leakage audit for the target encoder: per-row gap between
@@ -222,7 +225,7 @@ _LEAKAGE_AUDIT_SQL = """
 WITH joined AS (
     SELECT c.c_mktsegment AS segment,
            CAST(o.o_totalprice AS DECIMAL(18,2)) AS y
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
 ), seg AS (
     SELECT segment, y,
            COUNT(*) OVER (PARTITION BY segment) AS n_g,
@@ -248,7 +251,7 @@ FROM gaps GROUP BY segment
 """
 
 
-@query("ml_leakage_audit_target_encoding", oracle=_LEAKAGE_AUDIT_SQL)
+@query("ml_leakage_audit_target_encoding", oracle=bare_tables(_LEAKAGE_AUDIT_SQL))
 def ml_leakage_audit_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Target-encoding leakage audit — QUANTIFIES what the encoder's
     docstring only warns about: the naive full-fit encoding includes
@@ -268,5 +271,8 @@ def ml_leakage_audit_target_encoding(spark: SparkSession, sf_dir: str) -> DataFr
 
     Scale: two window passes over the joined fact (segment-keyed +
     global), then a |segments|-row fold."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LEAKAGE_AUDIT_SQL)
+    return spark.sql(
+        _LEAKAGE_AUDIT_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )

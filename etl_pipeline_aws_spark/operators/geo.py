@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pipeline_aws_spark.catalog import register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.registry import query
 
 # Synthetic positions in integer micro-degrees: lat in [-90e6, 90e6),
@@ -50,7 +50,7 @@ _CUST_PTS = """
                AS latm,
            ((c_custkey % 999983) * 1540483477) % 360000000 - 180000000
                AS lonm
-    FROM customer
+    FROM {customer}
 """
 _SUP_PTS = """
     SELECT s_suppkey,
@@ -58,7 +58,7 @@ _SUP_PTS = """
                AS latm,
            ((s_suppkey % 1000033) * 2654435769) % 360000000 - 180000000
                AS lonm
-    FROM supplier
+    FROM {supplier}
 """
 
 # Radius join: cell edge 5e6 micro-deg >= radius 2e6 micro-deg.
@@ -116,7 +116,10 @@ FROM sup s LEFT JOIN agg a ON a.s_suppkey = s.s_suppkey
 """
 
 
-@query("geo_grid_radius_join", oracle=_radius_join_sql("//", _UNNEST9_DUCK))
+@query(
+    "geo_grid_radius_join",
+    oracle=bare_tables(_radius_join_sql("//", _UNNEST9_DUCK)),
+)
 def geo_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed radius join: for every supplier, the customers within
     a 2-degree planar radius — count, squared distance to the nearest,
@@ -138,8 +141,11 @@ def geo_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies only the small side by 9.  Skewed cells are AQE-splittable
     because the join IS a shuffle hash join.  The per-supplier window
     runs partitioned (bounded by the supplier's own candidate count)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_radius_join_sql("DIV", _UNNEST9_SPARK))
+    return spark.sql(
+        _radius_join_sql("DIV", _UNNEST9_SPARK),
+        customer=load_table(spark, sf_dir, "customer"),
+        supplier=load_table(spark, sf_dir, "supplier"),
+    )
 
 
 # Multi-resolution rollup: 45 / 15 / 5 degree cells (level 0/1/2).
@@ -181,7 +187,10 @@ FROM topped GROUP BY lvl, cell_sz
 """
 
 
-@query("geo_cell_rollup_multires", oracle=_multires_sql("//", _UNNEST3_DUCK))
+@query(
+    "geo_cell_rollup_multires",
+    oracle=bare_tables(_multires_sql("//", _UNNEST3_DUCK)),
+)
 def geo_cell_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-resolution spatial occupancy rollup — the resolution ADVISOR
     for every grid-bucketed operator in this module: bucket the customer
@@ -199,8 +208,10 @@ def geo_cell_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-scan explode (x3) into a map-side-combinable groupBy
     on (level, cell) — bounded output (sum of grid sizes); the max-window
     runs partitioned by level over that bounded cell table."""
-    register_views(spark, sf_dir)
-    return spark.sql(_multires_sql("DIV", _UNNEST3_SPARK))
+    return spark.sql(
+        _multires_sql("DIV", _UNNEST3_SPARK),
+        customer=load_table(spark, sf_dir, "customer"),
+    )
 
 
 # DBSCAN core points: eps 8e6 micro-deg (cell edge 10e6 >= eps), minPts 4.
@@ -243,7 +254,7 @@ GROUP BY t.c_nationkey
 """
 
 
-@query("geo_dbscan_core_points", oracle=_dbscan_sql("//", _UNNEST9_DUCK))
+@query("geo_dbscan_core_points", oracle=bare_tables(_dbscan_sql("//", _UNNEST9_DUCK)))
 def geo_dbscan_core_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN stage 1 at scale — core-point detection: a customer is CORE
     when >= 4 other customers sit within an 8-degree planar eps; reported
@@ -263,8 +274,10 @@ def geo_dbscan_core_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     density (the eps-vs-cell-size invariant); the advisor op picks the
     cell size that keeps hot-cell candidate products bounded.  One
     groupBy per point, one bounded per-nation rollup."""
-    register_views(spark, sf_dir)
-    return spark.sql(_dbscan_sql("DIV", _UNNEST9_SPARK))
+    return spark.sql(
+        _dbscan_sql("DIV", _UNNEST9_SPARK),
+        customer=load_table(spark, sf_dir, "customer"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -347,7 +360,7 @@ FROM nbr WHERE n_nbr >= {_DBSCAN_MINPTS}
 
 @query(
     "pipeline_geo_e2e",
-    oracle=_geo_e2e_sql("//", _UNNEST9_DUCK, _UNNEST3_DUCK),
+    oracle=bare_tables(_geo_e2e_sql("//", _UNNEST9_DUCK, _UNNEST3_DUCK)),
 )
 def pipeline_geo_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The geo family composed END TO END over ONE synthetic point
@@ -365,5 +378,8 @@ def pipeline_geo_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry; grid equi-joins; bounded rollups) — see the module
     header.  One customers scan feeds all three stages; output is a
     6-row manifest."""
-    register_views(spark, sf_dir)
-    return spark.sql(_geo_e2e_sql("DIV", _UNNEST9_SPARK, _UNNEST3_SPARK))
+    return spark.sql(
+        _geo_e2e_sql("DIV", _UNNEST9_SPARK, _UNNEST3_SPARK),
+        customer=load_table(spark, sf_dir, "customer"),
+        supplier=load_table(spark, sf_dir, "supplier"),
+    )

@@ -31,7 +31,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.functions.fixpoint import CHANGED, fixpoint
 from etl_pipeline_aws_spark.registry import query, rows_only_query
 
@@ -994,7 +994,7 @@ def graph_item_cf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GRAPH_EDGE_CTE = """
 WITH pairs AS (
     SELECT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM lineitem a JOIN lineitem b
+    FROM {lineitem} a JOIN {lineitem} b
       ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
     GROUP BY a.l_partkey, b.l_partkey
     HAVING COUNT(*) >= 2
@@ -1030,7 +1030,7 @@ FROM sums
 """
 
 
-@query("graph_degree_assortativity", oracle=_ASSORT_SQL)
+@query("graph_degree_assortativity", oracle=bare_tables(_ASSORT_SQL))
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the supported part co-occurrence graph —
     Newman's r: the Pearson correlation of endpoint degrees over edges.
@@ -1050,10 +1050,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edge build is the bounded <=7-line-order self-join; the two
     degree joins shuffle on node keys; the fold is map-side combined to
     6 cells."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_ASSORT_SQL)
+    return spark.sql(_ASSORT_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 def _clustering_sql(idiv: str) -> str:
@@ -1082,7 +1079,7 @@ _CLUSTERING_ORACLE = _clustering_sql("//")
 _CLUSTERING_SPARK = _clustering_sql("DIV")
 
 
-@query("graph_global_clustering", oracle=_CLUSTERING_ORACLE)
+@query("graph_global_clustering", oracle=bare_tables(_CLUSTERING_ORACLE))
 def graph_global_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global clustering coefficient (transitivity) of the supported
     part co-occurrence graph: C = 3*triangles / wedges — what fraction
@@ -1105,10 +1102,7 @@ def graph_global_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same support-pruned discipline as graph_triangle_count — the
     prune IS what makes the triangle join feasible; wedges reduce
     map-side from the degree table."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_CLUSTERING_SPARK)
+    return spark.sql(_CLUSTERING_SPARK, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 def _modularity_oracle() -> str:
@@ -1829,7 +1823,7 @@ def _rich_club_sql() -> str:
     )
 
 
-@query("graph_rich_club_coefficient", oracle=_rich_club_sql())
+@query("graph_rich_club_coefficient", oracle=bare_tables(_rich_club_sql()))
 def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-club coefficient curve phi(k) of the supported part
     co-occurrence graph: among nodes of degree > k, the realized
@@ -1853,10 +1847,7 @@ def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     attach endpoint degrees, then everything folds map-side to ONE row
     per frame; the k ladder is catalog-bounded (5 literals); the two
     1-row folds ride scalar subqueries (guard-clean)."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_rich_club_sql())
+    return spark.sql(_rich_club_sql(), lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # --------------------------------------------------------------------------
@@ -2129,7 +2120,7 @@ HITS_RESCALE = 1000  # integer down-scale between rounds (overflow headroom)
 _HITS_SQL = f"""
 WITH e AS (
     SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    FROM {{orders}} o JOIN {{lineitem}} l ON l.l_orderkey = o.o_orderkey
 ), a1 AS (
     SELECT p, CAST(COUNT(*) AS BIGINT) AS a FROM e GROUP BY p
 ), h1 AS (
@@ -2148,7 +2139,9 @@ FROM a1 JOIN a2 ON a2.p = a1.p
 
 @query(
     "graph_hits_bipartite",
-    oracle=_HITS_SQL.replace(f"h1.h / {HITS_RESCALE}", f"h1.h // {HITS_RESCALE}"),
+    oracle=bare_tables(
+        _HITS_SQL.replace(f"h1.h / {HITS_RESCALE}", f"h1.h // {HITS_RESCALE}")
+    ),
 )
 def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS (Kleinberg 1999) on the bipartite customer->part purchase
@@ -2174,15 +2167,18 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list pre-buckets on (c) and (p) so alternate rounds are
     exchange-free on the build side.  No window, no iteration beyond
     the two unrolled rounds."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_HITS_SQL.replace(f"h1.h / {HITS_RESCALE}", f"h1.h DIV {HITS_RESCALE}"))
+    return spark.sql(
+        _HITS_SQL.replace(f"h1.h / {HITS_RESCALE}", f"h1.h DIV {HITS_RESCALE}"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 @query(
     "graph_hits_bipartite_bucketed",
-    oracle=_HITS_SQL.replace(f"h1.h / {HITS_RESCALE}", f"h1.h // {HITS_RESCALE}"),
+    oracle=bare_tables(
+        _HITS_SQL.replace(f"h1.h / {HITS_RESCALE}", f"h1.h // {HITS_RESCALE}")
+    ),
 )
 def graph_hits_bipartite_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLUSTER-MODE HITS (r8 verdict ask #6, completing the bucketed

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.registry import query
 
 _EPOCH = "1990-01-01"
@@ -407,7 +407,7 @@ WITH log AS (
            CAST(o_orderdate AS DATE) AS known_date,
            0 AS seq,
            CAST(o_totalprice AS DECIMAL(18,2)) AS price
-    FROM orders
+    FROM {{orders}}
     UNION ALL
     SELECT o_orderkey,
            CAST(o_orderdate AS DATE),
@@ -415,7 +415,7 @@ WITH log AS (
            1,
            CAST(ROUND(CAST(o_totalprice AS DECIMAL(18,2))
                       * CAST(1.05 AS DECIMAL(3,2)), 2) AS DECIMAL(18,2))
-    FROM orders WHERE o_orderkey % 7 = 0
+    FROM {{orders}} WHERE o_orderkey % 7 = 0
 ), fanned AS (
     SELECT l.*, k.kdate
     FROM log l, LATERAL (SELECT {explode_expr} AS kdate) k
@@ -444,7 +444,7 @@ _BT_SPARK = _bitemporal_sql(
 )
 
 
-@query("bitemporal_restatement", oracle=_BT_ORACLE)
+@query("bitemporal_restatement", oracle=bare_tables(_BT_ORACLE))
 def bitemporal_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BITEMPORAL query — two independent time axes: VALID time (when
     the order economically happened) and TRANSACTION/knowledge time
@@ -470,8 +470,7 @@ def bitemporal_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (kdate, key) shuffle resolves every winner; the rollup
     is months x 2 rows.  The log union reads orders twice — at 100 TB
     the corrections side is a real changelog table, far smaller."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BT_SPARK)
+    return spark.sql(_BT_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 _LATE_DIM_ORACLE = """

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.registry import query
 
 
@@ -834,7 +834,7 @@ WITH rows_h AS (
             + (o_custkey % {CHECKSUM_P}) * 65599
             + CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) % {CHECKSUM_P} * 31)
                % {CHECKSUM_P} AS h2
-    FROM orders
+    FROM {{orders}}
 )
 SELECT block,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -845,7 +845,7 @@ GROUP BY block
 """
 
 
-@query("dq_block_checksums", oracle=_CHECKSUM_SQL)
+@query("dq_block_checksums", oracle=bare_tables(_CHECKSUM_SQL))
 def dq_block_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-level table checksums for cheap replica/migration diffing:
     each {CHECKSUM_BLOCK}-key block of orders reduces to (row count, two
@@ -867,8 +867,7 @@ def dq_block_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     is key-affine, so a key-range-partitioned table computes digests
     with ZERO shuffle after pushdown); output is |keys|/{CHECKSUM_BLOCK}
     rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CHECKSUM_SQL)
+    return spark.sql(_CHECKSUM_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 LDIV_L = 3  # minimum distinct sensitive values per QI class
@@ -877,7 +876,7 @@ _LDIV_SQL = f"""
 WITH classed AS (
     SELECT c_nationkey, c_mktsegment,
            CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS bal_band
-    FROM customer
+    FROM {{customer}}
 )
 SELECT c_nationkey, c_mktsegment,
        CAST(COUNT(*) AS BIGINT) AS class_size,
@@ -889,7 +888,7 @@ GROUP BY c_nationkey, c_mktsegment
 """
 
 
-@query("dq_l_diversity", oracle=_LDIV_SQL)
+@query("dq_l_diversity", oracle=bare_tables(_LDIV_SQL))
 def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit — the attack k-anonymity misses: a QI class can
     be large (k-anonymous) yet have every member share ONE sensitive
@@ -908,8 +907,7 @@ def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-aggregated groupBy on the QI key; COUNT(DISTINCT
     band) expands to (QI, band) partials first — both bounded by
     |nations|x|segments|x|bands|, regardless of fact size."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LDIV_SQL)
+    return spark.sql(_LDIV_SQL, customer=load_table(spark, sf_dir, "customer"))
 
 
 DOUBLE_CHARGE_WINDOW_DAYS = 1  # same amount within a day = suspect
@@ -1178,7 +1176,7 @@ _TCLOSE_SQL = f"""
 WITH classed AS (
     SELECT c_nationkey, c_mktsegment,
            CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS band
-    FROM customer
+    FROM {{customer}}
 ), gband AS (
     SELECT band, CAST(COUNT(*) AS BIGINT) AS g FROM classed GROUP BY band
 ), tot AS (
@@ -1225,7 +1223,7 @@ FROM emd
 """
 
 
-@query("dq_t_closeness", oracle=_TCLOSE_SQL)
+@query("dq_t_closeness", oracle=bare_tables(_TCLOSE_SQL))
 def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit — the attack l-diversity misses: a QI class can
     hold l distinct sensitive values yet still LEAK because its
@@ -1249,8 +1247,7 @@ def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     cartesian, rows ≤ nations×segments×bands), one ordered window per
     class, one rollup.  The 1-row totals join is the q11 scalar
     pattern."""
-    register_views(spark, sf_dir)
-    return spark.sql(_TCLOSE_SQL)
+    return spark.sql(_TCLOSE_SQL, customer=load_table(spark, sf_dir, "customer"))
 
 
 # Cross-field rule audit: every rule is an exact predicate over one joined
@@ -1258,7 +1255,7 @@ def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CROSS_FIELD_SQL = """
 WITH joined AS (
     SELECT l.l_shipdate, l.l_discount, l.l_tax, l.l_quantity, o.o_orderdate
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey
 ), audited AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(SUM(CASE WHEN l_shipdate < o_orderdate THEN 1 ELSE 0 END)
@@ -1286,7 +1283,7 @@ FROM (
 """
 
 
-@query("dq_cross_field_rules", oracle=_CROSS_FIELD_SQL)
+@query("dq_cross_field_rules", oracle=bare_tables(_CROSS_FIELD_SQL))
 def dq_cross_field_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS-FIELD consistency audit — the DQ layer between the per-column
     expectation suite (dq_expectations_suite: type/range/set checks one
@@ -1305,8 +1302,11 @@ def dq_cross_field_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — adding a rule costs a column, not a scan); the join is
     the orderkey equi-join every TPC-H query already shuffles on, and
     at 100 TB rides the same bucketing.  Output is |rules| rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CROSS_FIELD_SQL.replace("//", "DIV"))
+    return spark.sql(
+        _CROSS_FIELD_SQL.replace("//", "DIV"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 _DISTINCT_PROFILE_SQL = """
@@ -1316,11 +1316,11 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS d_partkey,
        CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS d_suppkey,
        CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS d_orderkey
-FROM lineitem
+FROM {lineitem}
 """
 
 
-@query("profile_distinct_counts", oracle=_DISTINCT_PROFILE_SQL)
+@query("profile_distinct_counts", oracle=bare_tables(_DISTINCT_PROFILE_SQL))
 def profile_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-column EXACT cardinality profile in one statement — the
     first question against any new table (which columns are enums,
@@ -1334,8 +1334,10 @@ def profile_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass; at 100 TB with high-cardinality columns the documented swap is
     one approx_count_distinct pass (agg_approx_distinct) or per-column
     jobs.  The plan is still one shuffle round, no joins."""
-    register_views(spark, sf_dir)
-    return spark.sql(_DISTINCT_PROFILE_SQL)
+    return spark.sql(
+        _DISTINCT_PROFILE_SQL,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+    )
 
 
 def _psi_closing(src: str) -> str:
@@ -1405,8 +1407,8 @@ def dq_psi_jsd_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Bartlett/G-test LN discipline (engines may differ in ln's last
     ulp; the fixed-scale rounding absorbs it except on rounding-
     boundary knife edges, the accepted trade of that family).  The
-    closing text is literally shared between the oracle and a temp
-    view over the Spark-built bin table.
+    closing text is literally shared between the oracle and the
+    Spark-built bin table, bound as the query's input.
 
     Scale: one scan building both histograms map-side (conditional
     counts per bin), then a |bins|-sized fold — same posture as the TV
@@ -1438,8 +1440,7 @@ def dq_psi_jsd_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("c2"),
         )
     )
-    counts.createOrReplaceTempView("_psi_counts")
-    return spark.sql(_psi_closing("_psi_counts"))
+    return spark.sql(_psi_closing("{counts}"), counts=counts)
 
 
 def _format_conf_sql(idiv: str) -> str:
@@ -1458,7 +1459,7 @@ WITH raw AS (
                   LPAD(CAST((c_custkey * 7) % 1000 AS STRING), 3, '0'), '-',
                   LPAD(CAST((c_custkey * 13) % 10000 AS STRING), 4, '0'))
                AS phone
-    FROM customer
+    FROM {{customer}}
 ), phones AS (
     -- planted corruption (the dq_sequence_gaps discipline): every 97th
     -- customer's phone arrives REVERSED — same deterministic filter on
@@ -1488,7 +1489,7 @@ FROM checked GROUP BY c_nationkey
 _FORMAT_CONF_ORACLE = _format_conf_sql("//")
 
 
-@query("dq_format_conformance", oracle=_FORMAT_CONF_ORACLE)
+@query("dq_format_conformance", oracle=bare_tables(_FORMAT_CONF_ORACLE))
 def dq_format_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Format-conformance audit for a structured string column — the
     per-nation share of phone numbers matching the CC-NNN-NNN-NNNN
@@ -1510,5 +1511,7 @@ def dq_format_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan, one map-side-combinable (nation) rollup — 25-row
     output.  No window, no join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_format_conf_sql("DIV"))
+    return spark.sql(
+        _format_conf_sql("DIV"),
+        customer=load_table(spark, sf_dir, "customer"),
+    )

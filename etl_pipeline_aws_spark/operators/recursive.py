@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pipeline_aws_spark.catalog import register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.registry import query
 
 # Reachability over the support-pruned part co-occurrence graph (shared
@@ -76,7 +76,6 @@ def subquery_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     the manual frontier-dedup loop (entity_resolution_parts,
     graph_label_propagation); the recursive CTE is the right surface when
     the hop cap is small and declared, as here."""
-    register_views(spark, sf_dir)
     # Materialize the edge list BEFORE the recursion: Spark inlines
     # non-recursive CTEs into every recursion level, so the lineitem
     # self-join would otherwise re-execute once per level (measured 4x
@@ -88,7 +87,7 @@ def subquery_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         WITH pairs AS (
             SELECT a.l_partkey AS pa, b.l_partkey AS pb
-            FROM lineitem a JOIN lineitem b
+            FROM {lineitem} a JOIN {lineitem} b
               ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
             GROUP BY a.l_partkey, b.l_partkey
             HAVING COUNT(*) >= 2
@@ -96,24 +95,25 @@ def subquery_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT pa AS u, pb AS v FROM pairs
         UNION ALL
         SELECT pb AS u, pa AS v FROM pairs
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     ).localCheckpoint()
-    edges.createOrReplaceTempView("co_edges_materialized")
     return spark.sql(
         """
         WITH RECURSIVE seed AS (
-            SELECT MIN(u) AS s FROM co_edges_materialized
+            SELECT MIN(u) AS s FROM {edges}
         ), reach AS (
             SELECT s AS node, 0 AS hops FROM seed
             UNION ALL
             SELECT e.v AS node, r.hops + 1 AS hops
-            FROM reach r JOIN co_edges_materialized e ON e.u = r.node
+            FROM reach r JOIN {edges} e ON e.u = r.node
             WHERE r.hops < 3
         )
         SELECT node, CAST(MIN(hops) AS INT) AS hops
         FROM reach
         GROUP BY node
-        """
+        """,
+        edges=edges,
     )
 
 
@@ -123,11 +123,11 @@ def subquery_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SCRIPT_SQL = """
     BEGIN
         DECLARE cut DOUBLE;
-        SET cut = (SELECT MAX(c_acctbal) * 0.8 FROM customer);
+        SET cut = (SELECT MAX(c_acctbal) * 0.8 FROM {customer});
         SELECT c_nationkey,
                COUNT(*) AS n_rich,
                CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal_sum
-        FROM customer
+        FROM {customer}
         WHERE c_acctbal > cut
         GROUP BY c_nationkey;
     END
@@ -154,8 +154,7 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     no extra driver round trip, and at scale no tiny driver-to-executor
     re-broadcast: Catalyst folds the variable as a literal into the
     second statement's plan."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SCRIPT_SQL)
+    return spark.sql(_SCRIPT_SQL, customer=load_table(spark, sf_dir, "customer"))
 
 
 # --------------------------------------------------------------------------
@@ -176,18 +175,18 @@ WITH RECURSIVE bom AS (
     SELECT p.p_partkey,
            b.lvl + 1,
            b.qty * (p.p_partkey % 3 + 1)
-    FROM bom b JOIN part p ON p.p_partkey {idiv} 4 = b.component
+    FROM bom b JOIN {{part}} p ON p.p_partkey {idiv} 4 = b.component
     WHERE b.lvl < {BOM_MAX_DEPTH}
 )
 SELECT b.component,
        b.lvl AS level,
        b.qty AS effective_qty,
        CAST(b.qty AS DOUBLE) * p.p_retailprice AS extended_cost
-FROM bom b JOIN part p ON p.p_partkey = b.component
+FROM bom b JOIN {{part}} p ON p.p_partkey = b.component
 """
 
 
-@query("recursive_bom_explosion", oracle=_bom_sql("//"))
+@query("recursive_bom_explosion", oracle=bare_tables(_bom_sql("//")))
 def recursive_bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-level bill-of-materials EXPLOSION as a declarative
     ``WITH RECURSIVE`` — the second classic recursion workload beside
@@ -210,5 +209,4 @@ def recursive_bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: pure integer tree arithmetic; extended cost is one
     double multiply per row."""
-    register_views(spark, sf_dir)
-    return spark.sql(_bom_sql("DIV"))
+    return spark.sql(_bom_sql("DIV"), part=load_table(spark, sf_dir, "part"))

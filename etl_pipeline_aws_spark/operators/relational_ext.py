@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.functions.numeric import dec, dsum
 from etl_pipeline_aws_spark.registry import query
 
@@ -32,70 +32,78 @@ from etl_pipeline_aws_spark.registry import query
 
 _SCALAR_SUBQ = """
     SELECT c_custkey, c_name, c_acctbal
-    FROM customer
+    FROM {customer}
     WHERE c_acctbal > (
         SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
-        FROM customer
+        FROM {customer}
     )
 """
 
 
-@query("subquery_scalar", oracle=_SCALAR_SUBQ)
+@query("subquery_scalar", oracle=bare_tables(_SCALAR_SUBQ))
 def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers above the global average balance.  The average is an exact
     decimal sum / count on both engines, so the > cut is deterministic."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SCALAR_SUBQ)
+    return spark.sql(_SCALAR_SUBQ, customer=load_table(spark, sf_dir, "customer"))
 
 
 _IN_SUBQ = """
     SELECT c_custkey, c_mktsegment
-    FROM customer
+    FROM {customer}
     WHERE c_custkey IN (
-        SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+        SELECT o_custkey FROM {orders} WHERE o_orderstatus = 'F'
     )
 """
 
 
-@query("subquery_in", oracle=_IN_SUBQ)
+@query("subquery_in", oracle=bare_tables(_IN_SUBQ))
 def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery -> left semi join under Catalyst."""
-    register_views(spark, sf_dir)
-    return spark.sql(_IN_SUBQ)
+    return spark.sql(
+        _IN_SUBQ,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 _EXISTS_SUBQ = """
     SELECT c_custkey, c_name
-    FROM customer c
+    FROM {customer} c
     WHERE EXISTS (
-        SELECT 1 FROM orders o
+        SELECT 1 FROM {orders} o
         WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000
     )
 """
 
 
-@query("subquery_exists_correlated", oracle=_EXISTS_SUBQ)
+@query("subquery_exists_correlated", oracle=bare_tables(_EXISTS_SUBQ))
 def subquery_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS -> left semi join on the correlation key plus the
     pushed-down price filter; no per-row subquery execution."""
-    register_views(spark, sf_dir)
-    return spark.sql(_EXISTS_SUBQ)
+    return spark.sql(
+        _EXISTS_SUBQ,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 _NOT_EXISTS_SUBQ = """
     SELECT c_custkey, c_name
-    FROM customer c
+    FROM {customer} c
     WHERE NOT EXISTS (
-        SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
+        SELECT 1 FROM {orders} o WHERE o.o_custkey = c.c_custkey
     )
 """
 
 
-@query("subquery_not_exists", oracle=_NOT_EXISTS_SUBQ)
+@query("subquery_not_exists", oracle=bare_tables(_NOT_EXISTS_SUBQ))
 def subquery_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no orders: NOT EXISTS -> left anti join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_NOT_EXISTS_SUBQ)
+    return spark.sql(
+        _NOT_EXISTS_SUBQ,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -346,15 +354,15 @@ def surrogate_keys_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_TOPN = """
     SELECT c.c_custkey, c.c_mktsegment, t.o_orderkey, t.o_totalprice
-    FROM customer c,
-    LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
+    FROM {customer} c,
+    LATERAL (SELECT o_orderkey, o_totalprice FROM {orders} o
              WHERE o.o_custkey = c.c_custkey
              ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
     WHERE c.c_custkey < 500
 """
 
 
-@query("subquery_lateral_topn", oracle=_LATERAL_TOPN)
+@query("subquery_lateral_topn", oracle=bare_tables(_LATERAL_TOPN))
 def subquery_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL derived table — each customer's two largest
     orders via a per-row subquery with its own ORDER BY ... LIMIT: the
@@ -363,8 +371,11 @@ def subquery_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst decorrelates this into: DomainJoin → window rank — no
     per-customer re-execution, unlike a naive nested-loop reading).
     Deterministic tie-break inside the lateral ORDER BY."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_TOPN)
+    return spark.sql(
+        _LATERAL_TOPN,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 _PARAM_ORACLE = """
@@ -391,17 +402,17 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is IDENTICAL to the inlined one (pushdown included — the
     o_totalprice bound reaches the Parquet scan); the oracle runs the
     inlined twin."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderpriority,
                COUNT(*) AS n_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        FROM orders
+        FROM {orders}
         WHERE o_orderstatus = :status AND o_totalprice >= :min_price
         GROUP BY o_orderpriority
         """,
         args={"status": "F", "min_price": 1000.0},
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -491,14 +502,13 @@ def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     the null-aware join broadcasts it.  A fact-sized NOT IN should be
     rewritten to NOT EXISTS by the author — which is why both forms are
     registered."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         WITH probe AS (
             SELECT o_orderkey, NULLIF(o_custkey % 50, 49) AS seg
-            FROM orders WHERE o_orderkey < 4000
+            FROM {orders} WHERE o_orderkey < 4000
         ), blocklist AS (
-            SELECT c_custkey % 50 AS bad_seg FROM customer WHERE c_custkey < 10
+            SELECT c_custkey % 50 AS bad_seg FROM {customer} WHERE c_custkey < 10
         )
         SELECT CAST(COUNT(*) AS BIGINT) AS n_probe_rows,
                CAST(SUM(CASE WHEN seg NOT IN (SELECT bad_seg FROM blocklist)
@@ -506,5 +516,7 @@ def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CASE WHEN seg IS NULL THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_null_seg
         FROM probe
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import load_table
 from etl_pipeline_aws_spark.functions.numeric import davg, dec, dsum
 from etl_pipeline_aws_spark.registry import query
 
@@ -801,5 +801,4 @@ def scalar_date_edge_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     dayofweek() is Sunday=1, DuckDB dayofweek is Sunday=0 — measured;
     the op standardizes on Monday=0 and pins the conversion).
     Engine-identical calendar math is exactly the claim under test."""
-    register_views(spark, sf_dir)
     return spark.sql(_DATE_EDGE_SPARK)

@@ -29,7 +29,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.functions.numeric import dec
 from etl_pipeline_aws_spark.registry import query
 
@@ -479,7 +479,7 @@ WITH raw AS (
            CAST(EXTRACT(YEAR FROM l_shipdate) * 366
                 + EXTRACT(DOY FROM l_shipdate) AS BIGINT) AS xd,
            l_orderkey, l_linenumber
-    FROM lineitem
+    FROM {{lineitem}}
 ), rate AS (
     -- divisor derived from the data INSIDE the query: sampling stays a
     -- fixed absolute budget at any scale, and both dialects compute the
@@ -527,7 +527,7 @@ FROM groups GROUP BY layout
 """
 
 
-@query("layout_zorder_skipping_planner", oracle=_zplan_sql("//"))
+@query("layout_zorder_skipping_planner", oracle=bare_tables(_zplan_sql("//")))
 def layout_zorder_skipping_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WHY Z-ORDER: the row-group-skipping planner that puts a NUMBER on
     the layout decision parquet_zorder_layout executes — model the same
@@ -562,12 +562,9 @@ def layout_zorder_skipping_planner(spark: SparkSession, sf_dir: str) -> DataFram
     parquet_clustered_layout do the real writes)."""
     import logging
 
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
     logging.getLogger(__name__).info(
         "layout_zorder_skipping_planner: modeling on a deterministic "
         "key-hash sample, divisor = max(1, count/%d) computed in-query",
         ZPLAN_SAMPLE_TARGET,
     )
-    return spark.sql(_zplan_sql("DIV"))
+    return spark.sql(_zplan_sql("DIV"), lineitem=load_table(spark, sf_dir, "lineitem"))

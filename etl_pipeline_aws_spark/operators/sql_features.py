@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import register_views, table_path
+from etl_pipeline_aws_spark.catalog import load_table, table_path
 from etl_pipeline_aws_spark.registry import query
 
 _PIPE_ORACLE = """
@@ -37,16 +37,16 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     users already think in, now in SQL.  Catalyst compiles it to the
     identical plan as the classic SELECT (what the oracle runs), so
     adopting the style costs nothing at any scale."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
-        FROM orders
+        FROM {orders}
         |> WHERE o_orderstatus = 'F'
         |> AGGREGATE COUNT(*) AS n_orders,
                      CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                          AS revenue
            GROUP BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -72,10 +72,10 @@ _PIPE_MULTI_CLASSIC = """
 """
 
 _PIPE_MULTI_PIPE = """
-    FROM orders
+    FROM {orders}
     |> WHERE o_orderstatus = 'F'
-    |> JOIN customer ON o_custkey = c_custkey
-    |> JOIN nation ON c_nationkey = n_nationkey
+    |> JOIN {customer} ON o_custkey = c_custkey
+    |> JOIN {nation} ON c_nationkey = n_nationkey
     |> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n_orders,
                  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                      AS revenue
@@ -98,8 +98,12 @@ def sql_pipe_multi_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the plan — broadcast dim joins, partial aggregation, TakeOrdered
     top-k — is IDENTICAL to the classic twin; asserted expression-id-
     insensitively in tests/test_round8_ops.py."""
-    register_views(spark, sf_dir)
-    return spark.sql(_PIPE_MULTI_PIPE)
+    return spark.sql(
+        _PIPE_MULTI_PIPE,
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 _GROUP_ALL_ORACLE = """
@@ -115,13 +119,13 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — kills the add-a-column-forget-the-group-by bug class in wide
     rollups.  DuckDB pioneered the shorthand; the oracle spells the keys
     out, proving the inference picked exactly the right set."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
-        FROM orders
+        FROM {orders}
         GROUP BY ALL
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -138,16 +142,27 @@ def sql_identifier_binding(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameter without string-splicing SQL — the injection-safe half of
     templated maintenance jobs ("run this audit over ${table}"), pairing
     with sql_parameterized which binds VALUES.  The name resolves at
-    parse time, so the plan is identical to writing the name literally."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT n_name, COUNT(*) AS n_customers
-        FROM IDENTIFIER(:tbl) JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name
-        """,
-        args={"tbl": "customer"},
-    )
+    parse time, so the plan is identical to writing the name literally.
+
+    The bound name needs a named relation: a temp view with a name of
+    its own, dropped once the query is analyzed (one of the two named
+    views on the engine's allowlist, tests/test_catalog.py)."""
+    import uuid as _uuid
+
+    tbl = f"customer_{_uuid.uuid4().hex[:8]}"
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView(tbl)
+    try:
+        return spark.sql(
+            """
+            SELECT n_name, COUNT(*) AS n_customers
+            FROM IDENTIFIER(:tbl) JOIN {nation} ON c_nationkey = n_nationkey
+            GROUP BY n_name
+            """,
+            args={"tbl": tbl},
+            nation=load_table(spark, sf_dir, "nation"),
+        )
+    finally:
+        spark.catalog.dropTempView(tbl)
 
 
 _LATERAL_ALIAS_ORACLE = """
@@ -166,15 +181,15 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     table to reuse an expression.  The oracle re-expands the alias
     textually; both sides perform the same two IEEE multiplications per
     row, so values hash-match exactly."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderkey,
                o_totalprice * 0.9 AS discounted,
                discounted * discounted AS discounted_sq
-        FROM orders
+        FROM {orders}
         WHERE o_orderkey < 1000
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -198,7 +213,6 @@ def sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression — the UDF that is *not* the slow path.  The oracle runs
     the textually-inlined body; identical decimal arithmetic on both
     engines, exact value match."""
-    register_views(spark, sf_dir)
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION net_price(
@@ -212,9 +226,10 @@ def sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT l_orderkey, l_linenumber,
                net_price(CAST(l_extendedprice AS DECIMAL(18,2)),
                          CAST(l_discount AS DECIMAL(18,2))) AS net_price
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_orderkey < 1000
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -233,17 +248,28 @@ def sql_table_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     its PushedFilters on c_acctbal), so unlike an opaque Python UDTF the
     optimizer sees through it — predicate pushdown, column pruning, and
     join reordering all still apply.  This is the 100 TB-safe way to
-    package a reusable parameterized subquery."""
-    register_views(spark, sf_dir)
-    spark.sql(
-        """
-        CREATE OR REPLACE TEMPORARY FUNCTION rich_customers(minbal DOUBLE)
-        RETURNS TABLE(c_custkey BIGINT, c_name STRING, c_acctbal DOUBLE)
-        RETURN SELECT c_custkey, c_name, c_acctbal
-               FROM customer WHERE c_acctbal >= minbal
-        """
-    )
-    return spark.sql("SELECT * FROM rich_customers(9000.0)")
+    package a reusable parameterized subquery.
+
+    The body names its table, and Spark resolves that name when the
+    function is called, not when it is created: a temp view with a name
+    of its own, dropped once the call is analyzed (one of the two named
+    views on the engine's allowlist, tests/test_catalog.py)."""
+    import uuid as _uuid
+
+    src = f"customer_{_uuid.uuid4().hex[:8]}"
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView(src)
+    try:
+        spark.sql(
+            f"""
+            CREATE OR REPLACE TEMPORARY FUNCTION rich_customers(minbal DOUBLE)
+            RETURNS TABLE(c_custkey BIGINT, c_name STRING, c_acctbal DOUBLE)
+            RETURN SELECT c_custkey, c_name, c_acctbal
+                   FROM {src} WHERE c_acctbal >= minbal
+            """
+        )
+        return spark.sql("SELECT * FROM rich_customers(9000.0)")
+    finally:
+        spark.catalog.dropTempView(src)
 
 
 _EXEC_IMMEDIATE_ORACLE = """
@@ -265,16 +291,18 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix — text, identifiers, and values.
 
     The bound statement compiles to the same Catalyst plan as its static
-    form (the oracle), so dynamism costs nothing at plan time."""
-    register_views(spark, sf_dir)
+    form (the oracle), so dynamism costs nothing at plan time.  The
+    orders input is bound like any other query's: the placeholder inside
+    the statement string renders before Spark parses it."""
     return spark.sql(
         """
         EXECUTE IMMEDIATE
           'SELECT o_orderpriority, COUNT(*) AS n_orders
-           FROM orders WHERE o_orderstatus = ? AND o_totalprice > ?
+           FROM {orders} WHERE o_orderstatus = ? AND o_totalprice > ?
            GROUP BY o_orderpriority'
           USING 'F', 150000.0
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -303,7 +331,6 @@ def sql_optimizer_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     values must hash-match exactly; tests/test_plans.py asserts the
     BROADCAST hints actually produced BroadcastHashJoins, so this entry
     checks both halves of the contract: same answer, requested plan."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT /*+ BROADCAST(customer), BROADCAST(nation), REBALANCE */
@@ -311,11 +338,14 @@ def sql_optimizer_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                    AS revenue
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
+        FROM {orders}
+        JOIN {customer} customer ON o_custkey = c_custkey
+        JOIN {nation} nation ON c_nationkey = n_nationkey
         GROUP BY n_name
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -375,7 +405,6 @@ def sql_values_inline_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same text shape runs on both engines (the oracle is literally the
     same CTE), so this also pins VALUES-syntax compatibility."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         WITH sla(priority, sla_days) AS (
@@ -384,9 +413,10 @@ def sql_values_inline_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT s.sla_days,
                COUNT(*) AS n_orders
-        FROM orders o JOIN sla s ON o.o_orderpriority = s.priority
+        FROM {orders} o JOIN sla s ON o.o_orderpriority = s.priority
         GROUP BY s.sla_days
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -416,7 +446,6 @@ def sql_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the group's SET.  Scale: partial aggregation applies (ordered
     merge of sorted partials), state bounded by group payload — same
     budget as collect_list, with the dim-sized groups this targets."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT r_name AS region_name,
@@ -424,9 +453,11 @@ def sql_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
                listagg(DISTINCT CAST(n_nationkey % 5 AS STRING), '|')
                    WITHIN GROUP (ORDER BY CAST(n_nationkey % 5 AS STRING))
                    AS key_mods
-        FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
+        FROM {nation} n JOIN {region} r ON n.n_regionkey = r.r_regionkey
         GROUP BY r_name
-        """
+        """,
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
     )
 
 
@@ -454,7 +485,6 @@ def sql_named_arguments(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains — certifying both the named-argument binding (skipped
     positional params keep defaults: otherChar stays NULL = unchanged)
     and the masking semantics."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT c_custkey,
@@ -462,8 +492,9 @@ def sql_named_arguments(spark: SparkSession, sf_dir: str) -> DataFrame:
                     digitChar => '9') AS masked_name,
                mask(c_mktsegment, digitChar => '9', upperChar => 'X')
                    AS masked_segment
-        FROM customer WHERE c_custkey < 200
-        """
+        FROM {customer} WHERE c_custkey < 200
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -495,7 +526,6 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: zero — the variable folds at plan time; the query is a
     plain pushed-filter aggregation."""
-    register_views(spark, sf_dir)
     spark.sql(
         "DECLARE OR REPLACE VARIABLE big_order_floor DECIMAL(18,2) DEFAULT 100.00"
     )
@@ -506,10 +536,11 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n_big_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
                    AS revenue_cents
-        FROM orders
+        FROM {orders}
         WHERE CAST(o_totalprice AS DECIMAL(18,2)) > big_order_floor
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -539,11 +570,11 @@ def sql_analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re as _re
     import uuid as _uuid
 
-    register_views(spark, sf_dir)
     tbl = f"urgent_orders_{_uuid.uuid4().hex[:8]}"
     spark.sql(
         f"CREATE TABLE {tbl} USING parquet AS "
-        "SELECT * FROM orders WHERE o_orderpriority = '1-URGENT'"
+        "SELECT * FROM {orders} WHERE o_orderpriority = '1-URGENT'",
+        orders=load_table(spark, sf_dir, "orders"),
     )
     try:
         spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
@@ -591,7 +622,6 @@ def sql_default_column_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis time, no data-path cost."""
     import uuid as _uuid
 
-    register_views(spark, sf_dir)
     tbl = f"nation_status_{_uuid.uuid4().hex[:8]}"
     spark.sql(
         f"CREATE TABLE {tbl} (n_nationkey INT, status STRING DEFAULT 'NEW') "
@@ -600,11 +630,13 @@ def sql_default_column_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         spark.sql(
             f"INSERT INTO {tbl} (n_nationkey) "
-            "SELECT n_nationkey FROM nation WHERE n_nationkey % 2 = 0"
+            "SELECT n_nationkey FROM {nation} WHERE n_nationkey % 2 = 0",
+            nation=load_table(spark, sf_dir, "nation"),
         )
         spark.sql(
             f"INSERT INTO {tbl} "
-            "SELECT n_nationkey, 'LEGACY' FROM nation WHERE n_nationkey % 2 = 1"
+            "SELECT n_nationkey, 'LEGACY' FROM {nation} WHERE n_nationkey % 2 = 1",
+            nation=load_table(spark, sf_dir, "nation"),
         )
         out = (
             spark.table(tbl)
@@ -645,7 +677,6 @@ def sql_ordered_set_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a sort-based aggregate whose per-group state is the value
     multiset — at 100 TB swap for approx_percentile where the group
     cardinality is unbounded (documented trade, agg_percentile_approx)."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT event_type,
@@ -654,8 +685,9 @@ def sql_ordered_set_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
                percentile_disc(0.9) WITHIN GROUP (ORDER BY value)
                    AS p90_disc,
                COUNT(*) AS n
-        FROM events GROUP BY event_type
-        """
+        FROM {events} GROUP BY event_type
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -681,13 +713,13 @@ def sql_select_star_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The probe row fabricates a to-be-dropped column so the exclusion is
     observable in the compared schema."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT * EXCEPT (n_comment)
         FROM (SELECT n_nationkey, n_name, n_regionkey,
                      'x' AS n_comment
-              FROM nation) t
+              FROM {nation}) t
         ORDER BY n_nationkey LIMIT 5
-        """
+        """,
+        nation=load_table(spark, sf_dir, "nation"),
     )

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.functions.prefix import (
     ranked_prefix_sum,
     ranked_row_index,
@@ -70,7 +70,7 @@ SELECT o_totalprice AS v,
             AS BIGINT) AS c1,
        CAST(SUM(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END)
             AS BIGINT) AS c2
-FROM orders
+FROM {orders}
 WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
 GROUP BY o_totalprice
 """
@@ -100,8 +100,10 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct|-scale stage parallel.  The D-statistic max is an
     ordinary parallel aggregate; n1/n2 come exact from the offset fold
     so no ``SUM() OVER ()`` remains either."""
-    register_views(spark, sf_dir)
-    per_value = spark.sql(_KS_PER_VALUE_SPARK)
+    per_value = spark.sql(
+        _KS_PER_VALUE_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+    )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["c1", "c2"])
     n1, n2 = totals["c1"], totals["c2"]
     num = ranked.select(
@@ -149,7 +151,7 @@ GROUP BY q
 
 _ECDF_PER_VALUE_SPARK = """
 SELECT value AS v, CAST(COUNT(*) AS BIGINT) AS c
-FROM events WHERE value IS NOT NULL GROUP BY value
+FROM {events} WHERE value IS NOT NULL GROUP BY value
 """
 
 
@@ -179,8 +181,7 @@ def events_value_ecdf_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked_prefix_sum (functions/prefix.py) — every stage parallel, no
     unpartitioned window; the oracle spells the identical semantics with
     the classic global window, proving value-identity."""
-    register_views(spark, sf_dir)
-    pv = spark.sql(_ECDF_PER_VALUE_SPARK)
+    pv = spark.sql(_ECDF_PER_VALUE_SPARK, events=load_table(spark, sf_dir, "events"))
     ranked, totals = ranked_prefix_sum(pv, [F.asc("v")], ["c"])
     n = totals["c"]
     if n == 0:
@@ -279,8 +280,10 @@ def stat_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/prefix.py); no unpartitioned window anywhere, n1/n2 come
     exact from the offset fold, and the term fold is an ordinary
     parallel aggregate."""
-    register_views(spark, sf_dir)
-    per_value = spark.sql(_KS_PER_VALUE_SPARK)
+    per_value = spark.sql(
+        _KS_PER_VALUE_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+    )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["c1", "c2"])
     n1, n2 = totals["c1"], totals["c2"]
     if n1 == 0 and n2 == 0:
@@ -380,8 +383,10 @@ def stat_anderson_darling_two_sample(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: same two-phase ECDF path as its two siblings — |distinct|-
     sized frame, no unpartitioned window, n1/n2 exact from the offset
     fold, ordinary parallel aggregate for the fold."""
-    register_views(spark, sf_dir)
-    per_value = spark.sql(_KS_PER_VALUE_SPARK)
+    per_value = spark.sql(
+        _KS_PER_VALUE_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+    )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["c1", "c2"])
     n1, n2 = totals["c1"], totals["c2"]
     if n1 == 0 and n2 == 0:
@@ -429,7 +434,7 @@ def stat_anderson_darling_two_sample(spark: SparkSession, sf_dir: str) -> DataFr
 _MOOD_ORACLE = """
 WITH pv AS (
     SELECT o_totalprice AS v, CAST(COUNT(*) AS BIGINT) AS c
-    FROM orders GROUP BY o_totalprice
+    FROM {orders} GROUP BY o_totalprice
 ), cumv AS (
     SELECT v,
            CAST(SUM(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
@@ -445,7 +450,7 @@ WITH pv AS (
     SELECT o_orderpriority AS grp,
            CASE WHEN o_totalprice <= (SELECT m FROM med)
                 THEN 1 ELSE 0 END AS is_below
-    FROM orders
+    FROM {orders}
 ), cells AS (
     SELECT grp,
            CAST(SUM(is_below) AS BIGINT) AS below,
@@ -495,7 +500,7 @@ FROM terms
 """
 
 
-@query("stat_mood_median", oracle=_MOOD_ORACLE)
+@query("stat_mood_median", oracle=bare_tables(_MOOD_ORACLE))
 def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mood's median test across ALL five order priorities — the k-group
     "do these groups share a median?" screen that needs no rank sums
@@ -514,21 +519,18 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     median fence rides the two-phase ranked_prefix_sum; the cell table
     is one conditional groupBy to |priorities| rows with the fence as a
     scalar subquery (guard-clean)."""
-    register_views(spark, sf_dir)
     pv = spark.sql(
         "SELECT o_totalprice AS v, CAST(COUNT(*) AS BIGINT) AS c "
-        "FROM orders GROUP BY o_totalprice"
+        "FROM {orders} GROUP BY o_totalprice",
+        orders=load_table(spark, sf_dir, "orders"),
     )
     ranked, totals = ranked_prefix_sum(pv, [F.asc("v")], ["c"])
     n = totals["c"]
-    ranked.withColumn(
-        "n", F.lit(n).cast("long")
-    ).createOrReplaceTempView("r8_mood_cum")
     return spark.sql(
         _MOOD_ORACLE.replace(
             """WITH pv AS (
     SELECT o_totalprice AS v, CAST(COUNT(*) AS BIGINT) AS c
-    FROM orders GROUP BY o_totalprice
+    FROM {orders} GROUP BY o_totalprice
 ), cumv AS (
     SELECT v,
            CAST(SUM(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
@@ -537,9 +539,11 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pv
 ), med AS (""",
             """WITH cumv AS (
-    SELECT v, cum_c AS cum, n FROM r8_mood_cum
+    SELECT v, cum_c AS cum, n FROM {cum}
 ), med AS (""",
-        )
+        ),
+        orders=load_table(spark, sf_dir, "orders"),
+        cum=ranked.withColumn("n", F.lit(n).cast("long")),
     )
 
 
@@ -552,7 +556,7 @@ _BF_SQL = """
 WITH pv AS (
     SELECT o_orderpriority AS grp, o_totalprice AS v,
            CAST(COUNT(*) AS BIGINT) AS c
-    FROM orders GROUP BY o_orderpriority, o_totalprice
+    FROM {orders} GROUP BY o_orderpriority, o_totalprice
 ), cum AS (
     SELECT grp, v,
            CAST(SUM(c) OVER (PARTITION BY grp ORDER BY v
@@ -566,7 +570,7 @@ WITH pv AS (
     SELECT o.o_orderpriority AS grp,
            CAST(ABS(CAST(o.o_totalprice AS DECIMAL(18,2))
                     - CAST(m.m AS DECIMAL(18,2))) * 100 AS BIGINT) AS zc
-    FROM orders o JOIN med m ON o.o_orderpriority = m.grp
+    FROM {orders} o JOIN med m ON o.o_orderpriority = m.grp
 ), per_grp AS (
     -- integer-cent deviations: s is an exact BIGINT, q an exact
     -- SCALE-0 decimal — scaled decimals (the ROUND->DECIMAL(38,6)
@@ -610,7 +614,7 @@ FROM terms
 """
 
 
-@query("stat_brown_forsythe", oracle=_BF_SQL)
+@query("stat_brown_forsythe", oracle=bare_tables(_BF_SQL))
 def stat_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown–Forsythe variance-homogeneity test across the five order
     priorities — the robust (median-centered) Levene: one-way ANOVA F on
@@ -630,8 +634,7 @@ def stat_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the median windows are PARTITIONED by group (never a single
     task); the deviation pass re-scans orders once with a |groups|-row
     broadcast join; everything after is |groups|-sized."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BF_SQL)
+    return spark.sql(_BF_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # Chi-square independence: exact integer cell/marginal counts; each cell's
@@ -640,7 +643,7 @@ _CHI2_SQL = """
 WITH cells AS (
     SELECT event_type, CAST(EXTRACT(DAY FROM ts) AS BIGINT) % 7 AS day_bucket,
            CAST(COUNT(*) AS BIGINT) AS obs
-    FROM events
+    FROM {events}
     GROUP BY event_type, CAST(EXTRACT(DAY FROM ts) AS BIGINT) % 7
 ), marg AS (
     SELECT event_type, day_bucket, obs,
@@ -664,7 +667,7 @@ FROM terms
 """
 
 
-@query("stat_chi_square_independence", oracle=_CHI2_SQL)
+@query("stat_chi_square_independence", oracle=bare_tables(_CHI2_SQL))
 def stat_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence test between event_type and a day-of-month
     bucket (day % 7 — portable across engines, unlike weekday numbering,
@@ -679,8 +682,7 @@ def stat_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: cells = |types| × 7 regardless of fact size; the groupBy is a
     partial-aggregated shuffle of (type, bucket, count) rows only."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CHI2_SQL)
+    return spark.sql(_CHI2_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # Welch t: exact decimal power sums per group, one shared double formula.
@@ -688,7 +690,7 @@ _WELCH_SQL = """
 WITH g AS (
     SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 2 END AS grp,
            CAST(o_totalprice AS DECIMAL(18,2)) AS x
-    FROM orders
+    FROM {orders}
     WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
 ), sums AS (
     SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
@@ -722,7 +724,7 @@ FROM wide
 """
 
 
-@query("stat_welch_ttest", oracle=_WELCH_SQL)
+@query("stat_welch_ttest", oracle=bare_tables(_WELCH_SQL))
 def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t-test between URGENT and LOW order
     totals — the default two-sample mean test (Student's equal-variance
@@ -737,8 +739,7 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: a 2-group partial aggregation — three numbers per group cross
     the wire regardless of fact size."""
-    register_views(spark, sf_dir)
-    return spark.sql(_WELCH_SQL)
+    return spark.sql(_WELCH_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # Mann-Whitney U: integer-exact tie-averaged rank sums (×2 to stay BIGINT).
@@ -775,7 +776,7 @@ SELECT o_totalprice AS v,
        CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END)
             AS BIGINT) AS a,
        CAST(COUNT(*) AS BIGINT) AS t
-FROM orders
+FROM {orders}
 WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
 GROUP BY o_totalprice
 """
@@ -803,8 +804,10 @@ def stat_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM() OVER () remains either.  The 2R1 fold and the closing
     divisions are value-identical to the SQL text: both engines divide
     the same exact BIGINTs."""
-    register_views(spark, sf_dir)
-    per_value = spark.sql(_MWU_PER_VALUE_SPARK)
+    per_value = spark.sql(
+        _MWU_PER_VALUE_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+    )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["t", "a"])
     n1 = int(totals["a"])
     n2 = int(totals["t"]) - n1
@@ -874,17 +877,17 @@ def stat_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     migrated shape as stat_mann_whitney_u (|distinct| grows with the
     fact table); pre-bin scores at fact scale (the
     feature_quantile_binning pattern)."""
-    register_views(spark, sf_dir)
     per_value = spark.sql(
         """
         SELECT o_totalprice AS v,
                CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0
                         END) AS BIGINT) AS a,
                CAST(COUNT(*) AS BIGINT) AS t
-        FROM orders
+        FROM {orders}
         WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
         GROUP BY o_totalprice
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["t", "a"])
     n_pos = int(totals["a"])
@@ -914,7 +917,7 @@ def stat_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANOVA_SQL = """
 WITH g AS (
     SELECT o_orderpriority AS grp, CAST(o_totalprice AS DECIMAL(18,2)) AS x
-    FROM orders
+    FROM {orders}
 ), sums AS (
     SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(x) AS DECIMAL(30,2)) AS s_dec,
@@ -942,7 +945,7 @@ FROM tot
 """
 
 
-@query("stat_anova_oneway", oracle=_ANOVA_SQL)
+@query("stat_anova_oneway", oracle=bare_tables(_ANOVA_SQL))
 def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA F across ALL five order priorities on order total —
     the k-group generalization of stat_welch_ttest that answers "does
@@ -963,8 +966,7 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: k=5 groups — three numbers per group cross the wire
     regardless of fact size; partial aggregation does the heavy sum
     map-side."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ANOVA_SQL)
+    return spark.sql(_ANOVA_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _levene_sql(median_expr: str) -> str:
@@ -975,7 +977,7 @@ def _levene_sql(median_expr: str) -> str:
     return f"""
 WITH g AS (
     SELECT o_orderpriority AS grp, CAST(o_totalprice AS DECIMAL(18,2)) AS x
-    FROM orders
+    FROM {{orders}}
 ), med AS (
     SELECT grp, {median_expr} AS m
     FROM g GROUP BY grp
@@ -1011,7 +1013,7 @@ _LEVENE_ORACLE = _levene_sql("quantile_disc(x, 0.5)")
 _LEVENE_SPARK = _levene_sql("percentile_disc(0.5) WITHIN GROUP (ORDER BY x)")
 
 
-@query("stat_levene_brown_forsythe", oracle=_LEVENE_ORACLE)
+@query("stat_levene_brown_forsythe", oracle=bare_tables(_LEVENE_ORACLE))
 def stat_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe (median-centered Levene) test for equal variances
     across the five order priorities — the gatekeeper run BEFORE any
@@ -1034,8 +1036,7 @@ def stat_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a 5-row broadcast join between them; both aggregations partial-
     combine map-side.  At 100 TB the exact median swaps for the t-digest
     / pre-binned pick with the same downstream text."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LEVENE_SPARK)
+    return spark.sql(_LEVENE_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 PERM_K = 64  # counter-based label permutations
@@ -1052,7 +1053,7 @@ WITH pts AS (
     SELECT o_orderkey AS key,
            CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS obs_g1,
            CAST(o_totalprice AS DECIMAL(18,2)) AS x
-    FROM orders
+    FROM {{orders}}
     WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
 ), seeded AS (
     SELECT {seed_gen} AS seed, obs_g1, key, x FROM pts
@@ -1094,7 +1095,7 @@ _PERM_ORACLE = _perm_sql(f"unnest(range(-1, {PERM_K}))")
 _PERM_SPARK = _perm_sql(f"explode(sequence(-1, {PERM_K - 1}))")
 
 
-@query("stat_permutation_shift", oracle=_PERM_ORACLE)
+@query("stat_permutation_shift", oracle=bare_tables(_PERM_ORACLE))
 def stat_permutation_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Permutation test for the URGENT-vs-LOW mean-spend shift: the
     observed |mean difference| is ranked against {PERM_K} label
@@ -1116,8 +1117,7 @@ def stat_permutation_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 2(K+1) cells, so the shuffle carries ~130 tiny rows no matter the
     fact size.  The seed fanout is a LATERAL generator in the SELECT
     (explode/unnest), so there is no join node at all — guard-clean."""
-    register_views(spark, sf_dir)
-    return spark.sql(_PERM_SPARK)
+    return spark.sql(_PERM_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 # Monthly (volume, revenue-cents) series shared by the Kendall/Spearman
@@ -1126,7 +1126,7 @@ _MONTHLY_XY = """
 SELECT CAST(DATE_TRUNC('month', CAST(o_orderdate AS DATE)) AS DATE) AS m,
        CAST(COUNT(*) AS BIGINT) AS x,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS y
-FROM orders
+FROM {orders}
 GROUP BY CAST(DATE_TRUNC('month', CAST(o_orderdate AS DATE)) AS DATE)
 """
 
@@ -1138,7 +1138,7 @@ def _kendall_tail(src: str, unnest_expr: str) -> str:
     ``unnest(range(...))``) — the Theil-Sen pair-generation rewrite
     that keeps i<j pair enumeration an EQUI-join (no nested loop).
     Shared literal text between the oracle (src='idx' CTE) and the
-    Spark path (src=temp view over the two-phase row index)."""
+    Spark path (src=the two-phase row index, bound per call)."""
     return f"""lefts AS (
     SELECT i AS j, x AS xj, y AS yj, {unnest_expr} AS i_left
     FROM {src} WHERE i > 0
@@ -1167,7 +1167,7 @@ WITH monthly AS ({_MONTHLY_XY}
 ), {_kendall_tail("idx", "unnest(range(0, i))")}"""
 
 
-@query("stat_kendall_tau", oracle=_KENDALL_ORACLE)
+@query("stat_kendall_tau", oracle=bare_tables(_KENDALL_ORACLE))
 def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall tau-b between monthly order volume and monthly revenue —
     the rank-concordance test that answers "do these two series move
@@ -1195,17 +1195,12 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly reduction before it is the only fact-sized stage.  The
     pair-census fragment is ONE shared SQL text (_kendall_tail) on
     both engines."""
-    register_views(spark, sf_dir)
-    monthly = spark.sql(_MONTHLY_XY)
+    monthly = spark.sql(_MONTHLY_XY, orders=load_table(spark, sf_dir, "orders"))
     idx_df, _n = ranked_row_index(monthly, [F.asc("m")])
-    idx_df.select(
-        (F.col("_idx") - 1).cast("long").alias("i"), "x", "y"
-    ).createOrReplaceTempView("_kendall_idx")
     return spark.sql(
         "WITH "
-        + _kendall_tail(
-            "_kendall_idx", "explode(sequence(CAST(0 AS BIGINT), i - 1))"
-        )
+        + _kendall_tail("{idx}", "explode(sequence(CAST(0 AS BIGINT), i - 1))"),
+        idx=idx_df.select((F.col("_idx") - 1).cast("long").alias("i"), "x", "y"),
     )
 
 
@@ -1248,7 +1243,7 @@ WITH monthly AS ({_MONTHLY_XY}
 {_spearman_closing("sums")}"""
 
 
-@query("stat_spearman_rho", oracle=_SPEARMAN_SQL)
+@query("stat_spearman_rho", oracle=bare_tables(_SPEARMAN_SQL))
 def stat_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between monthly order volume and
     revenue — Pearson on the rank transform: monotone-association
@@ -1270,8 +1265,7 @@ def stat_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality with no single-task window, which is the point of the
     migration even though this instance's frame is month-bounded; then
     a 6-cell fold."""
-    register_views(spark, sf_dir)
-    monthly = spark.sql(_MONTHLY_XY)
+    monthly = spark.sql(_MONTHLY_XY, orders=load_table(spark, sf_dir, "orders"))
 
     def midranks(col: str, alias: str) -> DataFrame:
         pv = monthly.groupBy(col).agg(F.count(F.lit(1)).cast("long").alias("t"))
@@ -1290,8 +1284,7 @@ def stat_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("ay") * F.col("ay")).cast("long").alias("syy"),
         F.sum(F.col("ax") * F.col("ay")).cast("long").alias("sxy"),
     )
-    sums.createOrReplaceTempView("_spearman_sums")
-    return spark.sql(_spearman_closing("_spearman_sums"))
+    return spark.sql(_spearman_closing("{sums}"), sums=sums)
 
 
 def _km_sql(day_idx: str, idiv: str) -> str:
@@ -1303,7 +1296,7 @@ WITH per_user AS (
     SELECT user_id,
            MIN({day_idx}) AS fd,
            MAX({day_idx}) AS ld
-    FROM events GROUP BY user_id
+    FROM {{events}} GROUP BY user_id
 ), spans AS (
     SELECT ld - fd AS dur, ld, MAX(ld) OVER () AS maxld FROM per_user
 ), marked AS (
@@ -1344,7 +1337,7 @@ _KM_SPARK = "WITH RECURSIVE " + _km_sql(
 ).strip().removeprefix("WITH ")
 
 
-@query("stat_kaplan_meier", oracle=_KM_ORACLE)
+@query("stat_kaplan_meier", oracle=bare_tables(_KM_ORACLE))
 def stat_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival over user lifetimes (first event to last
     event, in days) with RIGHT-CENSORING — the estimator behind every
@@ -1367,8 +1360,7 @@ def stat_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffles (user, 2 day-indexes)); steps/risk/km operate on
     |distinct durations| rows (bounded by the observation window in
     days), and the recursion depth equals that step count."""
-    register_views(spark, sf_dir)
-    return spark.sql(_KM_SPARK)
+    return spark.sql(_KM_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # Cohen's d: the effect-size companion to stat_welch_ttest — same exact
@@ -1377,7 +1369,7 @@ _COHENS_D_SQL = """
 WITH g AS (
     SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 2 END AS grp,
            CAST(o_totalprice AS DECIMAL(18,2)) AS x
-    FROM orders
+    FROM {orders}
     WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
 ), sums AS (
     SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1405,7 +1397,7 @@ FROM wide
 """
 
 
-@query("stat_cohens_d", oracle=_COHENS_D_SQL)
+@query("stat_cohens_d", oracle=bare_tables(_COHENS_D_SQL))
 def stat_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's d for the URGENT-vs-LOW spend shift — the EFFECT SIZE
     the significance tests deliberately don't report: at warehouse row
@@ -1421,8 +1413,7 @@ def stat_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     literally, dodging any intermediate rounding divergence).
 
     Scale: two-cell reduction — identical to the t-test's shape."""
-    register_views(spark, sf_dir)
-    return spark.sql(_COHENS_D_SQL)
+    return spark.sql(_COHENS_D_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # Cramér's V: the chi-square machinery re-read as a [0,1] association
@@ -1431,7 +1422,7 @@ _CRAMERS_V_SQL = """
 WITH cells AS (
     SELECT event_type, CAST(EXTRACT(DAY FROM ts) AS BIGINT) % 7 AS day_bucket,
            CAST(COUNT(*) AS BIGINT) AS obs
-    FROM events
+    FROM {events}
     GROUP BY event_type, CAST(EXTRACT(DAY FROM ts) AS BIGINT) % 7
 ), marg AS (
     SELECT event_type, day_bucket, obs,
@@ -1459,7 +1450,7 @@ FROM folded
 """
 
 
-@query("stat_cramers_v", oracle=_CRAMERS_V_SQL)
+@query("stat_cramers_v", oracle=bare_tables(_CRAMERS_V_SQL))
 def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér's V for the event_type × day-bucket association — the
     [0,1] effect size the chi-square test needs beside it
@@ -1473,8 +1464,7 @@ def stat_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula (sqrt and LEAST spell identically in both dialects).
 
     Scale: |types| × 7 cells regardless of fact size."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CRAMERS_V_SQL)
+    return spark.sql(_CRAMERS_V_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # Two-proportion pooled z-test: exact conversion counts per arm, one
@@ -1485,7 +1475,7 @@ WITH per_user AS (
            MAX(CASE WHEN event_type = 'purchase'
                      AND CAST(value AS DECIMAL(18,2)) > 90 THEN 1 ELSE 0 END)
                AS converted
-    FROM events GROUP BY user_id
+    FROM {events} GROUP BY user_id
 ), arms AS (
     SELECT arm,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -1509,7 +1499,7 @@ FROM wide
 """
 
 
-@query("stat_two_proportion_ztest", oracle=_PROP_Z_SQL)
+@query("stat_two_proportion_ztest", oracle=bare_tables(_PROP_Z_SQL))
 def stat_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion pooled z-test on user-level HIGH-VALUE purchase
     conversion (a purchase over 90 — plain any-purchase saturates at
@@ -1529,8 +1519,7 @@ def stat_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-user reduction (the fact-sized stage), 2-row arm fold,
     scalar output."""
-    register_views(spark, sf_dir)
-    return spark.sql(_PROP_Z_SQL)
+    return spark.sql(_PROP_Z_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # Power analysis / minimum detectable effect: exact per-arm moments, the
@@ -1539,7 +1528,7 @@ _POWER_MDE_SQL = """
 WITH g AS (
     SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 2 END AS grp,
            CAST(o_totalprice AS DECIMAL(18,2)) AS x
-    FROM orders
+    FROM {orders}
     WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
 ), sums AS (
     SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1570,7 +1559,7 @@ FROM wide
 """
 
 
-@query("stat_power_mde", oracle=_POWER_MDE_SQL)
+@query("stat_power_mde", oracle=bare_tables(_POWER_MDE_SQL))
 def stat_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimum detectable effect at 80% power / two-sided alpha=0.05
     for the URGENT-vs-LOW spend comparison — the PRE-experiment
@@ -1590,8 +1579,7 @@ def stat_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     "X% lift detectable" reading.
 
     Scale: two-cell reduction."""
-    register_views(spark, sf_dir)
-    return spark.sql(_POWER_MDE_SQL)
+    return spark.sql(_POWER_MDE_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 BOOT_K = 30  # bootstrap replicas
@@ -1626,7 +1614,7 @@ def _bootstrap_sql(seed_gen: str) -> str:
 WITH pts AS (
     SELECT o_orderkey AS key,
            CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-    FROM orders WHERE o_orderpriority = '1-URGENT'
+    FROM {{orders}} WHERE o_orderpriority = '1-URGENT'
 ), fan AS (
     SELECT {seed_gen} AS seed, key, cents FROM pts
 ), weighted AS (
@@ -1662,7 +1650,7 @@ _BOOT_ORACLE = _bootstrap_sql(f"unnest(range(0, {BOOT_K}))")
 _BOOT_SPARK = _bootstrap_sql(f"explode(sequence(0, {BOOT_K - 1}))")
 
 
-@query("stat_bootstrap_se", oracle=_BOOT_ORACLE)
+@query("stat_bootstrap_se", oracle=bare_tables(_BOOT_ORACLE))
 def stat_bootstrap_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bootstrap standard error of the mean URGENT order value — the
     distribution-free uncertainty quote for ANY statistic, here run as
@@ -1683,8 +1671,7 @@ def stat_bootstrap_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — the shuffle carries K rows per partition, not
     K x rows (the stat_permutation_shift shape); the 1x1 join of the
     two global folds is the agg_hll_sketch_rollup pattern."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BOOT_SPARK)
+    return spark.sql(_BOOT_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _wilcoxon_by_abs_sql(day_idx: str, idiv: str) -> str:
@@ -1696,7 +1683,7 @@ def _wilcoxon_by_abs_sql(day_idx: str, idiv: str) -> str:
 WITH e AS (
     SELECT user_id, {day_idx} AS d,
            CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-    FROM events
+    FROM {{events}}
 ), per_user AS (
     SELECT user_id,
            CAST(SUM(CASE WHEN d > (SELECT (MIN(d) + MAX(d)) {idiv} 2 FROM e)
@@ -1744,7 +1731,7 @@ WITH by_abs AS ({_wilcoxon_by_abs_sql(
 {_wilcoxon_closing("folded")}"""
 
 
-@query("stat_wilcoxon_signed_rank", oracle=_WILCOXON_ORACLE)
+@query("stat_wilcoxon_signed_rank", oracle=bare_tables(_WILCOXON_ORACLE))
 def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilcoxon signed-rank test on per-user pre-vs-post spend (the
     CUPED split's own panel) — the PAIRED nonparametric test the family
@@ -1767,9 +1754,9 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     OVER ()); the |distinct |d|| cumulative — fact-growing for cent
     diffs — rides the two-phase ranked_prefix_sum, the migrated
     stat_mann_whitney_u shape; pre-bin at fact scale."""
-    register_views(spark, sf_dir)
     by_abs = spark.sql(
-        _wilcoxon_by_abs_sql("UNIX_DATE(CAST(ts AS DATE))", "DIV")
+        _wilcoxon_by_abs_sql("UNIX_DATE(CAST(ts AS DATE))", "DIV"),
+        events=load_table(spark, sf_dir, "events"),
     )
     ranked, _tot = ranked_prefix_sum(by_abs, [F.asc("ad")], ["t"])
     folded = ranked.agg(
@@ -1785,8 +1772,7 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("tie_cubes"),
     )
-    folded.createOrReplaceTempView("_wilcoxon_folds")
-    return spark.sql(_wilcoxon_closing("_wilcoxon_folds"))
+    return spark.sql(_wilcoxon_closing("{folds}"), folds=folded)
 
 
 FDR_B = 999  # permutations per hypothesis; p granularity 1/1000
@@ -1809,7 +1795,7 @@ def _fdr_bh_sql(seed_gen: str) -> str:
 WITH pts AS (
     SELECT c_custkey AS key, c_nationkey AS obs_g,
            CAST(c_acctbal AS DECIMAL(18,2)) AS x
-    FROM customer
+    FROM {{customer}}
 ), seeded AS (
     SELECT {seed_gen} AS seed, obs_g, key, x FROM pts
 ), fan AS (
@@ -1871,7 +1857,7 @@ _FDR_ORACLE = _fdr_bh_sql(f"unnest(range(-1, {FDR_B}))")
 _FDR_SPARK = _fdr_bh_sql(f"explode(sequence(-1, {FDR_B - 1}))")
 
 
-@query("stat_fdr_bh_control", oracle=_FDR_ORACLE)
+@query("stat_fdr_bh_control", oracle=bare_tables(_FDR_ORACLE))
 def stat_fdr_bh_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Hochberg false-discovery-rate control over a FAMILY of
     m = 25 simultaneous hypotheses (one per nation: "this nation's mean
@@ -1899,8 +1885,7 @@ def stat_fdr_bh_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     (B+1)×{FDR_GROUPS} cells before any shuffle; everything after is
     25-row arithmetic.  At 100 TB: same plan, the fan pipelines into
     the partial agg."""
-    register_views(spark, sf_dir)
-    return spark.sql(_FDR_SPARK)
+    return spark.sql(_FDR_SPARK, customer=load_table(spark, sf_dir, "customer"))
 
 
 def _poisson_ci_sql(span_days: str) -> str:
@@ -1912,7 +1897,7 @@ WITH per_type AS (
            CAST(COUNT(*) AS BIGINT) AS n_events,
            MIN(CAST(ts AS DATE)) AS d0,
            MAX(CAST(ts AS DATE)) AS d1
-    FROM events GROUP BY event_type
+    FROM {{events}} GROUP BY event_type
 ), spanned AS (
     SELECT event_type, n_events,
            {span_days} + 1 AS n_days
@@ -1936,7 +1921,7 @@ _POISSON_SPARK = _poisson_ci_sql(
 )
 
 
-@query("stat_poisson_rate_ci", oracle=_POISSON_ORACLE)
+@query("stat_poisson_rate_ci", oracle=bare_tables(_POISSON_ORACLE))
 def stat_poisson_rate_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type daily arrival rate with a 95% Poisson confidence
     interval (normal approximation: rate ± 1.96·√n / days) — the
@@ -1954,8 +1939,7 @@ def stat_poisson_rate_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined per-type reduction is the only
     fact-sized stage; the span window runs over |event types| rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_POISSON_SPARK)
+    return spark.sql(_POISSON_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 CA_TREND_PRICE = 150_000  # "large order" success definition
@@ -1967,7 +1951,7 @@ WITH groups AS (
            CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(CASE WHEN o_totalprice > {CA_TREND_PRICE}
                          THEN 1 ELSE 0 END) AS BIGINT) AS r
-    FROM orders GROUP BY SUBSTRING(o_orderpriority, 1, 1)
+    FROM {{orders}} GROUP BY SUBSTRING(o_orderpriority, 1, 1)
 ), sums AS (
     SELECT CAST(SUM(n) AS BIGINT) AS nn,
            CAST(SUM(r) AS BIGINT) AS rr,
@@ -1987,7 +1971,7 @@ FROM sums
 """
 
 
-@query("stat_cochran_armitage_trend", oracle=_CA_TREND_SQL)
+@query("stat_cochran_armitage_trend", oracle=bare_tables(_CA_TREND_SQL))
 def stat_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Armitage trend test: is the large-order rate MONOTONE in
     order priority?  The chi-square independence test (stat_chi_square_
@@ -2006,8 +1990,7 @@ def stat_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one 5-group map-side-combined reduction over the fact scan;
     everything after is single-row arithmetic."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CA_TREND_SQL)
+    return spark.sql(_CA_TREND_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _median_ci_sql(idiv: str) -> str:
@@ -2019,7 +2002,7 @@ WITH ranked AS (
            ROW_NUMBER() OVER (PARTITION BY event_type
                               ORDER BY value, event_id) AS rn,
            COUNT(*) OVER (PARTITION BY event_type) AS n
-    FROM events
+    FROM {{events}}
 ), fences AS (
     SELECT event_type, value, rn, n,
            (n - 1) {idiv} 2 + 1 AS r_med,
@@ -2041,7 +2024,7 @@ GROUP BY event_type
 """
 
 
-@query("stat_median_ci_orderstat", oracle=_median_ci_sql("//"))
+@query("stat_median_ci_orderstat", oracle=bare_tables(_median_ci_sql("//")))
 def stat_median_ci_orderstat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-free 95% confidence interval for the MEDIAN via
     order statistics: the interval between ranks n/2 ± 1.96·√n/2 covers
@@ -2061,8 +2044,7 @@ def stat_median_ci_orderstat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-type window sort (the exact-quantile cost, documented
     trade vs approx) and a group fold; output is |event types| rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_median_ci_sql("DIV"))
+    return spark.sql(_median_ci_sql("DIV"), events=load_table(spark, sf_dir, "events"))
 
 
 # Wald–Wolfowitz runs test: exact integer run/sign counts (the mean
@@ -2072,7 +2054,7 @@ _RUNS_TEST_SQL = """
 WITH daily AS (
     SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
            CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM events GROUP BY 1
+    FROM {events} GROUP BY 1
 ), tot AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
            CAST(SUM(cnt) AS BIGINT) AS total
@@ -2107,7 +2089,7 @@ FROM agg
 """
 
 
-@query("stat_runs_test_daily", oracle=_RUNS_TEST_SQL)
+@query("stat_runs_test_daily", oracle=bare_tables(_RUNS_TEST_SQL))
 def stat_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald–Wolfowitz RUNS test for randomness of the daily event-count
     series: each day is classified above/below the corpus mean (an
@@ -2129,8 +2111,7 @@ def stat_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the daily rollup is the only fact-sized stage (map-side
     combinable count per day); the run scan is a single ordered window
     over |days| rows — bounded, like every control-chart operator here."""
-    register_views(spark, sf_dir)
-    return spark.sql(_RUNS_TEST_SQL)
+    return spark.sql(_RUNS_TEST_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # Friedman test: integer average-ranks in 2x scale (2*min_rank + ties - 1),
@@ -2240,7 +2221,7 @@ WITH s AS (
            CAST(SUM(CAST(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)
                          * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)
                          AS DECIMAL(38,0))) AS DOUBLE) AS s4
-    FROM lineitem GROUP BY l_returnflag
+    FROM {lineitem} GROUP BY l_returnflag
 ), m AS (
     SELECT l_returnflag, n,
            s1 / n AS mean,
@@ -2263,7 +2244,7 @@ FROM m
 """
 
 
-@query("stat_jarque_bera", oracle=_JB_SQL)
+@query("stat_jarque_bera", oracle=bare_tables(_JB_SQL))
 def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jarque-Bera normality test per return-flag group: JB = n/6·(S² +
     (K−3)²/4) from exact moments of l_quantity — the gate a forecasting
@@ -2284,8 +2265,7 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable groupBy to |groups| rows; the moment
     formula is row-local on that bounded table.  This is the textbook
     single-pass parallel moments fold."""
-    register_views(spark, sf_dir)
-    return spark.sql(_JB_SQL)
+    return spark.sql(_JB_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # Theil-Sen trend: median of pairwise slopes over the DAILY revenue series.
@@ -2296,7 +2276,7 @@ _THEIL_SEN_SQL = """
 WITH daily AS (
     SELECT CAST(o_orderdate AS DATE) AS d,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-    FROM orders
+    FROM {orders}
     WHERE EXTRACT(YEAR FROM o_orderdate) = 1995
     GROUP BY CAST(o_orderdate AS DATE)
 ), pairs AS (
@@ -2313,7 +2293,7 @@ FROM pairs
 """
 
 
-@query("stat_theil_sen_daily_slope", oracle=_THEIL_SEN_SQL)
+@query("stat_theil_sen_daily_slope", oracle=bare_tables(_THEIL_SEN_SQL))
 def stat_theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend estimator over the daily-revenue series: the
     median of all pairwise slopes, with the quartile slopes as a
@@ -2334,9 +2314,9 @@ def stat_theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     dual-engine budget, which is why the registry entry pins one year;
     multi-decade spines use the same SQL over month buckets).  The
     fact-sized work is the one groupBy building the spine."""
-    register_views(spark, sf_dir)
     return spark.sql(
-        _THEIL_SEN_SQL.replace("DATEDIFF('DAY', a.d, b.d)", "DATEDIFF(b.d, a.d)")
+        _THEIL_SEN_SQL.replace("DATEDIFF('DAY', a.d, b.d)", "DATEDIFF(b.d, a.d)"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -2347,7 +2327,7 @@ _GTEST_SQL = """
 WITH cells AS (
     SELECT event_type, CAST(EXTRACT(DAY FROM ts) AS BIGINT) % 7 AS day_bucket,
            CAST(COUNT(*) AS BIGINT) AS obs
-    FROM events
+    FROM {events}
     GROUP BY event_type, CAST(EXTRACT(DAY FROM ts) AS BIGINT) % 7
 ), marg AS (
     SELECT event_type, day_bucket, obs,
@@ -2373,7 +2353,7 @@ FROM terms
 """
 
 
-@query("stat_g_test_independence", oracle=_GTEST_SQL)
+@query("stat_g_test_independence", oracle=bare_tables(_GTEST_SQL))
 def stat_g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G-test (likelihood-ratio) of independence between event_type and
     the day%7 bucket — the chi-square op's exact-likelihood sibling
@@ -2393,8 +2373,7 @@ def stat_g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows run over that bounded table.  Zero-count cells never occur
     in the output of a COUNT groupBy, so the O·ln(O) terms are always
     finite — the convention matching the G-test's 0·ln(0)=0 limit."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GTEST_SQL)
+    return spark.sql(_GTEST_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 def _mann_kendall_sql(unnest_expr: str) -> str:
@@ -2405,7 +2384,7 @@ def _mann_kendall_sql(unnest_expr: str) -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS x
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), idx AS (
     SELECT CAST(ROW_NUMBER() OVER (ORDER BY d) - 1 AS BIGINT) AS i, x,
            CAST(COUNT(*) OVER (PARTITION BY x) AS BIGINT) AS t,
@@ -2444,7 +2423,7 @@ _MK_ORACLE = _mann_kendall_sql("unnest(range(0, i))")
 _MK_SPARK = _mann_kendall_sql("explode(sequence(CAST(0 AS BIGINT), i - 1))")
 
 
-@query("stat_mann_kendall_trend", oracle=_MK_ORACLE)
+@query("stat_mann_kendall_trend", oracle=bare_tables(_MK_ORACLE))
 def stat_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend TEST on the daily event-value series — the
     significance companion to events_theil_sen_trend over the same
@@ -2466,8 +2445,7 @@ def stat_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-bounded), hash-joined, folded map-side to 1 row; the two
     1-row folds meet in a scale-free 1×1 join (allowlisted).  The only
     fact-sized stage is the daily groupBy."""
-    register_views(spark, sf_dir)
-    return spark.sql(_MK_SPARK)
+    return spark.sql(_MK_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # Deming (orthogonal, delta=1) regression of monthly revenue-cents on
@@ -2479,7 +2457,7 @@ WITH monthly AS (
     SELECT CAST(DATE_TRUNC('month', CAST(o_orderdate AS DATE)) AS DATE) AS m,
            CAST(COUNT(*) AS BIGINT) AS x,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS y
-    FROM orders
+    FROM {orders}
     GROUP BY CAST(DATE_TRUNC('month', CAST(o_orderdate AS DATE)) AS DATE)
 ), sums AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -2510,7 +2488,7 @@ FROM cent
 """
 
 
-@query("stat_deming_regression", oracle=_DEMING_SQL)
+@query("stat_deming_regression", oracle=bare_tables(_DEMING_SQL))
 def stat_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deming (errors-in-both-variables, delta=1 orthogonal) regression
     of monthly revenue cents on monthly order volume — the
@@ -2533,8 +2511,7 @@ def stat_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole regression is two map-side-combinable aggregations; the
     slope is invariant to the n-scaling of centered moments, so no
     division order ambiguity exists between engines."""
-    register_views(spark, sf_dir)
-    return spark.sql(_DEMING_SQL)
+    return spark.sql(_DEMING_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _nelson_aalen_sql(day_idx: str, idiv: str) -> str:
@@ -2545,7 +2522,7 @@ WITH per_user AS (
     SELECT user_id,
            MIN({day_idx}) AS fd,
            MAX({day_idx}) AS ld
-    FROM events GROUP BY user_id
+    FROM {{events}} GROUP BY user_id
 ), spans AS (
     SELECT ld - fd AS dur, ld, MAX(ld) OVER () AS maxld FROM per_user
 ), marked AS (
@@ -2577,7 +2554,7 @@ _NA_ORACLE = _nelson_aalen_sql(
 _NA_SPARK = _nelson_aalen_sql("UNIX_DATE(CAST(ts AS DATE))", "DIV")
 
 
-@query("stat_nelson_aalen", oracle=_NA_ORACLE)
+@query("stat_nelson_aalen", oracle=bare_tables(_NA_ORACLE))
 def stat_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative-hazard estimator over the SAME
     user-lifetime spans as stat_kaplan_meier: H(t) = Σ_{{t_i≤t}} d_i/n_i
@@ -2597,8 +2574,7 @@ def stat_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized per-user reduction; everything after runs on
     the |distinct durations| step table through ordered windows.  The
     reverse-cumulative risk-set trick avoids any self-join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_NA_SPARK)
+    return spark.sql(_NA_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # TOST equivalence: margin = 5% of the pooled mean (an exact-rational
@@ -2619,7 +2595,7 @@ WITH folds AS (
         CAST(SUM(CASE WHEN event_type = 'view'
                  THEN CAST(value AS DECIMAL(18,4)) * CAST(value AS DECIMAL(18,4)) END)
              AS DOUBLE) AS q2
-    FROM events WHERE event_type IN ('click', 'view')
+    FROM {events} WHERE event_type IN ('click', 'view')
 ), stats AS (
     SELECT n1, n2,
            s1 / CAST(n1 AS DOUBLE) - s2 / CAST(n2 AS DOUBLE) AS diff,
@@ -2642,7 +2618,7 @@ FROM stats
 """
 
 
-@query("stat_tost_equivalence", oracle=_TOST_SQL)
+@query("stat_tost_equivalence", oracle=bare_tables(_TOST_SQL))
 def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOST (two one-sided tests) EQUIVALENCE test on click-vs-view
     event value — the inverse question of stat_welch_ttest: a
@@ -2664,8 +2640,7 @@ def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-aggregated fact pass to a 1-row fold; no join,
     no window, no second pass — the cheapest possible two-sample
     reduction shape."""
-    register_views(spark, sf_dir)
-    return spark.sql(_TOST_SQL)
+    return spark.sql(_TOST_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 def _runs_sql(med_expr: str) -> str:
@@ -2676,7 +2651,7 @@ def _runs_sql(med_expr: str) -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), med AS (
     SELECT {med_expr} AS m FROM daily
 ), signs AS (
@@ -2713,7 +2688,7 @@ _RUNS_ORACLE = _runs_sql("quantile_disc(cents, 0.5)")
 _RUNS_SPARK = _runs_sql("percentile_disc(0.5) WITHIN GROUP (ORDER BY cents)")
 
 
-@query("stat_runs_test_median", oracle=_RUNS_ORACLE)
+@query("stat_runs_test_median", oracle=bare_tables(_RUNS_ORACLE))
 def stat_runs_test_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEDIAN-split Wald-Wolfowitz runs test on the daily event-VALUE
     series — pinned beside stat_runs_test_daily (mean-split, count
@@ -2735,8 +2710,7 @@ def stat_runs_test_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized daily reduction; the median fold rides a
     scalar subquery (guard-clean, no cartesian); the lag window runs
     on the calendar-bounded day table."""
-    register_views(spark, sf_dir)
-    return spark.sql(_RUNS_SPARK)
+    return spark.sql(_RUNS_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # Durbin-Watson: exact integer OLS normal equations over the day index,
@@ -2746,7 +2720,7 @@ _DW_SQL = """
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {events} GROUP BY CAST(ts AS DATE)
 ), seq AS (
     SELECT cents, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS i
     FROM daily
@@ -2792,7 +2766,7 @@ FROM terms
 """
 
 
-@query("stat_durbin_watson", oracle=_DW_SQL)
+@query("stat_durbin_watson", oracle=bare_tables(_DW_SQL))
 def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Durbin-Watson autocorrelation test on the residuals of the daily
     event-value OLS trend — the "are my regression errors independent?"
@@ -2816,8 +2790,7 @@ def stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized daily reduction; the coefficient fold rides
     scalar subqueries (guard-clean); lag window on the calendar-bounded
     day table."""
-    register_views(spark, sf_dir)
-    return spark.sql(_DW_SQL)
+    return spark.sql(_DW_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # Cliff's delta: exact dominance counts from one per-value cumulative pass.
@@ -2873,7 +2846,6 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase ranked_prefix_sum — identical migrated posture to
     stat_ks_two_sample, same pre-binning note at 100 TB
     cardinalities."""
-    register_views(spark, sf_dir)
     per_value = spark.sql(
         """
         SELECT o_totalprice AS v,
@@ -2881,10 +2853,11 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                         END) AS BIGINT) AS c1,
                CAST(SUM(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0
                         END) AS BIGINT) AS c2
-        FROM orders
+        FROM {orders}
         WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
         GROUP BY o_totalprice
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["c1", "c2"])
     n1, n2 = int(totals["c1"]), int(totals["c2"])
@@ -2936,8 +2909,8 @@ def _kw_g_case() -> str:
 def _kruskal_closing(src: str) -> str:
     """Closing H/H_tie formula over a 1-row folds relation with columns
     (n, tie_sum, a0..a4, n0..n4) — ONE shared text for the DuckDB
-    oracle (src='folds' CTE) and the Spark path (src=temp view over the
-    two-phase fold), so both engines run the identical IEEE chain on
+    oracle (src='folds' CTE) and the Spark path (src=the two-phase fold
+    bound per call), so both engines run the identical IEEE chain on
     identical exact integers."""
     sum_term = " + ".join(
         f"CAST(a{j} AS DOUBLE) * CAST(a{j} AS DOUBLE) / CAST(n{j} AS DOUBLE)"
@@ -3009,14 +2982,14 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan is literal columns, not a join.  The closing H chain is ONE
     shared SQL text (_kruskal_closing) run over the fold on both
     engines."""
-    register_views(spark, sf_dir)
     per_value = spark.sql(
         f"""
         SELECT v, CAST(COUNT(*) AS BIGINT) AS cnt, {_kw_per_value_cols()}
         FROM (SELECT o_totalprice AS v, CASE {_kw_g_case()} END AS g
-              FROM orders)
+              FROM {{orders}})
         GROUP BY v
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["cnt"])
     n = int(totals["cnt"])
@@ -3034,8 +3007,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ],
     ).withColumn("n", F.lit(n).cast("long"))
-    folds.createOrReplaceTempView("_kw_folds")
-    return spark.sql(_kruskal_closing("_kw_folds"))
+    return spark.sql(_kruskal_closing("{folds}"), folds=folds)
 
 
 # --------------------------------------------------------------------------
@@ -3046,7 +3018,7 @@ _WELCH_ANOVA_SQL = """
 WITH g AS (
     SELECT o_orderpriority AS grp,
            CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc
-    FROM orders
+    FROM {orders}
 ), per_grp AS (
     -- integer-cent sums; scale-0 power sum (conversion-safe, see
     -- stat_brown_forsythe)
@@ -3110,7 +3082,7 @@ FROM terms
 """
 
 
-@query("stat_welch_anova", oracle=_WELCH_ANOVA_SQL)
+@query("stat_welch_anova", oracle=bare_tables(_WELCH_ANOVA_SQL))
 def stat_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's heteroscedastic one-way ANOVA across the five order
     priorities — the omnibus test that stays VALID when
@@ -3127,8 +3099,7 @@ def stat_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE map-side-combinable groupBy to |priorities| rows;
     everything after is 5-row arithmetic.  No window, no join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_WELCH_ANOVA_SQL)
+    return spark.sql(_WELCH_ANOVA_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # Bartlett's test: per-priority exact decimal power sums of price cents ->
@@ -3138,7 +3109,7 @@ _BARTLETT_SQL = """
 WITH pts AS (
     SELECT o_orderpriority AS grp,
            CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c
-    FROM orders
+    FROM {orders}
 ), g AS (
     -- BIGINT-only folds (int64 -> double is correctly rounded on BOTH
     -- engines; DECIMAL(38,0)/int128 past 2^64 is NOT — the r7
@@ -3196,7 +3167,7 @@ FROM fold
 """
 
 
-@query("stat_bartlett_test", oracle=_BARTLETT_SQL)
+@query("stat_bartlett_test", oracle=bare_tables(_BARTLETT_SQL))
 def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bartlett's variance-homogeneity test of order-price cents across
     the 5 priorities — completing the engine's homogeneity trio:
@@ -3219,8 +3190,7 @@ def stat_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE map-side-combinable groupBy to |priorities| rows; all
     later stages are 5-row arithmetic.  No window, no join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BARTLETT_SQL)
+    return spark.sql(_BARTLETT_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _chow_sql(x_expr: str) -> str:
@@ -3232,7 +3202,7 @@ WITH daily AS (
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS y,
            CASE WHEN CAST(o_orderdate AS DATE) < DATE '1998-05-01'
                 THEN 0 ELSE 1 END AS seg
-    FROM orders
+    FROM {{orders}}
     GROUP BY CAST({x_expr} AS BIGINT),
              CASE WHEN CAST(o_orderdate AS DATE) < DATE '1998-05-01'
                   THEN 0 ELSE 1 END
@@ -3305,7 +3275,7 @@ _CHOW_ORACLE = _chow_sql(
 _CHOW_SPARK = _chow_sql("DATEDIFF(CAST(o_orderdate AS DATE), DATE '1995-01-01')")
 
 
-@query("stat_chow_test", oracle=_CHOW_ORACLE)
+@query("stat_chow_test", oracle=bare_tables(_CHOW_ORACLE))
 def stat_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chow structural-break test on the daily-revenue trend: did the OLS
     line (revenue cents vs day index) CHANGE at the 1998-05-01 midpoint?
@@ -3326,8 +3296,7 @@ def stat_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 2 rows; everything after is constant-size arithmetic.  No
     window — the day index is exact calendar arithmetic, not a
     ROW_NUMBER."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CHOW_SPARK)
+    return spark.sql(_CHOW_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _ljung_box_sql(unnest7: str, x_expr: str, spine_expr: str) -> str:
@@ -3337,7 +3306,7 @@ def _ljung_box_sql(unnest7: str, x_expr: str, spine_expr: str) -> str:
 WITH raw AS (
     SELECT CAST({x_expr} AS BIGINT) AS di,
            CAST(COUNT(*) AS BIGINT) AS x
-    FROM events GROUP BY CAST({x_expr} AS BIGINT)
+    FROM {{events}} GROUP BY CAST({x_expr} AS BIGINT)
 ), bounds AS (
     SELECT CAST(MIN(di) AS BIGINT) AS mn, CAST(MAX(di) AS BIGINT) AS mx
     FROM raw
@@ -3404,7 +3373,7 @@ _LJUNG_SPARK = _ljung_box_sql(
 )
 
 
-@query("stat_ljung_box", oracle=_LJUNG_ORACLE)
+@query("stat_ljung_box", oracle=bare_tables(_LJUNG_ORACLE))
 def stat_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung-Box portmanteau test on the daily event-count series —
     Q = n(n+2)·Σ_{{k=1..7}} r_k²/(n−k) — the "is there ANY
@@ -3435,8 +3404,7 @@ def stat_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     left join and lag alignment stay metadata-cheap; lag alignment is
     the Theil-Sen explode+EQUI-join rewrite (calendar day-index join,
     never a window); the fold is 7 rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LJUNG_SPARK)
+    return spark.sql(_LJUNG_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # Tukey HSD pairwise statistics: per-group exact folds (Bartlett spelling),
@@ -3445,7 +3413,7 @@ _TUKEY_SQL = """
 WITH pts AS (
     SELECT o_orderpriority AS grp,
            CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c
-    FROM orders
+    FROM {orders}
 ), g AS (
     -- e6-scaled power sum: int64-safe to ~3.7e9 rows per group (~SF12000)
     -- — see the Bartlett fold comment for the full bound derivation
@@ -3485,7 +3453,7 @@ FROM g a JOIN g b ON a.grp < b.grp
 """
 
 
-@query("stat_tukey_hsd_pairs", oracle=_TUKEY_SQL)
+@query("stat_tukey_hsd_pairs", oracle=bare_tables(_TUKEY_SQL))
 def stat_tukey_hsd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tukey HSD pairwise table — the post-hoc that answers WHICH groups
     differ after a significant omnibus (ANOVA / Welch): for all 10
@@ -3505,8 +3473,7 @@ def stat_tukey_hsd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combinable groupBy to |priorities| rows; the
     pair fan is a 5-row panel self-join (bounded catalog side,
     allowlisted); the MSE is a scalar subquery over the same 5 rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_TUKEY_SQL)
+    return spark.sql(_TUKEY_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _breusch_pagan_sql(x_expr: str) -> str:
@@ -3516,7 +3483,7 @@ def _breusch_pagan_sql(x_expr: str) -> str:
 WITH raw AS (
     SELECT CAST({x_expr} AS BIGINT) AS xr,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS y
-    FROM orders
+    FROM {{orders}}
     GROUP BY CAST({x_expr} AS BIGINT)
 ), daily AS (
     -- min-anchor the day index so x >= 0 BY CONSTRUCTION, whatever the
@@ -3602,7 +3569,7 @@ _BP_SPARK = _breusch_pagan_sql(
 )
 
 
-@query("stat_breusch_pagan", oracle=_BP_ORACLE)
+@query("stat_breusch_pagan", oracle=bare_tables(_BP_ORACLE))
 def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Breusch-Pagan heteroscedasticity test (Koenker's studentized
     form) on the daily-revenue-vs-day OLS — does residual VARIANCE
@@ -3626,8 +3593,7 @@ def stat_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-reads the |days|-bounded daily CTE with the 1-row fit broadcast
     as a scalar-style cross join (calendar-bounded frame).  No
     window."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BP_SPARK)
+    return spark.sql(_BP_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _cooks_sql(x_expr: str) -> str:
@@ -3637,7 +3603,7 @@ def _cooks_sql(x_expr: str) -> str:
 WITH daily AS (
     SELECT CAST({x_expr} AS BIGINT) AS x,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS y
-    FROM orders
+    FROM {{orders}}
     GROUP BY CAST({x_expr} AS BIGINT)
 ), sums AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -3700,7 +3666,7 @@ _COOKS_ORACLE = _cooks_sql(
 _COOKS_SPARK = _cooks_sql("DATEDIFF(CAST(o_orderdate AS DATE), DATE '1995-01-01')")
 
 
-@query("stat_cooks_distance_days", oracle=_COOKS_ORACLE)
+@query("stat_cooks_distance_days", oracle=bare_tables(_COOKS_ORACLE))
 def stat_cooks_distance_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cook's distance — the INFLUENCE diagnostic closing the OLS
     residual suite (Durbin-Watson: correlation; Breusch-Pagan: scale;
@@ -3718,8 +3684,7 @@ def stat_cooks_distance_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one daily groupBy + two passes over the day-bounded table;
     the top-10 is an ORDER BY ... LIMIT over |days| rows (TakeOrdered,
     never a global sort materialization)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_COOKS_SPARK)
+    return spark.sql(_COOKS_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _granger_sql(x_expr: str) -> str:
@@ -3732,7 +3697,7 @@ WITH daily AS (
                 AS BIGINT) AS clicks,
            CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                 AS BIGINT) AS purchases
-    FROM events GROUP BY CAST({x_expr} AS BIGINT)
+    FROM {{events}} GROUP BY CAST({x_expr} AS BIGINT)
 ), lagged AS (
     SELECT cur.purchases AS y,
            prev.purchases AS a,
@@ -3791,7 +3756,7 @@ _GRANGER_ORACLE = _granger_sql(
 _GRANGER_SPARK = _granger_sql("DATEDIFF(CAST(ts AS DATE), DATE '2024-01-01')")
 
 
-@query("stat_granger_causality_lag1", oracle=_GRANGER_ORACLE)
+@query("stat_granger_causality_lag1", oracle=bare_tables(_GRANGER_ORACLE))
 def stat_granger_causality_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Granger causality (lag 1): do yesterday's CLICKS improve the
     prediction of today's PURCHASES beyond yesterday's purchases alone?
@@ -3811,8 +3776,7 @@ def stat_granger_causality_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combinable daily groupBy; everything after is
     a |days|-bounded join and a 1-row fold."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GRANGER_SPARK)
+    return spark.sql(_GRANGER_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # ===========================================================================
@@ -3873,8 +3837,10 @@ def stat_kuiper_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (the migrated-family posture): per-distinct-value reduction,
     ECDF accumulation on the two-phase ranked_prefix_sum, two ordinary
     parallel MAX folds; pre-bin values at fact scale."""
-    register_views(spark, sf_dir)
-    per_value = spark.sql(_KS_PER_VALUE_SPARK)
+    per_value = spark.sql(
+        _KS_PER_VALUE_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+    )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["c1", "c2"])
     n1, n2 = int(totals["c1"]), int(totals["c2"])
     gap = F.col("cum_c1") * F.lit(n2).cast("long") - F.col("cum_c2") * F.lit(
@@ -3957,7 +3923,6 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     consecutive-value pairing both ride the two-phase library — the
     successor value comes from an equi-join on the two-phase row index
     (idx+1), not a LEAD window; pre-bin at fact scale."""
-    register_views(spark, sf_dir)
     per_value = spark.sql(
         """
         SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS v,
@@ -3965,10 +3930,11 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
                         END) AS BIGINT) AS c1,
                CAST(SUM(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0
                         END) AS BIGINT) AS c2
-        FROM orders
+        FROM {orders}
         WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
         GROUP BY CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     ).withColumn("_one", F.lit(1).cast("long"))
     ranked, totals = ranked_prefix_sum(
         per_value, [F.asc("v")], ["c1", "c2", "_one"]
@@ -4010,7 +3976,7 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tie half-credit so the whole fold is BIGINT.
 def _jt_closing(src: str) -> str:
     """Closing JT/E/z formula over a 1-row relation (u2, n, n0..n4) —
-    one shared text for the oracle CTE and the Spark temp view.  z uses
+    one shared text for the oracle CTE and the Spark-side bound frame.  z uses
     the no-tie variance; the near-continuous price column makes the tie
     correction negligible (documented in the operator docstring)."""
     sq = " + ".join(
@@ -4103,14 +4069,14 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     all five pooled cumulatives ride ONE two-phase ranked_prefix_sum
     pass; the pairwise fan is 10 literal column products, not a join;
     1-row fold + shared closing."""
-    register_views(spark, sf_dir)
     per_value = spark.sql(
         f"""
         SELECT v, {_kw_per_value_cols()}
         FROM (SELECT o_totalprice AS v, CASE {_kw_g_case()} END AS g
-              FROM orders)
+              FROM {{orders}})
         GROUP BY v
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
     ranked, totals = ranked_prefix_sum(
         per_value, [F.asc("v")], [f"c{j}" for j in range(5)]
@@ -4127,8 +4093,7 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     for j, ng in enumerate(ns):
         folds = folds.withColumn(f"n{j}", F.lit(ng).cast("long"))
     folds = folds.withColumn("n", F.lit(sum(ns)).cast("long"))
-    folds.createOrReplaceTempView("_jt_folds")
-    return spark.sql(_jt_closing("_jt_folds"))
+    return spark.sql(_jt_closing("{folds}"), folds=folds)
 
 
 # Brunner–Munzel: the heteroscedasticity-robust replacement for
@@ -4234,8 +4199,10 @@ def stat_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-distinct-value reduction; BOTH cumulative passes (c1,
     c2 — the pooled midrank is their sum) ride one two-phase
     ranked_prefix_sum; 1-row fold + shared closing."""
-    register_views(spark, sf_dir)
-    per_value = spark.sql(_KS_PER_VALUE_SPARK)
+    per_value = spark.sql(
+        _KS_PER_VALUE_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+    )
     ranked, totals = ranked_prefix_sum(per_value, [F.asc("v")], ["c1", "c2"])
     n1, n2 = int(totals["c1"]), int(totals["c2"])
     a = 2 * (F.col("cum_c1") + F.col("cum_c2")) - (
@@ -4253,8 +4220,7 @@ def stat_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n1", F.lit(n1).cast("long"))
         .withColumn("n2", F.lit(n2).cast("long"))
     )
-    folds.createOrReplaceTempView("_bm_folds")
-    return spark.sql(_bm_closing("_bm_folds"))
+    return spark.sql(_bm_closing("{folds}"), folds=folds)
 
 
 # Grubbs' max-outlier statistic: G = max|x − x̄| / s — scalar-subquery
@@ -4262,7 +4228,7 @@ def stat_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines.
 _GRUBBS_SQL = """
 WITH pts AS (
-    SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c FROM orders
+    SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c FROM {orders}
 ), sums AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(c) AS BIGINT) AS s,
@@ -4291,7 +4257,7 @@ FROM sums
 """
 
 
-@query("stat_grubbs_max_outlier", oracle=_GRUBBS_SQL)
+@query("stat_grubbs_max_outlier", oracle=bare_tables(_GRUBBS_SQL))
 def stat_grubbs_max_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grubbs' test statistic for the single most extreme order total —
     G = max|x−x̄|/s plus the suspect value itself — the "is my worst
@@ -4312,8 +4278,7 @@ def stat_grubbs_max_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     max) + one filtered argmax pass, all map-side-combinable partial
     aggregates with the 1-row moments riding scalar subqueries — no
     window, no join node, no sort."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GRUBBS_SQL)
+    return spark.sql(_GRUBBS_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # Page's L trend test: the ORDERED sibling of the Friedman block design —
@@ -4396,7 +4361,6 @@ def stat_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "n_weeks", F.lit(complete.count()).cast("long")
     )
-    agg.createOrReplaceTempView("_page_agg")
     return spark.sql(
         """
 SELECT n_weeks, CAST(7 AS BIGINT) AS k,
@@ -4406,8 +4370,9 @@ SELECT n_weeks, CAST(7 AS BIGINT) AS k,
         - CAST(n_weeks AS DOUBLE) * 7e0 * 8e0 * 8e0 / 4e0)
        / SQRT(CAST(n_weeks AS DOUBLE) * 49e0 * 8e0 * 48e0 / 144e0)
            AS page_z
-FROM _page_agg
-"""
+FROM {agg}
+""",
+        agg=agg,
     )
 
 
@@ -4426,7 +4391,7 @@ WITH daily AS (
     SELECT {day_expr} AS d,
            CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS r,
            CAST(COUNT(*) AS BIGINT) AS c
-    FROM events WHERE value IS NOT NULL GROUP BY {day_expr}
+    FROM {{events}} WHERE value IS NOT NULL GROUP BY {day_expr}
 ), tot AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(r) AS BIGINT) AS rt,
@@ -4464,7 +4429,7 @@ _JACK_ORACLE = _jackknife_sql("CAST(date_trunc('day', ts) AS DATE)")
 _JACK_SPARK = _jackknife_sql("CAST(date_trunc('DAY', ts) AS DATE)")
 
 
-@query("stat_jackknife_ratio_se", oracle=_JACK_ORACLE)
+@query("stat_jackknife_ratio_se", oracle=bare_tables(_JACK_ORACLE))
 def stat_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete-1 jackknife standard error for the revenue-per-event
     RATIO over daily blocks — the resampling family's third member
@@ -4488,5 +4453,4 @@ def stat_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row totals riding scalar subqueries — leave-one-out WITHOUT
     materializing n copies of the data, which is the entire point of
     the identity θ_(i) = (R−r_i)/(C−c_i)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_JACK_SPARK)
+    return spark.sql(_JACK_SPARK, events=load_table(spark, sf_dir, "events"))

@@ -23,13 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table, register_views
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.registry import query
 
 _OHLC_SQL = """
 WITH ticks AS (
     SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id, value
-    FROM events
+    FROM {events}
     WHERE event_type IN ('view', 'purchase')
 ), ordered AS (
     SELECT event_type, day, value,
@@ -50,7 +50,7 @@ GROUP BY event_type, day
 """
 
 
-@query("events_ohlc_bars", oracle=_OHLC_SQL)
+@query("events_ohlc_bars", oracle=bare_tables(_OHLC_SQL))
 def events_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLC (open/high/low/close) candlestick bars per event type —
     the canonical downsampling of a tick stream to a chartable series.
@@ -63,15 +63,14 @@ def events_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (type, day)-keyed window pass + groupBy — the window
     partitions by the same key the groupBy shuffles on, so AQE plans a
     single exchange feeding both."""
-    register_views(spark, sf_dir)
-    return spark.sql(_OHLC_SQL)
+    return spark.sql(_OHLC_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 _RVOL_SQL = """
 WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS day,
            SUM(CAST(value AS DECIMAL(18,2))) AS v
-    FROM events
+    FROM {events}
     GROUP BY event_type, CAST(ts AS DATE)
 ), lagged AS (
     SELECT event_type, v,
@@ -94,7 +93,7 @@ GROUP BY event_type
 """
 
 
-@query("events_realized_volatility", oracle=_RVOL_SQL)
+@query("events_realized_volatility", oracle=bare_tables(_RVOL_SQL))
 def events_realized_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Realized (historical) volatility of the daily value series per
     event type: the sample standard deviation of day-over-day SIMPLE
@@ -109,15 +108,14 @@ def events_realized_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: |days|-sized after the first reduction; the per-type lag
     window partitions on the groupBy key."""
-    register_views(spark, sf_dir)
-    return spark.sql(_RVOL_SQL)
+    return spark.sql(_RVOL_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 _ROLLCORR_SQL = """
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day, event_type,
            SUM(CAST(value AS DECIMAL(18,2))) AS v
-    FROM events
+    FROM {events}
     WHERE event_type IN ('view', 'purchase')
     GROUP BY CAST(ts AS DATE), event_type
 ), wide AS (
@@ -148,7 +146,7 @@ WHERE n = 7
 """
 
 
-@query("window_rolling_corr", oracle=_ROLLCORR_SQL)
+@query("window_rolling_corr", oracle=bare_tables(_ROLLCORR_SQL))
 def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day rolling Pearson correlation between the daily view
     and purchase value series — "are these metrics still coupled?" as a
@@ -165,14 +163,13 @@ def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-sized series; at multi-year scale, partition by year with
     a 6-day overlap stripe (the documented stitch from
     events_outage_windows)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ROLLCORR_SQL)
+    return spark.sql(_ROLLCORR_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 _PARETO_SQL = """
 WITH pts AS (
     SELECT o_orderkey, o_totalprice AS price, CAST(o_orderdate AS DATE) AS day
-    FROM orders
+    FROM {orders}
 ), daily_max AS (
     SELECT day, MAX(price) AS day_best
     FROM pts
@@ -196,7 +193,7 @@ GROUP BY f.day, f.day_best
 """
 
 
-@query("orders_pareto_frontier", oracle=_PARETO_SQL)
+@query("orders_pareto_frontier", oracle=bare_tables(_PARETO_SQL))
 def orders_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto frontier (skyline) of orders over (recency, totalprice):
     the orders no other order strictly beats on BOTH date and price —
@@ -214,8 +211,7 @@ def orders_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: groupBy(day) shuffles |days| rows; the ordered scan is
     calendar-sized; the rejoin is day-keyed.  A d-dimensional skyline
     generalizes via the same pre-reduction per dominance chain."""
-    register_views(spark, sf_dir)
-    return spark.sql(_PARETO_SQL)
+    return spark.sql(_PARETO_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 def _theil_sen_sql(median_expr: str, unnest_expr: str) -> str:
@@ -224,7 +220,7 @@ def _theil_sen_sql(median_expr: str, unnest_expr: str) -> str:
     return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day, SUM(CAST(value AS DECIMAL(18,2))) AS v
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), idx AS (
     SELECT CAST(DATEDIFF(day, MIN(day) OVER (), day) AS BIGINT) AS di,
            CAST(v * 100 AS BIGINT) AS cents
@@ -256,7 +252,7 @@ _THEIL_SEN_SPARK = _theil_sen_sql(
 )
 
 
-@query("events_theil_sen_trend", oracle=_THEIL_SEN_ORACLE)
+@query("events_theil_sen_trend", oracle=bare_tables(_THEIL_SEN_ORACLE))
 def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend of the daily event-value series: the
     MEDIAN of all pairwise day-to-day slopes — the estimator that
@@ -276,14 +272,13 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared, not the fact — years of data are ~10⁶ pairs from one
     days-sized frame; the fact-scale work remains the one daily
     groupBy."""
-    register_views(spark, sf_dir)
-    return spark.sql(_THEIL_SEN_SPARK)
+    return spark.sql(_THEIL_SEN_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 _BINSEG_SQL = """
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day, SUM(CAST(value AS DECIMAL(18,2))) AS v
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {events} GROUP BY CAST(ts AS DATE)
 ), seq AS (
     SELECT day, CAST(v * 100 AS BIGINT) AS cents,
            CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS i,
@@ -315,7 +310,7 @@ FROM best WHERE rk = 1
 """
 
 
-@query("events_changepoint_binseg", oracle=_BINSEG_SQL)
+@query("events_changepoint_binseg", oracle=bare_tables(_BINSEG_SQL))
 def events_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-segmentation changepoint: the single split of the daily
     value series that maximizes the between-segment sum-of-squares gain
@@ -334,8 +329,7 @@ def events_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window is calendar-bounded — the documented
     exception the other daily-series operators share).  Recursive
     binseg = re-apply per segment; k changepoints cost k passes."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BINSEG_SQL)
+    return spark.sql(_BINSEG_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 MAD_K_X10000 = 44478  # 3 * 1.4826 (normal-consistency constant), scaled 1e4
@@ -347,7 +341,7 @@ def _mad_sql(median_expr: str, mad_median_expr: str) -> str:
 WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY event_type, CAST(ts AS DATE)
+    FROM {{events}} GROUP BY event_type, CAST(ts AS DATE)
 ), med AS (
     SELECT event_type, {median_expr} AS med_cents
     FROM daily GROUP BY event_type
@@ -377,7 +371,7 @@ _MAD_SPARK = _mad_sql(
 )
 
 
-@query("events_mad_outlier_days", oracle=_MAD_ORACLE)
+@query("events_mad_outlier_days", oracle=bare_tables(_MAD_ORACLE))
 def events_mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust daily-anomaly detection by median absolute deviation: a
     day is anomalous when |value − median| > 3·1.4826·MAD — the
@@ -395,8 +389,7 @@ def events_mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized groupBy to the (type, day) frame; everything
     after runs on calendar-bounded rows with two per-type median
     aggregations and type-keyed joins (types-sized, broadcast)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_MAD_SPARK)
+    return spark.sql(_MAD_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 ROLLMED_W = 7  # trailing window width in days
@@ -409,7 +402,7 @@ def _rollmed_sql(median_expr: str, unnest_expr: str) -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), offs AS (
     SELECT day, cents, {unnest_expr} AS off FROM daily
 ), contrib AS (
@@ -436,7 +429,7 @@ _ROLLMED_SPARK = _rollmed_sql(
 )
 
 
-@query("window_rolling_median_7d", oracle=_ROLLMED_ORACLE)
+@query("window_rolling_median_7d", oracle=bare_tables(_ROLLMED_ORACLE))
 def window_rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-CALENDAR-day rolling exact median of the global daily
     value series.  Deliberately DISTINCT from window_rolling_median
@@ -461,8 +454,7 @@ def window_rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one fact-sized daily reduction.  A wider window at fact scale
     switches to the same pre-binned grouped-median the KS family
     documents."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ROLLMED_SPARK)
+    return spark.sql(_ROLLMED_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 def _decomp_sql(trend_median: str, seas_median: str, unnest_expr: str) -> str:
@@ -472,7 +464,7 @@ def _decomp_sql(trend_median: str, seas_median: str, unnest_expr: str) -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), offs AS (
     SELECT day, cents, {unnest_expr} AS off FROM daily
 ), contrib AS (
@@ -513,7 +505,7 @@ _DECOMP_SPARK = _decomp_sql(
 )
 
 
-@query("events_decompose_additive", oracle=_DECOMP_ORACLE)
+@query("events_decompose_additive", oracle=bare_tables(_DECOMP_ORACLE))
 def events_decompose_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust additive time-series decomposition (the STL idea in its
     median-based form): value = trend + seasonal + residual, where
@@ -533,8 +525,7 @@ def events_decompose_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized daily reduction; trend/seasonal/residual all
     run on calendar-sized frames via equi-joins and grouped discrete
     picks — no window state, no single-partition sort."""
-    register_views(spark, sf_dir)
-    return spark.sql(_DECOMP_SPARK)
+    return spark.sql(_DECOMP_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 BACKTEST_LAG_DAYS = 7  # seasonal-naive horizon: forecast(d) = value(d-7)
@@ -547,7 +538,7 @@ def _backtest_sql(idiv: str) -> str:
 WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY event_type, CAST(ts AS DATE)
+    FROM {{events}} GROUP BY event_type, CAST(ts AS DATE)
 ), paired AS (
     SELECT a.event_type, a.day, a.cents,
            f.cents AS forecast_cents
@@ -573,7 +564,7 @@ _BACKTEST_SPARK = _backtest_sql("DIV")
 
 
 
-@query("events_seasonal_naive_backtest", oracle=_BACKTEST_ORACLE)
+@query("events_seasonal_naive_backtest", oracle=bare_tables(_BACKTEST_ORACLE))
 def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast BACKTESTING — the evaluation half of any forecasting
     pipeline, run against the seasonal-naive baseline forecast(d) =
@@ -592,8 +583,7 @@ def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: the self-join is calendar-keyed on the |days|-sized daily
     frame — an equi-join on (type, day), no window state; the daily
     reduction is the only fact-sized stage."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BACKTEST_SPARK)
+    return spark.sql(_BACKTEST_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 def _burstiness_sql(epoch_us: str) -> str:
@@ -605,7 +595,7 @@ WITH gaps AS (
            CAST({epoch_us}(ts) - LAG({epoch_us}(ts)) OVER (
                PARTITION BY event_type ORDER BY ts, event_id) AS BIGINT)
                AS gap_us
-    FROM events
+    FROM {{events}}
 ), g AS (
     SELECT event_type, gap_us FROM gaps WHERE gap_us IS NOT NULL
 ), sums AS (
@@ -629,7 +619,7 @@ _BURSTINESS_ORACLE = _burstiness_sql("epoch_us")
 _BURSTINESS_SPARK = _burstiness_sql("unix_micros")
 
 
-@query("events_interarrival_burstiness", oracle=_BURSTINESS_ORACLE)
+@query("events_interarrival_burstiness", oracle=bare_tables(_BURSTINESS_ORACLE))
 def events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-arrival burstiness B = (σ−μ)/(σ+μ) per event stream — the
     Goh-Barabási coefficient that classifies arrival processes in one
@@ -646,8 +636,7 @@ def events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: one type-partitioned ordered window (the same shuffle the
     sessionization family uses) reducing to 3 numbers per stream;
     partial aggregation carries the decimal sums map-side."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BURSTINESS_SPARK)
+    return spark.sql(_BURSTINESS_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 def _simpson_sql(idiv: str) -> str:
@@ -656,7 +645,7 @@ def _simpson_sql(idiv: str) -> str:
     return f"""
 WITH counts AS (
     SELECT CAST(ts AS DATE) AS day, event_type, CAST(COUNT(*) AS BIGINT) AS n
-    FROM events GROUP BY CAST(ts AS DATE), event_type
+    FROM {{events}} GROUP BY CAST(ts AS DATE), event_type
 ), per_day AS (
     SELECT day,
            CAST(SUM(n) AS BIGINT) AS n_events,
@@ -676,7 +665,7 @@ _SIMPSON_ORACLE = _simpson_sql("//")
 _SIMPSON_SPARK = _simpson_sql("DIV")
 
 
-@query("events_diversity_simpson", oracle=_SIMPSON_ORACLE)
+@query("events_diversity_simpson", oracle=bare_tables(_SIMPSON_ORACLE))
 def events_diversity_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily Gini-Simpson diversity of the event-type mix — the
     probability (ppm) that two events drawn WITHOUT replacement from a
@@ -693,8 +682,7 @@ def events_diversity_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: (day, type) reduction then a day-level fold — both map-side
     combined, output bounded by the calendar."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SIMPSON_SPARK)
+    return spark.sql(_SIMPSON_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 HOLT_ALPHA_E3 = 300  # level smoothing, thousandths
@@ -755,7 +743,7 @@ def _holt_fold_chain() -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS v
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), packed AS (
     SELECT array_sort(collect_list(named_struct('day', day, 'v', v))) AS series
     FROM daily
@@ -820,8 +808,7 @@ def events_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     = |days| (calendar-bounded, under Spark's 100-level CTE default for
     any quarter; raise spark.sql.cteRecursionLevelLimit for multi-year
     spans — or window-chunk the recurrence)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_HOLT_SPARK)
+    return spark.sql(_HOLT_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 def _bot_sql(epoch_us: str, idiv: str) -> str:
@@ -833,7 +820,7 @@ WITH gaps AS (
     SELECT user_id,
            CAST({epoch_us}(ts) - LAG({epoch_us}(ts)) OVER (
                PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS gap_us
-    FROM events
+    FROM {{events}}
 ), gap_counts AS (
     SELECT user_id, gap_us, CAST(COUNT(*) AS BIGINT) AS cnt
     FROM gaps WHERE gap_us IS NOT NULL GROUP BY user_id, gap_us
@@ -848,7 +835,7 @@ WITH gaps AS (
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS active_days,
            CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types
-    FROM events GROUP BY user_id
+    FROM {{events}} GROUP BY user_id
 )
 SELECT u.user_id, u.n_events, u.active_days, u.n_types,
        COALESCE(m.n_gaps, 0) AS n_gaps,
@@ -872,7 +859,7 @@ _BOT_ORACLE = _bot_sql("epoch_us", "//")
 _BOT_SPARK = _bot_sql("unix_micros", "DIV")
 
 
-@query("events_bot_score_gate", oracle=_BOT_ORACLE)
+@query("events_bot_score_gate", oracle=bare_tables(_BOT_ORACLE))
 def events_bot_score_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite bot/automation gate per user — the traffic-hygiene
     filter a training-data pipeline runs BEFORE any behavioral
@@ -897,8 +884,7 @@ def events_bot_score_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two shuffles on user_id (window + groupBy, AQE-coalesced),
     modal pick is a per-user-partition window on the |user x distinct
     gap| table; output is |users| rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BOT_SPARK)
+    return spark.sql(_BOT_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 def _residual_gate_sql(trend_median: str, seas_median: str, unnest_expr: str) -> str:
@@ -949,7 +935,7 @@ _RESID_GATE_SPARK = _residual_gate_sql(
 )
 
 
-@query("events_residual_anomaly_gate", oracle=_RESID_GATE_ORACLE)
+@query("events_residual_anomaly_gate", oracle=bare_tables(_RESID_GATE_ORACLE))
 def events_residual_anomaly_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anomaly gate on the DECOMPOSED residual channel — the composition
     the raw-value gates can't replace: events_mad_outlier_days flags
@@ -972,8 +958,7 @@ def events_residual_anomaly_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything after the daily reduction runs on calendar-
     bounded rows; the explode-to-anchors trend stage is the documented
     {ROLLMED_W}x calendar fanout."""
-    register_views(spark, sf_dir)
-    return spark.sql(_RESID_GATE_SPARK)
+    return spark.sql(_RESID_GATE_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 def _model_selection_tail(day_minus_7: str) -> str:
@@ -1032,8 +1017,7 @@ def events_forecast_model_selection(spark: SparkSession, sf_dir: str) -> DataFra
     recurrence in one stage (see _holt_chain's measured note), the
     rest is calendar-bounded (one self-join on the daily table,
     2-row output)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_MODEL_SEL_SPARK)
+    return spark.sql(_MODEL_SEL_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # Rolling 14-observation OLS slope; identical WINDOW-clause text both
@@ -1043,7 +1027,7 @@ _ROLLING_SLOPE_SQL = """
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS y
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {events} GROUP BY CAST(ts AS DATE)
 ), idx AS (
     SELECT day, y, CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS x
     FROM daily
@@ -1064,7 +1048,7 @@ FROM sums WHERE n = 14
 """
 
 
-@query("window_rolling_slope_14d", oracle=_ROLLING_SLOPE_SQL)
+@query("window_rolling_slope_14d", oracle=bare_tables(_ROLLING_SLOPE_SQL))
 def window_rolling_slope_14d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 14-observation OLS slope of the daily revenue series —
     the LOCAL trend readout the global fits can't give: events_trend_slope
@@ -1083,8 +1067,7 @@ def window_rolling_slope_14d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one daily reduction, one ordered window — the single-
     partition pinch is calendar-bounded, the standard fix (range-
     partition by coarse time, overlap by 13 rows) documented."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ROLLING_SLOPE_SQL)
+    return spark.sql(_ROLLING_SLOPE_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # Strict local maxima over a +-3-day ROWS frame, exact integer margins.
@@ -1092,7 +1075,7 @@ _LOCAL_PEAKS_SQL = """
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS v
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {events} GROUP BY CAST(ts AS DATE)
 ), framed AS (
     SELECT day, v,
            CAST(MAX(v) OVER (ORDER BY day
@@ -1111,7 +1094,7 @@ WHERE n_frame = 7 AND v > left_max AND v > right_max
 """
 
 
-@query("events_local_peaks", oracle=_LOCAL_PEAKS_SQL)
+@query("events_local_peaks", oracle=bare_tables(_LOCAL_PEAKS_SQL))
 def events_local_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict local peaks of the daily revenue series — days greater
     than EVERY neighbor within +-3 rows, with exact integer margins to
@@ -1126,8 +1109,7 @@ def events_local_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated window — the warm-up discipline of the rolling family.
 
     Scale: one daily reduction + one calendar-bounded ordered window."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LOCAL_PEAKS_SQL)
+    return spark.sql(_LOCAL_PEAKS_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 SLO_BUDGET_PPM = 10_000  # 1% error budget
@@ -1144,7 +1126,7 @@ WITH hourly AS (
            CAST(COUNT(*) AS BIGINT) AS total,
            CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                 AS BIGINT) AS errors
-    FROM events GROUP BY CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP)
+    FROM {{events}} GROUP BY CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP)
 ), windows AS (
     SELECT hour, total, errors,
            CAST(SUM(total) OVER w6 AS BIGINT) AS total_6h,
@@ -1175,7 +1157,7 @@ _BURN_ORACLE = _burn_rate_sql("//")
 _BURN_SPARK = _burn_rate_sql("DIV")
 
 
-@query("events_slo_burn_rate", oracle=_BURN_ORACLE)
+@query("events_slo_burn_rate", oracle=bare_tables(_BURN_ORACLE))
 def events_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-window error-budget burn rate — the SRE-workbook alerting
     policy, verbatim: burn = error_rate / SLO_budget (1% here) over a
@@ -1195,8 +1177,7 @@ def events_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one hourly reduction (map-side combined), one
     calendar-bounded ordered window."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BURN_SPARK)
+    return spark.sql(_BURN_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 XCORR_MAX_LAG = 7  # days of lead tested: does today's view volume predict purchases L days out?
@@ -1299,7 +1280,7 @@ def _lttb_sql(idiv: str) -> str:
     return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS y
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), indexed AS (
     SELECT day, y,
            CAST(day - DATE '1970-01-01' AS BIGINT) AS xd,
@@ -1340,7 +1321,7 @@ _LTTB_ORACLE = _lttb_sql("//")
 _LTTB_SPARK = _lttb_sql("DIV")
 
 
-@query("events_lttb_downsample", oracle=_LTTB_ORACLE)
+@query("events_lttb_downsample", oracle=bare_tables(_LTTB_ORACLE))
 def events_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Largest-Triangle-Three-Buckets downsampling of the daily event
     series to {LTTB_BUCKETS} points — the standard charting reduction
@@ -1369,8 +1350,7 @@ def events_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, bucket agg, neighbor equi-joins, per-bucket argmax) runs on
     the calendar-sized series.  The single-partition ROW_NUMBER is over
     |days| rows — the rolling family's documented bound."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LTTB_SPARK)
+    return spark.sql(_LTTB_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 CROSTON_ALPHA_E3 = 200  # smoothing for both demand size and interval, thousandths
@@ -1385,12 +1365,12 @@ def _croston_grid(day_gen: str) -> str:
     return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS v
-    FROM events
+    FROM {{events}}
     WHERE event_type = 'error' AND value > {CROSTON_VALUE_MIN}
     GROUP BY CAST(ts AS DATE)
 ), bounds AS (
     SELECT MIN(CAST(ts AS DATE)) AS dmin, MAX(CAST(ts AS DATE)) AS dmax
-    FROM events
+    FROM {{events}}
 ), grid AS (
     SELECT {day_gen} AS day FROM bounds
 ), idx AS (
@@ -1480,7 +1460,7 @@ def _croston_spark() -> str:
     )
 
 
-@query("events_croston_intermittent", oracle=_croston_oracle())
+@query("events_croston_intermittent", oracle=bare_tables(_croston_oracle()))
 def events_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Croston's method for INTERMITTENT demand — the standard forecaster
     when most periods are zero (spare parts, rare-error budgeting, tail
@@ -1503,8 +1483,7 @@ def events_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: daily reduction (fact-sized) → calendar-sized fold; at
     100 TB the fold input is |days| rows regardless of event volume,
     same bound as the Holt family."""
-    register_views(spark, sf_dir)
-    return spark.sql(_croston_spark())
+    return spark.sql(_croston_spark(), events=load_table(spark, sf_dir, "events"))
 
 
 XMR_SIGMA_E3 = 2660  # 2.66 = 3/d2(n=2), the individuals-chart constant, thousandths
@@ -1517,7 +1496,7 @@ def _xmr_sql() -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(COUNT(*) AS BIGINT) AS x
-    FROM events WHERE event_type = 'error'
+    FROM {{events}} WHERE event_type = 'error'
     GROUP BY CAST(ts AS DATE)
 ), mr AS (
     SELECT day, x,
@@ -1541,7 +1520,7 @@ FROM mr CROSS JOIN center
 """
 
 
-@query("events_xmr_control_chart", oracle=_xmr_sql())
+@query("events_xmr_control_chart", oracle=bare_tables(_xmr_sql()))
 def events_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XmR (individuals & moving-range) control chart over the daily
     error count — the Shewhart SPC chart for metrics with ONE
@@ -1564,8 +1543,7 @@ def events_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: daily reduction (fact-sized, map-side combined) → one
     calendar-sized lag window → a single-row center-line broadcast.
     The cross join is 1×|days| — the q11 scalar pattern."""
-    register_views(spark, sf_dir)
-    return spark.sql(_xmr_sql())
+    return spark.sql(_xmr_sql(), events=load_table(spark, sf_dir, "events"))
 
 
 def _strength_sql(inner: str) -> str:
@@ -1597,7 +1575,7 @@ FROM (
 """
 
 
-@query("events_seasonal_strength", oracle=_strength_sql(_DECOMP_ORACLE))
+@query("events_seasonal_strength", oracle=bare_tables(_strength_sql(_DECOMP_ORACLE)))
 def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal and trend STRENGTH of the daily revenue series — the
     Hyndman feature pair (F_s = max(0, 1 − Var(R)/Var(S+R)), F_t with
@@ -1616,8 +1594,10 @@ def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: inherits the decomposition's plan (one fact-sized daily
     reduction, calendar-sized joins); the strength tail is a single
     fold over |days| rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_strength_sql(_DECOMP_SPARK))
+    return spark.sql(
+        _strength_sql(_DECOMP_SPARK),
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 HW_ALPHA_E3 = 300  # level smoothing, thousandths
@@ -1693,7 +1673,7 @@ def _hw_spark() -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS v
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), packed AS (
     SELECT array_sort(collect_list(named_struct('day', day, 'v', v))) AS series
     FROM daily
@@ -1772,8 +1752,7 @@ def events_holt_winters_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     is |days| rows — calendar-bounded at any event volume, one stage,
     no recursion-level scheduling overhead (the measured Holt
     motivation: 19.5 s recursive vs 1.9 s fold at sf0.1)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_hw_spark())
+    return spark.sql(_hw_spark(), events=load_table(spark, sf_dir, "events"))
 
 
 def _residual_diag_sql(inner: str) -> str:
@@ -1815,7 +1794,10 @@ FROM sums
 """
 
 
-@query("stat_residual_diagnostics", oracle=_residual_diag_sql(_DECOMP_ORACLE))
+@query(
+    "stat_residual_diagnostics",
+    oracle=bare_tables(_residual_diag_sql(_DECOMP_ORACLE)),
+)
 def stat_residual_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual WHITENESS diagnostics for the additive decomposition —
     the model-adequacy check that closes the forecasting loop: if the
@@ -1840,8 +1822,10 @@ def stat_residual_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: inherits the decomposition's calendar-bounded plan; the
     diagnostics tail is one lag window + one fold over |days| rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_residual_diag_sql(_DECOMP_SPARK))
+    return spark.sql(
+        _residual_diag_sql(_DECOMP_SPARK),
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 BOLLINGER_W = 7  # trailing window (days); bands at ±2 sample std
@@ -1851,7 +1835,7 @@ _BOLLINGER_SQL = f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), win AS (
     SELECT day, cents,
            CAST(COUNT(*) OVER w AS BIGINT) AS n,
@@ -1876,7 +1860,7 @@ FROM bands
 """
 
 
-@query("events_bollinger_bands", oracle=_BOLLINGER_SQL)
+@query("events_bollinger_bands", oracle=bare_tables(_BOLLINGER_SQL))
 def events_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger bands over daily revenue: trailing-{BOLLINGER_W}-day
     mean ± 2 sample standard deviations, with a ternary breakout flag —
@@ -1895,8 +1879,7 @@ def events_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact-sized daily reduction, one calendar-bounded ordered
     window — the SLO-burn-rate plan with different math."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BOLLINGER_SQL)
+    return spark.sql(_BOLLINGER_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -1909,7 +1892,7 @@ _CAPABILITY_SQL = """
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {events} GROUP BY CAST(ts AS DATE)
 ), seq AS (
     SELECT cents,
            CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS rn,
@@ -1941,7 +1924,7 @@ FROM stats
 """
 
 
-@query("stat_process_capability", oracle=_CAPABILITY_SQL)
+@query("stat_process_capability", oracle=bare_tables(_CAPABILITY_SQL))
 def stat_process_capability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Process-capability indices Cp/Cpk for the daily event-value
     stream against a QUALIFIED baseline band — the acceptance twin of
@@ -1963,8 +1946,7 @@ def stat_process_capability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized daily groupBy; the lag window runs on the
     calendar-bounded daily table; a single 1-row fold ends the plan —
     no join anywhere."""
-    register_views(spark, sf_dir)
-    return spark.sql(_CAPABILITY_SQL)
+    return spark.sql(_CAPABILITY_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -1998,7 +1980,7 @@ def _hurst_sql(idiv: str) -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS y
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), seq AS (
     SELECT y,
            CAST(ROW_NUMBER() OVER (ORDER BY d) - 1 AS BIGINT) AS i,
@@ -2046,7 +2028,7 @@ _HURST_ORACLE = _hurst_sql("//")
 _HURST_SPARK = _hurst_sql("DIV")
 
 
-@query("events_hurst_exponent", oracle=_HURST_ORACLE)
+@query("events_hurst_exponent", oracle=bare_tables(_HURST_ORACLE))
 def events_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hurst exponent of the daily event-value series by classical
     rescaled-range (R/S) analysis: split the series into blocks of
@@ -2070,8 +2052,7 @@ def events_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized daily reduction; every window is partitioned
     by block id over the calendar-bounded day table; output is 3 rows.
     No join anywhere."""
-    register_views(spark, sf_dir)
-    return spark.sql(_HURST_SPARK)
+    return spark.sql(_HURST_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -2098,7 +2079,9 @@ def _trend_panel_oracle() -> str:
         _RUNS_ORACLE,
     )
 
-    return _trend_panel_sql(_MK_ORACLE, _RUNS_ORACLE, _DW_SQL, _CAPABILITY_SQL)
+    return bare_tables(
+        _trend_panel_sql(_MK_ORACLE, _RUNS_ORACLE, _DW_SQL, _CAPABILITY_SQL)
+    )
 
 
 @query("pipeline_trend_monitoring_e2e", oracle=_trend_panel_oracle)
@@ -2128,9 +2111,9 @@ def pipeline_trend_monitoring_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
         _RUNS_SPARK,
     )
 
-    register_views(spark, sf_dir)
     return spark.sql(
-        _trend_panel_sql(_MK_SPARK, _RUNS_SPARK, _DW_SQL, _CAPABILITY_SQL)
+        _trend_panel_sql(_MK_SPARK, _RUNS_SPARK, _DW_SQL, _CAPABILITY_SQL),
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -2142,7 +2125,7 @@ _DRAWDOWN_SQL = """
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {events} GROUP BY CAST(ts AS DATE)
 ), base AS (
     SELECT d, cents,
            CAST(SUM(cents) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED
@@ -2179,7 +2162,7 @@ SELECT (SELECT MAX(d) FROM eq
 """
 
 
-@query("events_drawdown_recovery", oracle=_DRAWDOWN_SQL)
+@query("events_drawdown_recovery", oracle=bare_tables(_DRAWDOWN_SQL))
 def events_drawdown_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANATOMY of the worst slump in the daily event-value series —
     peak day, trough day, recovery day, and depth — on the cumulative
@@ -2200,8 +2183,7 @@ def events_drawdown_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-sized daily reduction; every window and every
     scalar subquery runs over the calendar-bounded day table
     (guard-clean — the stat_runs_test_daily idiom)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_DRAWDOWN_SQL)
+    return spark.sql(_DRAWDOWN_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -2220,7 +2202,7 @@ def _page_hinkley_sql() -> str:
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-    FROM events GROUP BY CAST(ts AS DATE)
+    FROM {{events}} GROUP BY CAST(ts AS DATE)
 ), base AS (
     SELECT d,
            CAST(SUM(cents) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED
@@ -2250,7 +2232,7 @@ FROM ph
 """
 
 
-@query("events_page_hinkley_drift", oracle=_page_hinkley_sql())
+@query("events_page_hinkley_drift", oracle=bare_tables(_page_hinkley_sql()))
 def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-Hinkley drift alarm on the daily event-value series — the
     monitoring-time complement of events_cusum_changepoint: CUSUM's
@@ -2278,8 +2260,7 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact-sized daily reduction, three ordered windows over
     the calendar-bounded day table, a 1-row fold.  No join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_page_hinkley_sql())
+    return spark.sql(_page_hinkley_sql(), events=load_table(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -2298,7 +2279,7 @@ def _adstock_sql(x_expr: str, unnest14: str) -> str:
 WITH daily AS (
     SELECT CAST({x_expr} AS BIGINT) AS di,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS x
-    FROM events GROUP BY CAST({x_expr} AS BIGINT)
+    FROM {{events}} GROUP BY CAST({x_expr} AS BIGINT)
 ), weights AS (
 {_ADSTOCK_WEIGHTS}
 ), fanned AS (
@@ -2329,7 +2310,7 @@ _ADSTOCK_ORACLE = _ADSTOCK_ORACLE.replace("x * 1000 / w.pw", "x * 1000 // w.pw")
 _ADSTOCK_SPARK = _ADSTOCK_SPARK.replace("x * 1000 / w.pw", "x * 1000 DIV w.pw")
 
 
-@query("events_adstock_transform", oracle=_ADSTOCK_ORACLE)
+@query("events_adstock_transform", oracle=bare_tables(_ADSTOCK_ORACLE))
 def events_adstock_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geometric ADSTOCK (advertising carryover, lambda = 1/2, truncated
     at {ADSTOCK_LAGS} lags): adstock_t = sum over k of spend_(t-k)/2^k —
@@ -2352,5 +2333,4 @@ def events_adstock_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     day spine (never a window, never per-row recursion), map-side
     combinable.  Horizon-edge days simply receive fewer contributions —
     the truncated-adstock convention."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ADSTOCK_SPARK)
+    return spark.sql(_ADSTOCK_SPARK, events=load_table(spark, sf_dir, "events"))

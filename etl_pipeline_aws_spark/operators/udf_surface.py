@@ -149,10 +149,10 @@ def udtf_split_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("split_props", SplitProps)
     events = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 200)
-    events.select("event_id", "props").createOrReplaceTempView("events_small")
     return spark.sql(
         "SELECT event_id, pos, key_name, val "
-        "FROM events_small, LATERAL split_props(props)"
+        "FROM {events_small}, LATERAL split_props(props)",
+        events_small=events.select("event_id", "props"),
     )
 
 
@@ -404,8 +404,8 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("first_tokens", udtf(FirstTokens))
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    docs.select("doc_id", "text").createOrReplaceTempView("docs_small_udtf")
     return spark.sql(
         f"SELECT doc_id, tok0, tok1, tok2 "
-        f"FROM docs_small_udtf, LATERAL first_tokens(text, {UDTF_FIRST_N})"
+        f"FROM {{docs_small}}, LATERAL first_tokens(text, {UDTF_FIRST_N})",
+        docs_small=docs.select("doc_id", "text"),
     )

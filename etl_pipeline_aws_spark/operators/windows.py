@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from etl_pipeline_aws_spark.catalog import load_table
+from etl_pipeline_aws_spark.catalog import bare_tables, load_table
 from etl_pipeline_aws_spark.functions.numeric import dec
 from etl_pipeline_aws_spark.registry import query
 
@@ -261,18 +261,17 @@ def window_time_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     slides, so memory tracks the densest hour, not the partition.  SQL
     form because the interval-literal frame bound is the declaration
     Catalyst plans natively."""
-    ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_ev_range")
-    return ev.sparkSession.sql(
+    return spark.sql(
         """
         SELECT event_id, event_type, ts,
                COUNT(*) OVER w AS n_last_hour,
                CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
                    AS sum_last_hour
-        FROM _ev_range
+        FROM {events}
         WINDOW w AS (PARTITION BY event_type ORDER BY ts
                      RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -490,7 +489,7 @@ _RANGE_INTERVAL_SQL = """
 WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS day,
            SUM(CAST(value AS DECIMAL(18,2))) AS v
-    FROM events GROUP BY event_type, CAST(ts AS DATE)
+    FROM {events} GROUP BY event_type, CAST(ts AS DATE)
 )
 SELECT event_type, day,
        CAST(COUNT(*) OVER w AS BIGINT) AS n_days_in_window,
@@ -501,7 +500,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day
 """
 
 
-@query("window_range_interval_frame", oracle=_RANGE_INTERVAL_SQL)
+@query("window_range_interval_frame", oracle=bare_tables(_RANGE_INTERVAL_SQL))
 def window_range_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native RANGE-BETWEEN-INTERVAL window frame — the calendar-aware
     frame the ROWS family cannot express in one clause: the trailing
@@ -528,7 +527,4 @@ def window_range_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-sized input partitioned on the series key; Spark's range
     frame is a sliding aggregate over the sorted partition, state
     bounded by the interval span."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_RANGE_INTERVAL_SQL)
+    return spark.sql(_RANGE_INTERVAL_SQL, events=load_table(spark, sf_dir, "events"))

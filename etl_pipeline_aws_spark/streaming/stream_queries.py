@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_pipeline_aws_spark.catalog import load_table, normalize_events_ts, table_path
+from etl_pipeline_aws_spark.catalog import (
+    bare_tables,
+    load_table,
+    normalize_events_ts,
+    table_path,
+)
 from etl_pipeline_aws_spark.functions.numeric import dsum
 from etl_pipeline_aws_spark.operators.events import (
     SESSION_ORACLE,
@@ -1793,7 +1798,7 @@ def stream_dsir_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _scorecard_stream_oracle() -> str:
     from etl_pipeline_aws_spark.llm.curation import _SCORECARD_ORACLE
 
-    return _SCORECARD_ORACLE
+    return bare_tables(_SCORECARD_ORACLE)
 
 
 @query("stream_source_scorecard", oracle=_scorecard_stream_oracle)
@@ -2125,8 +2130,7 @@ def stream_psi_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("c2"),
     )
-    pivoted.createOrReplaceTempView("_stream_psi_counts")
-    return spark.sql(_psi_closing("_stream_psi_counts"))
+    return spark.sql(_psi_closing("{counts}"), counts=pivoted)
 
 
 def _stream_cms_oracle() -> str:

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_aws_spark.catalog import load_table, normalize_events_ts
+from tests.conftest import SF_DIR, SF_SMALL
 
 
 def test_normalize_events_ts_all_three_physical_shapes(spark):
@@ -82,36 +83,107 @@ def test_schema_cache_returns_same_data_and_schema(spark):
     assert table_path(sf, "nation") in _SCHEMA_CACHE
 
 
-def test_register_views_idempotent_and_sf_switch_reregisters(spark):
-    """r11: register_views skips the ~0.5 s re-registration when the same
-    sf_dir is already current, and MUST re-register when it changes —
-    a multi-SF sweep reading stale views would silently compare the wrong
-    scale factor."""
-    from etl_pipeline_aws_spark.catalog import register_views
-
-    register_views(spark, "/root/testdata/sf0.001")
-    n_small = spark.table("nation").count()
-    c_small = spark.table("customer").count()
-    register_views(spark, "/root/testdata/sf0.01")
-    c_big = spark.table("customer").count()
-    assert c_big > c_small  # views really switched
-    register_views(spark, "/root/testdata/sf0.01")  # no-op path
-    assert spark.table("customer").count() == c_big
-    register_views(spark, "/root/testdata/sf0.001")
-    assert spark.table("nation").count() == n_small
+# Migrated queries of each input-binding shape: canonical tables only,
+# a shared pipe-syntax text, derived frames bound beside a table, and
+# the char-trigram consumer whose input is a spread documents frame.
+INTERLEAVED = (
+    "agg_grouping_sets",
+    "sql_pipe_multi_stage",
+    "parts_kraljic_matrix",
+    "text_lang_id_char_ngram",
+)
 
 
-def test_interleaved_direct_registration_does_not_go_stale(spark):
-    """r12 (verdict item 2): a query that registers canonical views from its
-    OWN sf_dir (agg_grouping_sets does) must not leave a later
-    register_views(original_sf) call believing its views are still current.
-    Sequence sfA -> query(sfB) -> register_views(sfA) must read sfA data."""
-    from etl_pipeline_aws_spark.catalog import register_views
-    from etl_pipeline_aws_spark.operators.aggregates import agg_grouping_sets
+def test_interleaved_scale_factors_bind_their_own_inputs(spark):
+    """SQL inputs are bound per call (``spark.sql(text, orders=...)``):
+    queries built interleaved sf0.001 -> sf0.01 -> sf0.001 each return
+    their first result at that scale factor, with no view bookkeeping,
+    and leave no canonical-table or ``_pyspark_*`` view in the session
+    catalog.  Under the old session-global views a build at one scale
+    factor could re-point a view another query then read."""
+    import etl_pipeline_aws_spark as engine
+    from etl_pipeline_aws_spark.catalog import TABLES
 
-    sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    register_views(spark, sf_a)
-    li_a = spark.table("lineitem").count()
-    agg_grouping_sets(spark, sf_b).collect()  # re-points canonical views at sfB
-    register_views(spark, sf_a)  # must NOT be skipped
-    assert spark.table("lineitem").count() == li_a
+    qs = engine.all_queries()
+    first: dict[tuple[str, str], list] = {}
+    for sf in (SF_SMALL, SF_DIR, SF_SMALL):
+        for name in INTERLEAVED:
+            rows = sorted(qs[name](spark, sf).collect(), key=repr)
+            assert rows == first.setdefault((name, sf), rows), (name, sf)
+            engine.clear_caches(spark)
+    assert first[("agg_grouping_sets", SF_SMALL)] != first[("agg_grouping_sets", SF_DIR)]
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert not views & set(TABLES), views
+    assert not [v for v in views if v.startswith("_pyspark_")], views
+
+
+def test_bound_cached_frames_are_read_from_the_cache(spark):
+    """spark.sql drops its per-call views on return, and dropping a view
+    uncaches every cache entry whose plan matches the view's.  Builders
+    that bind a persisted frame therefore bind it through a no-op
+    filter, and their plan still reads the frame from the cache."""
+    import etl_pipeline_aws_spark as engine
+
+    qs = engine.all_queries()
+    for name in ("orders_abc_xyz_classification", "parts_kraljic_matrix"):
+        plan = qs[name](spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
+        engine.clear_caches(spark)
+        assert "InMemoryRelation [pk#" in plan, name
+
+
+# The only engine sites that may name a session temp view, each because
+# the named view is the feature: IDENTIFIER() binds a table by name, and
+# a SQL table function's body names its table, resolved at call time.
+# ``catalog.register_views`` survives only for the benchmark's traced
+# mode (perfbench/layertrace.install_wrappers wraps it by name).
+NAMED_VIEW_ALLOWLIST = {
+    ("catalog.py", "register_views"),
+    ("operators/sql_features.py", "sql_identifier_binding"),
+    ("operators/sql_features.py", "sql_table_udf"),
+}
+
+
+def _named_view_sites():
+    """(module path, innermost enclosing function, called name) of every
+    call to ``createOrReplaceTempView`` or ``register_views`` in the
+    package, and of every ``spark.table`` read of a canonical table."""
+    import ast
+    import pathlib
+
+    from etl_pipeline_aws_spark.catalog import TABLES
+
+    class Sites(ast.NodeVisitor):
+        fn = "<module>"
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            f = node.func
+            called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            canonical = (
+                called == "table" and node.args and getattr(node.args[0], "value", None) in TABLES
+            )
+            if called in ("createOrReplaceTempView", "register_views") or canonical:
+                found.append((rel, self.fn, called))
+            self.generic_visit(node)
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "etl_pipeline_aws_spark"
+    found: list[tuple[str, str, str]] = []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        Sites().visit(ast.parse(path.read_text(encoding="utf-8")))
+    return found
+
+
+def test_named_temp_views_only_at_allowlisted_sites():
+    """No engine query hands tables to SQL through a named session view
+    or reads a canonical table by view name: outside the allowlist, SQL
+    inputs are bound per call."""
+    import etl_pipeline_aws_spark.catalog as catalog
+
+    sites = set(_named_view_sites())
+    assert {(path, fn) for path, fn, _ in sites} == NAMED_VIEW_ALLOWLIST, sites
+    assert not hasattr(catalog, "_VIEWS_KEY")

@@ -106,3 +106,27 @@ def test_each_round_runs_one_materialization_job_and_at_most_one_probe_job(spark
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_repeated_converging_loop_compiles_no_new_classes(spark):
+    """A converging loop's convergence probe is a one-row aggregate over
+    the flag, whose generated code the codegen cache reuses; a
+    ``limit(1)`` probe is new source on every run (Spark numbers each
+    limit's counter from a JVM-wide sequence), so a repeat of the same
+    loop compiled new classes every round.  AQE is off as in
+    tests/test_session.py: it may re-plan a join on a repeat."""
+    import etl_pipeline_aws_spark as engine
+    from tests.conftest import SF_SMALL
+    from tests.test_session import _compiles
+
+    cc = engine.all_queries()["graph_connected_components"]
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for _ in range(2):
+            before = _compiles(spark)
+            cc(spark, SF_SMALL).write.format("noop").mode("overwrite").save()
+            engine.clear_caches(spark)
+        assert _compiles(spark) - before == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
